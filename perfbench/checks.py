@@ -113,7 +113,7 @@ def seq_kernels_oracle(times, tokens, dim: int, rate: float) -> dict:
     }
 
 
-# -- asof_window ------------------------------------------------------------
+# -- as-of layer (timed in the extract_iat traced run) -------------------
 
 SNAP_EVERY = 20  # right side of the as-of join: every 20th event
 ROLL_ROWS = 17   # rolling window: current row and the 16 before it

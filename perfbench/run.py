@@ -4,9 +4,10 @@ Usage, from the root of the repository:
 
     python3 perfbench/run.py --workload extract_iat --seed 1 --seconds 10 --trace 0
 
-Workloads (see workloads.py): ``extract_iat``, ``seq_kernels``,
-``asof_window``. One driver process issues one op at a time (closed loop,
-one client) on ``local[<cores>]``; every run owns its own JVM.
+Workloads (see workloads.py): ``extract_iat`` and ``seq_kernels``; the
+metric names and units come from ``BENCHMARK.json``. One driver process
+issues one op at a time (closed loop, one client) on ``local[<cores>]``;
+every run owns its own JVM.
 
 A run
 
@@ -24,7 +25,7 @@ decomposition, and writes the spans to ``.perfbench_work/traces/``.
 Per-layer metrics come from spans around the engine calls, from the
 per-operator SQL metrics in Spark's status store (task time summed over
 tasks) and from the JVM's management beans; a layer the workload does not
-run reports 0.
+run reports 0. The as-of layer is measured in the extract_iat traced run.
 
 The benchmark's own tests: ``python -m pytest perfbench/tests -q``.
 
@@ -47,35 +48,23 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-# Untimed (but checked) ops between set-up and the timed window: op times
-# fall over the first few ops of a new JVM while the JIT compiles the
-# engine's hot paths. Corpus sizes and op counts are kept small because the
-# cold set-up dominates a run and 70 runs must fit in 3420 s.
-WARM_OPS = 2
+# Corpus size (sequences) and untimed (but checked) ops between set-up and
+# the timed window, per workload. Op times fall over the first ops of a new
+# JVM while the JIT compiles the engine's hot paths: extract_iat's op runs
+# many small queries and settles only after about seven ops (JIT compile
+# time per op fell from 34 s to 2 s over ten ops), seq_kernels' after about
+# four. The cold set-up dominates a run, and a full set of runs of both
+# workloads must fit a fixed time budget, which bounds the sizes.
+SIZES = {"extract_iat": 4_000, "seq_kernels": 64_000}
+WARM_OPS = {"extract_iat": 6, "seq_kernels": 3}
 MIN_OPS = 3
 TRACED_OPS = 2
-SIZES = {"extract_iat": 8_000, "seq_kernels": 32_000, "asof_window": 24_000}
 N_SAMPLES = 12
 
-END_TO_END = {"op_s": "s", "rows_per_s": "1/s", "setup_s": "s",
-              "ok_ratio": "ratio", "peak_rss_mb": "MiB"}
-PER_LAYER = {
-    "session.start_s": "s", "pyworker.start_s": "s",
-    "pipeline.extract_call_s": "s", "pipeline.write_s": "s",
-    "pipeline.sql_executions": "count", "pipeline.unaccounted_s": "s",
-    "sessionize.timeout_s": "s", "sessionize.subflows_s": "s",
-    "sessionize.subflows_py_s": "s", "sessionize.py_bytes_in": "bytes",
-    "sessionize.py_bytes_out": "bytes", "sessionize.shuffle_bytes": "bytes",
-    "sessionize.spill_bytes": "bytes", "pyworker.peak_rss_mb": "MiB",
-    "quantile.barrier_s": "s", "sequences.build_s": "s", "sequences.cache_mb": "MiB",
-    "kernels.native_s": "s", "kernels.samp_s": "s", "kernels.fft_s": "s",
-    "kernels.py_run_s": "s", "kernels.py_bytes_in": "bytes",
-    "kernels.py_bytes_out": "bytes",
-    "asof.join_s": "s", "asof.window_s": "s", "asof.sort_s": "s",
-    "asof.shuffle_bytes": "bytes", "asof.spill_bytes": "bytes",
-    "jvm.gc_s": "s", "jvm.heap_peak_mb": "MiB",
-    "trace.op_s": "s", "trace.overhead_s": "s",
-}
+with open(os.path.join(ROOT, "BENCHMARK.json")) as _f:
+    _BENCH = json.load(_f)
+END_TO_END = {m["name"]: m["unit"] for m in _BENCH["end_to_end"]}
+PER_LAYER = {m["name"]: m["unit"] for m in _BENCH["per_layer"]}
 
 
 def log(msg: str) -> None:
@@ -131,12 +120,19 @@ def timed_ops(wl, spark, ref, counter, seconds, n_warm, n_min) -> list[float]:
     return op_s
 
 
+def python_start_s(rows) -> float:
+    """Task time spent starting and initialising Python workers."""
+    from statusstore import metric_total
+
+    return (metric_total(rows, "time to start Python workers")
+            + metric_total(rows, "time to initialize Python workers"))
+
+
 def trace_metrics(wl, spark, ref, counter, tracer, store, warm_rows) -> dict:
     """Per-layer metrics: TRACED_OPS traced ops alternating with untraced
     ones, then the workload's own decomposition. A layer the workload does
     not run reports 0."""
     import engine
-    from statusstore import metric_total
 
     traced = []
     untraced = timed_ops(wl, spark, ref, counter, 0, 0, 1)
@@ -149,12 +145,14 @@ def trace_metrics(wl, spark, ref, counter, tracer, store, warm_rows) -> dict:
             raw = wl.op(tracer)
         gc1 = engine.gc_seconds(spark)
         ids = store.since(last)
+        rows = store.rows(ids)
         traced.append({
             "trace.op_s": span["end"] - span["start"],
             "jvm.gc_s": gc1 - gc0,
             "jvm.heap_peak_mb": engine.heap_peak_mb(spark),
             "pipeline.sql_executions": len(ids),
-            **wl.op_metrics(store.rows(ids)),
+            "pyworker.op_start_s": python_start_s(rows),
+            **wl.op_metrics(rows),
         })
         counter.record("traced op", wl.check(wl.result(raw), ref))
         # the untraced leg alternates with the traced one, so both see the
@@ -163,9 +161,8 @@ def trace_metrics(wl, spark, ref, counter, tracer, store, warm_rows) -> dict:
     op = {k: median(t[k] for t in traced) for k in traced[0]}
     m = dict.fromkeys(PER_LAYER, 0.0)
     m.update(op)
-    m.update(wl.trace(tracer, store, op))
-    m["pyworker.start_s"] = (metric_total(warm_rows, "time to start Python workers")
-                             + metric_total(warm_rows, "time to initialize Python workers"))
+    m.update(wl.trace(tracer, store, op, counter.record))
+    m["pyworker.start_s"] = python_start_s(warm_rows)
     m["trace.overhead_s"] = op["trace.op_s"] - median(untraced)
     return m
 
@@ -198,15 +195,16 @@ def run(name: str, seed: int, seconds: float, trace: bool) -> dict:
             warm_last = store.last_id()
         raw = wl.op()
         setup_s = time.perf_counter() - t0
+        if trace:
+            warm_rows = store.rows(store.since(warm_last))
         ref = wl.result(raw)
         counter.record("warm-up op", wl.check(ref, ref))
         log(f"set-up: {setup_s:.2f} s (session {start_s:.2f} s)")
 
-        op_s = timed_ops(wl, spark, ref, counter, seconds, WARM_OPS, MIN_OPS)
+        op_s = timed_ops(wl, spark, ref, counter, seconds, WARM_OPS[name], MIN_OPS)
         jvm_mb, workers_mb = engine.peak_rss_mb()
         if trace:
-            metrics = trace_metrics(wl, spark, ref, counter, tracer, store,
-                                    store.rows(store.since(warm_last)))
+            metrics = trace_metrics(wl, spark, ref, counter, tracer, store, warm_rows)
             metrics["session.start_s"] = start_s
             metrics["pyworker.peak_rss_mb"] = workers_mb
             os.makedirs(os.path.join(work, "traces"), exist_ok=True)

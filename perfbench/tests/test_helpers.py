@@ -162,18 +162,3 @@ def test_corpus_roundtrip(tmp_path):
     np.testing.assert_array_equal(rows["token"], ents[d][1])
     assert list(rows["seq"]) == list(range(len(rows)))
 
-
-def test_benchmark_json_matches_run_py():
-    import json
-    import os
-
-    import run
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    with open(os.path.join(root, "BENCHMARK.json")) as f:
-        bench = json.load(f)
-    assert {m["name"]: m["unit"] for m in bench["end_to_end"]} == run.END_TO_END
-    assert {m["name"]: m["unit"] for m in bench["per_layer"]} == run.PER_LAYER
-    assert sorted(w["name"] for w in bench["workloads"]) == sorted(run.SIZES)
-    setup = next(m for m in bench["end_to_end"] if m["name"] == "setup_s")
-    assert setup["bound"] == max(m["bound"] for m in bench["end_to_end"])

@@ -1,4 +1,4 @@
-"""The three benchmark workloads.
+"""The benchmark workloads.
 
 Each workload wraps one op a user of the engine runs, driven only through
 public calls, plus the untimed read-out and check of its result and a
@@ -6,10 +6,10 @@ traced decomposition into the engine's layers:
 
 - ``extract_iat``: ``FeaturePlan(feat_type="IAT").extract`` over the event
   table and the parquet write ``jobs/extract_features.py`` does after it;
+  its traced run also times ``operators.asof`` (``AsofLayer``) over the
+  same events;
 - ``seq_kernels``: every per-sequence kernel of ``operators.kernels`` over
-  the sequences table, with no shuffle before them;
-- ``asof_window``: ``bench.py``'s north query, ``operators.asof.asof_join``
-  plus lag/rolling windows per entity, all in the JVM.
+  the sequences table, with no shuffle before them.
 
 ``op()`` is the timed part. ``result(raw)`` reads the checksums and the
 sampled entities (for extract_iat from the written parquet) and
@@ -79,9 +79,10 @@ class Workload:
     def check(self, res: dict, ref: dict) -> list[str]:
         raise NotImplementedError
 
-    def trace(self, tracer, store, op: dict) -> dict:
+    def trace(self, tracer, store, op: dict, record) -> dict:
         """Per-layer metrics of this workload's own layers; ``op`` holds the
-        medians of the traced ops (``trace.op_s`` and ``op_metrics``)."""
+        medians of the traced ops (``trace.op_s`` and ``op_metrics``).
+        Checks of extra queries go to ``record(label, problems)``."""
         raise NotImplementedError
 
     def op_metrics(self, rows) -> dict:
@@ -140,7 +141,7 @@ class ExtractIat(Workload):
                 doc, t, s, res["samples"].get(doc, []), res["split_interval"], res["dim"])
         return problems
 
-    def trace(self, tracer, store, op):
+    def trace(self, tracer, store, op, record):
         """Materialise each lifecycle prefix of ``FeaturePlan.extract`` with
         the arguments ``extract`` passes: sessionize, then subflows (to the
         noop sink), then the cached sequences; and run both quantile
@@ -148,7 +149,8 @@ class ExtractIat(Workload):
         time minus the previous prefix's. The barriers are timed whole: the
         split-interval barrier needs its own pass over the events. These
         self times plus the write should add up to op_s; the rest is
-        reported as ``pipeline.unaccounted_s``."""
+        reported as ``pipeline.unaccounted_s``. Then the as-of layer runs
+        over the same events."""
         from netml_spark.operators.quantile import dim_from_counts, exact_quantile
         from netml_spark.operators.sequences import events_to_sequences
         from netml_spark.operators.sessionize import sessionize_timeout, subflows_interval
@@ -200,6 +202,10 @@ class ExtractIat(Workload):
         m["pipeline.write_s"] = med("pipeline.write")
         m["pipeline.unaccounted_s"] = op["trace.op_s"] - (
             med("sequences.build") + m["quantile.barrier_s"] + m["pipeline.write_s"])
+        asof, problems = AsofLayer(self.spark, self.events, self.entities).trace(
+            tracer, store, self.data["n_events"])
+        record("as-of layer", problems)
+        m.update(asof)
         return m
 
 
@@ -258,7 +264,7 @@ class SeqKernels(Workload):
                 problems += checks.compare_arrays(f"{doc} {n}", got[n], want[n])
         return problems
 
-    def trace(self, tracer, store, op):
+    def trace(self, tracer, store, op, record):
         """Each kernel family timed alone over the same table."""
         for _ in range(TRACE_REPEATS):
             for label, names in (("native", ("iat", "iat_size")), ("samp", ("samp",)),
@@ -274,13 +280,16 @@ class SeqKernels(Workload):
                 "kernels.py_bytes_out": py["bytes_out"]}
 
 
-class AsofWindow(Workload):
-    name = "asof_window"
-    rows = "n_events"
+class AsofLayer:
+    """``bench.py``'s north query, ``operators.asof.asof_join`` plus
+    lag/rolling windows per entity, all in the JVM. It is timed as a layer
+    in the extract_iat traced run, over the same event table."""
 
-    def __init__(self, spark, data, work_dir, entities):
-        super().__init__(spark, data, work_dir, entities)
-        self.events = spark.read.parquet(data["events"])
+    def __init__(self, spark, events, entities: dict):
+        self.spark = spark
+        self.events = events
+        self.entities = entities
+        self.sample_ids = sorted(entities)
 
     def _join(self):
         from netml_spark.operators.asof import asof_join
@@ -290,7 +299,7 @@ class AsofWindow(Workload):
             "doc_id", "ts", F.col("token").alias("snap"))
         return asof_join(tev, right, on=("doc_id",), value_cols=("snap",))
 
-    def op(self, tracer=engine.NO_TRACE):
+    def query(self):
         w = Window.partitionBy("doc_id").orderBy("ts", "seq")
         feat = (
             self._join()
@@ -301,52 +310,45 @@ class AsofWindow(Workload):
         )
         return feat.agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.count("snap").alias("n_matched"),
-            F.sum("snap").alias("sum_snap"),
-            F.sum("tok_lag").alias("sum_tok_lag"),
-            F.sum("roll_sum").alias("sum_roll"),
-            F.sum("gap").alias("sum_gap"),
             _sampled(self.sample_ids, "doc_id", "seq", "ts",
                      *checks.ASOF_COLS).alias("sample"),
         ).collect()[0]
 
-    def result(self, row) -> dict:
+    def check(self, row, n_events: int) -> list[str]:
+        problems = []
+        if row["n_rows"] != n_events:
+            problems.append(f"asof n_rows {row['n_rows']} != {n_events}")
         sample = pd.DataFrame([r.asDict() for r in row["sample"]],
                               columns=["doc_id", "seq", "ts", *checks.ASOF_COLS])
-        return {
-            "ints": {k: row[k] for k in ("n_rows", "n_matched", "sum_snap",
-                                         "sum_tok_lag", "sum_roll")},
-            "floats": {"sum_gap": row["sum_gap"]},
-            "samples": dict(tuple(sample.groupby("doc_id"))),
-        }
-
-    def check(self, res, ref):
-        problems = checks.compare_checksums(res, ref)
-        if res["ints"]["n_rows"] != self.data["n_events"]:
-            problems.append(f"n_rows {res['ints']['n_rows']} != {self.data['n_events']}")
+        got = dict(tuple(sample.groupby("doc_id")))
         for doc, (t, s) in self.entities.items():
-            got = res["samples"].get(doc)
-            if got is None:
-                problems.append(f"{doc}: missing from the output")
+            if doc not in got:
+                problems.append(f"{doc}: missing from the as-of output")
                 continue
-            problems += checks.check_asof_entity(doc, t, s, got)
+            problems += checks.check_asof_entity(doc, t, s, got[doc])
         return problems
 
-    def trace(self, tracer, store, op):
-        """The join alone, reduced to sums over the columns the windows read
-        (so it prunes like the op does); the windows' self time is the rest
-        of the op."""
+    def trace(self, tracer, store, n_events: int) -> tuple[dict, list[str]]:
+        """The whole query, then the join alone reduced to sums over the
+        columns the windows read (so it prunes like the query does); the
+        windows' self time is the rest. One untimed query first: the JVM
+        has not run this plan before."""
+        problems = self.check(self.query(), n_events)
         for _ in range(TRACE_REPEATS):
+            last = store.last_id()
+            with tracer.span("asof.query"):
+                row = self.query()
+            rows = store.rows(store.since(last))
+            problems += self.check(row, n_events)
             j = self._join()
             with tracer.span("asof.join"):
                 j.agg(*[F.sum(c) for c in ("seq", "ts", "token", "snap")]).collect()
+        query_s = float(np.median(tracer.seconds("asof.query")))
         join_s = float(np.median(tracer.seconds("asof.join")))
-        return {"asof.join_s": join_s, "asof.window_s": op["trace.op_s"] - join_s}
-
-    def op_metrics(self, rows) -> dict:
-        return {"asof.sort_s": metric_total(rows, "sort time", "Sort"),
+        return {"asof.join_s": join_s, "asof.window_s": query_s - join_s,
+                "asof.sort_s": metric_total(rows, "sort time", "Sort"),
                 "asof.shuffle_bytes": metric_total(rows, "shuffle bytes written"),
-                "asof.spill_bytes": spill_total(rows)}
+                "asof.spill_bytes": spill_total(rows)}, problems
 
 
-WORKLOADS = {w.name: w for w in (ExtractIat, SeqKernels, AsofWindow)}
+WORKLOADS = {w.name: w for w in (ExtractIat, SeqKernels)}
