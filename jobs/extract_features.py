@@ -59,12 +59,14 @@ def main(argv=None):
     entity_cols = tuple(args.entity_cols.split(","))
     order_cols = tuple(c for c in args.order_cols.split(",") if c)
 
-    def extract(df):
-        plan = FeaturePlan(
+    def new_plan():
+        return FeaturePlan(
             feat_type=args.feat_type, fft=args.fft, header=args.header,
             q_interval=args.q_interval, interval=args.interval,
             timeout=args.timeout, approx_quantiles=args.approx_quantiles,
         )
+
+    def extract(plan, df):
         carry = (args.partition_col,) if args.partition_col in df.columns else ()
         return plan.extract(
             df, entity_cols, args.ts_col, args.token_col, order_cols,
@@ -77,11 +79,16 @@ def main(argv=None):
         parts = [
             r[0] for r in events.select(args.partition_col).distinct().collect()
         ]
+        plans = {}  # partition value -> the plan holding its sequences cache
+
+        def build(p):
+            plans[p] = plan = new_plan()
+            return extract(plan, events.filter(F.col(args.partition_col) == p))
+
         man = CheckpointManifest(spark, args.checkpoint)
         results = man.run_stage(
-            f"features_{args.feat_type}", sorted(parts),
-            lambda p: extract(events.filter(F.col(args.partition_col) == p)),
-            args.partition_col,
+            f"features_{args.feat_type}", sorted(parts), build,
+            args.partition_col, release=lambda p: plans.pop(p).release(),
         )
         done = sum(1 for v in results.values() if v[0] == "ok")
         skipped = sum(1 for v in results.values() if v[0] == "skipped")
@@ -91,8 +98,11 @@ def main(argv=None):
         for p, msg in errors.items():
             print(f"  error partition={p}: {msg.splitlines()[0][:160]}")
     else:
-        out = extract(events)
-        out.write.mode("overwrite").parquet(args.output)
+        plan = new_plan()
+        try:
+            extract(plan, events).write.mode("overwrite").parquet(args.output)
+        finally:
+            plan.release()
         print(f"wrote {args.output}")
 
 

@@ -200,6 +200,7 @@ class CheckpointManifest:
         input_fp: Callable[[str], str] | None = None,
         max_parallel: int = 4,
         flush_every: int = 32,
+        release: Callable[[str], None] | None = None,
     ) -> dict:
         """Run ``build(partition_value)`` for every partition not yet 'ok'
         (with matching input fingerprint) in the manifest; write each to
@@ -217,7 +218,11 @@ class CheckpointManifest:
         turning fingerprinting off must not redo a completed backfill.
         A fingerprint callable that itself raises (missing input file for
         one partition) marks THAT partition 'error' and the run
-        continues — same isolation as build/write failures."""
+        continues — same isolation as build/write failures.
+
+        ``release(pv)``, when given, runs once a built partition's write
+        and manifest record are done (or have failed), so caches that
+        ``build`` held for that partition do not outlive it."""
         out_root = os.path.join(self.root, output_subdir or stage)
         done = self.completed(stage)
         results = {}
@@ -238,13 +243,9 @@ class CheckpointManifest:
                 return pv, ("error", str(e))
             if str(pv) in done and (fp == "" or done[str(pv)] == fp):
                 return pv, ("skipped", None)
+            df = None
             try:
                 df = build(pv).cache()
-            except Exception as e:
-                self.record(stage, pv, 0, 0, time.time() - t0,
-                            status="error", input_fp=fp)
-                return pv, ("error", str(e))
-            try:
                 m = partition_metrics(df).collect()[0]
                 self._write_partition(df, out_root, partition_col, pv)
                 self.record(stage, pv, m.row_count, m.checksum,
@@ -258,7 +259,10 @@ class CheckpointManifest:
                             status="error", input_fp=fp)
                 return pv, ("error", str(e))
             finally:
-                df.unpersist()
+                if df is not None:
+                    df.unpersist()
+                if release is not None:
+                    release(pv)
 
         try:
             with ThreadPoolExecutor(max_workers=max(1, int(max_parallel))) as ex:

@@ -4,9 +4,9 @@ Operate on array columns of the sequences shape (times:array<double>,
 tokens:array<int>). Wherever semantics allow, the kernel is a *native array
 expression* (JVM-side, whole-stage codegen, zero Python): IAT, SIZE,
 IAT_SIZE, pad/truncate, header flag counts. The genuinely sequential or
-numpy-only kernels (SAMP's dual 500-cap loop, FFT) are Arrow-batched pandas
-UDFs with numpy inner loops — no per-row Python at the Spark boundary
-(input_hint mandate).
+numpy-only kernels (SAMP's dual 500-cap loop, FFT) are Arrow scalar UDFs:
+each reads a batch's flat value buffer plus row lengths and returns one
+ListArray, with no pandas conversion and no per-row Python on the fast path.
 
 Each kernel cites the reference lines whose output it reproduces; parity is
 pinned by tests vs the numpy oracle (netml_spark.oracle.netml_ref).
@@ -15,10 +15,11 @@ pinned by tests vs the numpy oracle (netml_spark.oracle.netml_ref).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from netml_spark.oracle import netml_ref
 
@@ -101,27 +102,32 @@ def header_features(flags_arr, protos_arr, ttls_arr) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Arrow/pandas-UDF kernels (sequential or numpy-only semantics)
+# Arrow-native UDF kernels (sequential or numpy-only semantics)
 # ---------------------------------------------------------------------------
 
 
-def iat_pandas_udf():
-    """Pandas-UDF twin of iat() — kept for benchmarking native vs Arrow."""
-
-    @pandas_udf("array<double>")
-    def _iat(times: pd.Series) -> pd.Series:
-        return times.map(lambda v: np.diff(np.asarray(v, dtype=np.float64)))
-
-    return _iat
+def _flat(arr: pa.ListArray):
+    """(flat float64 values, int64 row lengths) of a possibly sliced
+    ListArray; a null row has length 0 (``list_flatten`` skips it)."""
+    vals = pc.list_flatten(arr).to_numpy(zero_copy_only=False)
+    lens = pc.list_value_length(arr).fill_null(0).to_numpy(zero_copy_only=False)
+    return vals.astype(np.float64, copy=False), lens.astype(np.int64)
 
 
-def _samp_fast_batch(times: pd.Series, tokens: pd.Series, feat: str, rate: float):
-    """Batch-vectorized SAMP for the common no-cap path.
+def _lists(lens: np.ndarray, values: np.ndarray, null: pa.Array) -> pa.ListArray:
+    """One array<double> ListArray from row lengths + concatenated values."""
+    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values, pa.float64()),
+                                    mask=null)
 
-    When no 500-cap triggers, the reference loop (parser.py:472-559) emits
-    exactly the grid buckets 0..K with k_i = floor((t_i - t_0)/rate) and a
-    trailing bucket dropped iff its sum <= 0 — computable for ALL rows of
-    an Arrow batch with ONE global np.bincount over offset bucket ids.
+
+def _samp_batch(times: pa.ListArray, tokens: pa.ListArray, feat: str, rate: float):
+    """SAMP over one Arrow batch (parser.py:472-559).
+
+    When no 500-cap triggers, the reference loop emits exactly the grid
+    buckets 0..K with k_i = floor((t_i - t_0)/rate) and a trailing bucket
+    dropped iff its sum <= 0 — computable for ALL rows of the batch with
+    ONE global np.bincount over offset bucket ids.
 
     A row is eligible only when the closed-form result is PROVABLY equal
     to the loop's (which accumulates ``current`` by repeated float adds):
@@ -130,102 +136,96 @@ def _samp_fast_batch(times: pd.Series, tokens: pd.Series, feat: str, rate: float
         and accumulated-rounding drift could flip their comparisons)
       - total buckets K+1 <= 500 (whole-feature truncation never fires)
       - no consecutive-bucket gap > 501 (per-gap zero-fill cap never fires)
-    Ineligible rows (returned as index array) fall back to the verbatim
-    loop. margin bounds ~1000 accumulated ulps, far above any drift.
+    Ineligible rows run the verbatim loop on slices of the flat buffers
+    and are spliced in by offset. margin bounds ~1000 accumulated ulps,
+    far above any drift. A null row in either input gives a null row."""
+    null = pc.or_(times.is_null(), tokens.is_null())
+    valid = ~null.to_numpy(zero_copy_only=False)
+    if not valid.all():  # keep the two flat buffers row-aligned
+        times, tokens = times.filter(pa.array(valid)), tokens.filter(pa.array(valid))
+    t, lens = _flat(times)
+    s, _ = _flat(tokens)
+    n = len(lens)
+    ends = np.cumsum(lens)
+    starts = ends - lens
+    row_id = np.repeat(np.arange(n), lens)
+    q = (t - t[starts[row_id]]) / rate
+    k = np.maximum(np.floor(q).astype(np.int64), 0)  # guard q=-0.0 edge
 
-    Returns (results: list[np.ndarray|None], fallback_rows: np.ndarray).
-    """
-    n_rows = len(times)
-    lens = times.map(len).to_numpy(dtype=np.int64)
-    results: list = [None] * n_rows
-    nz = np.flatnonzero(lens)
-    if len(nz) == 0:
-        return results, np.array([], dtype=np.int64)
-    flat_t = np.concatenate([np.asarray(t, dtype=np.float64) for t in times if len(t)])
-    row_lens = lens[nz]
-    starts = np.concatenate(([0], np.cumsum(row_lens)[:-1]))
-    t0_rep = np.repeat(flat_t[starts], row_lens)
-    q = (flat_t - t0_rep) / rate
-    k = np.floor(q).astype(np.int64)
-    np.maximum(k, 0, out=k)  # guard q=-0.0 edge
-
-    margin = 4096.0 * np.spacing(np.abs(flat_t).max() + rate) / rate
+    margin = 4096.0 * np.spacing(np.abs(t).max(initial=0.0) + rate) / rate
     near_boundary = (q >= 0.5) & (np.abs(q - np.round(q)) <= margin)
-    K = k[starts + row_lens - 1]  # times sorted -> k nondecreasing per row
-    row_id = np.repeat(np.arange(len(nz)), row_lens)
-    bad = np.zeros(len(nz), dtype=bool)
-    np.logical_or.at(bad, row_id, near_boundary)
-    bad |= K + 1 > 500
-    if len(k) > 1:
-        gap = np.diff(k)
-        inner = np.ones(len(k) - 1, dtype=bool)
-        inner[starts[1:] - 1] = False  # mask row-crossing diffs
-        # per-gap zero-fill cap fires iff bucket gap - 1 > 500
-        np.logical_or.at(bad, row_id[1:], (gap > 501) & inner)
+    nz = lens > 0
+    K = np.full(n, -1, dtype=np.int64)
+    K[nz] = k[ends[nz] - 1]  # times sorted -> k nondecreasing per row
+    # per-gap zero-fill cap fires iff bucket gap - 1 > 500 within a row
+    wide = (np.diff(k) > 501) & (row_id[1:] == row_id[:-1])
+    bad = (np.bincount(row_id, weights=near_boundary, minlength=n) > 0) | (K + 1 > 500)
+    bad |= np.bincount(row_id[1:], weights=wide, minlength=n) > 0
 
-    good = ~bad
-    if good.any():
-        out_lens = K + 1
-        g_rows = np.flatnonzero(good)
-        good_flat = good[row_id]
-        offsets = np.zeros(len(nz), dtype=np.int64)
-        offsets[g_rows] = np.concatenate(([0], np.cumsum(out_lens[g_rows])[:-1]))
-        total = int(out_lens[g_rows].sum())
-        gidx = (k + offsets[row_id])[good_flat]
-        if feat == "SAMP_NUM":
-            B = np.bincount(gidx, minlength=total).astype(np.float64)
-        else:
-            flat_s = np.concatenate(
-                [np.asarray(s, dtype=np.float64) for s in tokens if len(s)]
-            )
-            B = np.bincount(gidx, weights=flat_s[good_flat], minlength=total)
-        for j in g_rows:
-            b = B[offsets[j]: offsets[j] + out_lens[j]]
-            # trailing bucket emitted iff its sum > 0 (parser.py:549-550);
-            # bincount accumulates weights in input order, so the bucket
-            # sums are float-identical to the loop's sequential samp_sub
-            results[nz[j]] = b if b[-1] > 0 else b[:-1].copy()
-    for i in np.flatnonzero(lens == 0):
-        results[i] = np.array([], dtype=np.float64)
-    return results, nz[bad]
+    nb = np.where(bad, 0, K + 1)  # buckets per fast-path row
+    boff = np.cumsum(nb) - nb
+    good_flat = ~bad[row_id]
+    gidx = (k + boff[row_id])[good_flat]
+    w = None if feat == "SAMP_NUM" else s[good_flat]
+    # bincount accumulates weights in input order, so the bucket sums are
+    # float-identical to the loop's sequential samp_sub
+    B = np.bincount(gidx, weights=w, minlength=int(nb.sum()))
+    # trailing bucket emitted iff its sum > 0 (parser.py:549-550)
+    tail = nb > 0
+    last = (boff + nb - 1)[tail]
+    keep = np.ones(len(B), dtype=bool)
+    keep[last] = B[last] > 0
+    out_lens = nb.copy()
+    out_lens[tail] -= ~keep[last]
+
+    slow = [netml_ref.get_SAMP(t[starts[i]:ends[i]], s[starts[i]:ends[i]],
+                               sampling_feature=feat, sampling_rate=rate)
+            for i in np.flatnonzero(bad)]
+    out_lens[bad] = [len(r) for r in slow]
+    values = np.empty(int(out_lens.sum()), dtype=np.float64)
+    fast = np.repeat(~bad, out_lens)
+    values[fast] = B[keep]
+    values[~fast] = np.concatenate(slow) if slow else []
+    full = np.zeros(len(valid), dtype=np.int64)
+    full[valid] = out_lens
+    return _lists(full, values, null)
 
 
 def samp_udf(sampling_feature: str, sampling_rate: float):
     """SAMP_NUM / SAMP_SIZE with the reference's dual 500-caps
-    (parser.py:472-559). Fast path: ONE batch-level np.bincount for every
-    row where the caps provably cannot fire and no packet sits on a grid
-    boundary (see _samp_fast_batch); other rows run the verbatim oracle
-    loop (the per-gap zero-fill cap and whole-feature truncation are
-    order-dependent). Parity vs the loop is pinned exact (atol=0) by
+    (parser.py:472-559) as an Arrow scalar UDF over flat value buffers
+    (see _samp_batch). Parity vs the loop is pinned exact (atol=0) by
     tests/test_kernels.py and the hypothesis properties."""
-    rate = float(sampling_rate)
-    feat = sampling_feature
+    feat, rate = sampling_feature, float(sampling_rate)
 
-    @pandas_udf("array<double>")
-    def _samp(times: pd.Series, tokens: pd.Series) -> pd.Series:
-        results, fallback = _samp_fast_batch(times, tokens, feat, rate)
-        t_arr = times.reset_index(drop=True)
-        s_arr = tokens.reset_index(drop=True)
-        for i in fallback:
-            results[i] = netml_ref.get_SAMP(
-                np.asarray(t_arr[i], dtype=np.float64),
-                np.asarray(s_arr[i], dtype=np.float64),
-                sampling_feature=feat,
-                sampling_rate=rate,
-            )
-        return pd.Series(results)
+    @arrow_udf("array<double>")
+    def _samp(times: pa.Array, tokens: pa.Array) -> pa.Array:
+        return _samp_batch(times, tokens, feat, rate)
 
     return _samp
 
 
+def _fft_batch(v: pa.ListArray, n: int) -> pa.ListArray:
+    """Real part of np.fft.fft(row, n) for every row of one Arrow batch:
+    each row's first min(len, n) values are scattered into a zero
+    (rows, n) matrix and transformed in one call. A null row stays null."""
+    vals, lens = _flat(v)
+    m = np.minimum(lens, n)
+    row = np.repeat(np.arange(len(lens)), m)
+    col = np.arange(len(row)) - np.repeat(np.cumsum(m) - m, m)
+    M = np.zeros((len(lens), n), dtype=np.float64)
+    M[row, col] = vals[(np.cumsum(lens) - lens)[row] + col]
+    out = np.ascontiguousarray(np.fft.fft(M, axis=1).real).ravel()
+    return _lists(np.full(len(lens), n), out, v.is_null())
+
+
 def fft_udf(fft_bin: int):
-    """Real part of np.fft.fft(v, n=fft_bin) (parser.py:624-652)."""
+    """Real part of np.fft.fft(v, n=fft_bin) (parser.py:624-652) as an
+    Arrow scalar UDF: one batched FFT per Arrow batch (see _fft_batch)."""
     nbin = int(fft_bin)
 
-    @pandas_udf("array<double>")
-    def _fft(v: pd.Series) -> pd.Series:
-        return v.map(
-            lambda x: np.real(np.fft.fft(np.asarray(x, dtype=np.float64), n=nbin))
-        )
+    @arrow_udf("array<double>")
+    def _fft(v: pa.Array) -> pa.Array:
+        return _fft_batch(v, nbin)
 
     return _fft

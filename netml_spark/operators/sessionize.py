@@ -12,8 +12,8 @@ All variants are declarative window passes over ``(entity, ts)``:
                             (parser.py:209-299). The split anchor depends on
                             grid arithmetic over previous splits — inherently
                             sequential per entity — so it runs as a numpy
-                            loop inside ``applyInPandas`` (Arrow-batched, one
-                            group per entity-session, vectorized I/O).
+                            kernel inside ``mapInArrow`` over sorted Arrow
+                            batches of many entity-session groups.
 
 Scale notes (100 TB): the only wide exchange is hash partitioning by the
 entity key; every window uses the same partitioning so Catalyst reuses the
@@ -28,7 +28,6 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -187,21 +186,20 @@ def subflows_interval(
       - trailing segment discarded iff any split occurred (parser.py:278-283)
       - segments with < max(2, thres) rows dropped (parser.py:289-292).
 
-    Execution (the round-4 rework): ``repartition(entity)`` +
-    ``sortWithinPartitions(entity, ts, order)`` + ``mapInPandas`` — the
-    same single shuffle the old ``applyInPandas`` form cost, but the
-    kernel now works on WHOLE Arrow batches of many consecutive groups:
-    gap candidates, subflow ids (grouped cumsum), the trailing-segment
-    discard, and the min-size filter are all computed vectorized across
-    every group in the batch at once; the only Python loop is
-    ``_split_positions`` over groups that actually contain a candidate
-    gap, on raw numpy slices. The old form paid ~1 ms of pandas machinery
-    (sort_values + groupby.transform + frame build) PER GROUP — at 480 k
-    flow groups that was ~100× the kernel's real work, and at 10^9 groups
-    (the 100 TB shape) it is unusable; the batched kernel is flat in the
-    group count. A group spanning an Arrow batch boundary is carried into
-    the next batch (memory bounded by the largest single group, as
-    before).
+    Execution: ``repartition(entity)`` +
+    ``sortWithinPartitions(entity, ts, order)`` + ``mapInArrow`` — one
+    shuffle, and the kernel works on WHOLE Arrow batches of many
+    consecutive groups: gap candidates, subflow ids (grouped cumsum), the
+    trailing-segment discard, and the min-size filter are all computed
+    vectorized across every group in the batch at once; the only Python
+    loop is ``_split_positions`` over groups that actually contain a
+    candidate gap, on raw numpy slices. A per-group ``applyInPandas`` form
+    pays ~1 ms of pandas machinery (sort_values + groupby.transform +
+    frame build) PER GROUP — at 480 k flow groups ~100× the kernel's real
+    work, and at 10^9 groups (the 100 TB shape) unusable; the batched
+    kernel is flat in the group count. A group spanning an Arrow batch
+    boundary is carried into the next batch (memory bounded by the
+    largest single group).
 
     ``assume_partitioned=True`` skips the repartition: correct whenever
     every (entity...) group already lives in ONE partition — in

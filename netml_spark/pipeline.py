@@ -6,7 +6,7 @@ Lifecycle (SURVEY.md §3):
 
   events --sessionize_timeout--> sessions          [1 shuffle on entity]
          --(interval<=0: duration quantile)------- [pass-1 agg -> scalar]
-         --subflows_interval--> subflows           [applyInPandas, same keys]
+         --subflows_interval--> subflows           [mapInArrow, same keys]
          --events_to_sequences--> one row per flow [same partitioning]
          --(dim quantile)------------------------- [pass-2 agg -> scalar]
          --kernel dispatch + fft/pad + header----> features:array<double>
@@ -172,7 +172,7 @@ class FeaturePlan:
             # aggregate — including the order-sensitive float sums and
             # stddev — accumulates in the identical sequence and the
             # result is bit-equal; the chain upstream of the cache runs
-            # once (plan property ``stats_branch_no_recompute``).
+            # once (plan property ``featureplan_stats_no_recompute``).
             ev = seqs.select(
                 *flow_keys,
                 F.explode(F.arrays_zip("times", "tokens")).alias("_z"),

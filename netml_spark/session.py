@@ -1,6 +1,6 @@
 """SparkSession factory with the engine's standard configuration.
 
-Arrow on (all kernels are pandas/Arrow UDFs — no per-row Python),
+Arrow on (every Python kernel exchanges Arrow batches — no per-row Python),
 AQE on (runtime re-plan + skew-join splitting), UTC session timezone
 (deterministic timestamp<->double epoch-second arithmetic, matching the
 reference's float-seconds time model, reference parser.py:61).
@@ -40,7 +40,8 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
-        # Arrow: every Python-side kernel is a vectorized pandas UDF.
+        # Arrow: Python-side kernels take Arrow batches (Arrow UDFs,
+        # mapInArrow; the MinHash/SimHash pandas UDFs convert batches).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Arrow batch sizing (r6, guide §4.2): the r1 value of 2048 rows
         # made every 5M-row kernel pass pay ~2600 per-batch overheads

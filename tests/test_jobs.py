@@ -170,3 +170,27 @@ def test_classify_empty_input_zero_report(spark, tmp_path, capsys, model_path):
     ).write.mode("overwrite").parquet(empty)
     classify.main(["--input", empty, "--model", model_path])
     assert "# flows=0 anomalies=0" in capsys.readouterr().out
+
+
+@pytest.mark.parametrize("extra", [[], ["--checkpoint", "ckpt",
+                                        "--partition-col", "event_type"]])
+def test_extract_features_releases_caches(spark, tmp_path, extra):
+    """extract_features adds no persisted RDD: the plain path releases the
+    plan's sequences cache after its write, the checkpoint path after each
+    partition's manifest record. (Earlier tests in this session may hold
+    caches; a release can drop one of them when Spark shares the entry
+    between equal plans, so the check is "nothing new", not "equal".)"""
+    import jobs.extract_features as ef
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    extra = [str(tmp_path / a) if a == "ckpt" else a for a in extra]
+    ef.main([
+        "--input", EVENTS, "--output", str(tmp_path / "features"),
+        "--feat-type", "SAMP_NUM", "--fft", "--entity-cols", "user_id",
+        "--token-col", "value", "--order-cols", "event_id",
+        "--timeout", "300", *extra,  # a plan no other test has cached
+    ])
+    assert persisted() <= before

@@ -2,7 +2,10 @@
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
+from pyspark.util import PythonEvalType
 
 from netml_spark.operators import kernels
 from netml_spark.operators.sequences import events_to_sequences
@@ -114,15 +117,99 @@ def test_samp_500_caps():
 
 
 def test_fft_kernel(spark, token_events_df, token_events_pdf):
+    """Batched FFT equals the per-row np.fft.fft exactly (atol=0), on the
+    fixture's IAT series and on rows longer than n, shorter and empty."""
     seqs = _seqs(spark, token_events_df)
-    got = seqs.select(
-        "doc_id", kernels.fft_udf(8)(kernels.iat("times")).alias("f")
-    ).collect()
     ora = _oracle_by_doc(token_events_pdf)
-    for r in got:
-        t, _ = ora[r.doc_id]
-        exp = netml_ref.get_FFT(netml_ref.get_IAT(t), 8)
-        np.testing.assert_allclose(np.asarray(r.f), exp, rtol=1e-12, atol=1e-12)
+    rng = np.random.default_rng(5)
+    for n in (8, 63):
+        got = seqs.select(
+            "doc_id", kernels.fft_udf(n)(kernels.iat("times")).alias("f")
+        ).collect()
+        for r in got:
+            t, _ = ora[r.doc_id]
+            exp = np.real(np.fft.fft(netml_ref.get_IAT(t), n))
+            np.testing.assert_allclose(np.asarray(r.f), exp, rtol=0, atol=0)
+        rows = [rng.uniform(0, 9, m).tolist() for m in (0, 1, n - 1, n, n + 1, 200)]
+        df = spark.createDataFrame(list(enumerate(rows)), "i int, v array<double>")
+        for r in df.select("i", kernels.fft_udf(n)("v").alias("f")).collect():
+            exp = np.real(np.fft.fft(np.asarray(rows[r.i], np.float64), n))
+            np.testing.assert_allclose(np.asarray(r.f), exp, rtol=0, atol=0)
+
+
+def test_udfs_null_row_gives_null(spark):
+    """A null row in any input of a UDF gives a null output row; an empty
+    row gives an empty SAMP and an all-zero FFT."""
+    df = spark.createDataFrame(
+        [(0, [0.0, 0.4, 2.5], [3, 4, 5]), (1, None, [1]), (2, [0.0, 1.5], None),
+         (3, [], [])],
+        "i int, times array<double>, tokens array<int>",
+    )
+    got = {r.i: (r.s, r.f) for r in df.select(
+        "i", kernels.samp_udf("SAMP_SIZE", 1.0)("times", "tokens").alias("s"),
+        kernels.fft_udf(4)("times").alias("f"),
+    ).collect()}
+    assert got[0][0] == [7.0, 0.0, 5.0]
+    assert got[1] == (None, None)
+    assert got[2][0] is None and got[2][1] is not None
+    assert got[3] == ([], [0.0] * 4)
+
+
+def test_udfs_are_arrow_scalar_udfs():
+    """Both kernels stay Arrow-native: a pandas UDF would bring back the
+    per-row pandas conversion at the Python boundary."""
+    for udf in (kernels.samp_udf("SAMP_NUM", 1.0), kernels.fft_udf(8)):
+        assert udf.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
+
+
+def _list_array(rows, value_type, pad=2):
+    """A ListArray of ``rows`` sliced out of a longer one (non-zero offset)."""
+    junk = [[7, 7]] * pad
+    return pa.array(junk + list(rows) + junk, pa.list_(value_type)).slice(pad, len(rows))
+
+
+@pytest.mark.parametrize("token_type", [pa.int32(), pa.float64()])
+@pytest.mark.parametrize("feat", ["SAMP_NUM", "SAMP_SIZE"])
+def test_samp_batch_pyarrow(feat, token_type):
+    """The SAMP batch kernel on sliced ListArrays: fast-path rows, empty
+    rows, zero-size trailing buckets and forced fallbacks all equal the
+    verbatim loop exactly."""
+    rng = np.random.default_rng(3)
+    times = [np.sort(rng.uniform(0, 60, int(rng.integers(1, 30)))) for _ in range(25)]
+    times += [np.array([]), np.array([0.0, 1.0, 2.0, 5.0]), np.array([0.0, 0.5])]
+    sizes = [rng.integers(0, 1500, len(t)) for t in times]
+    sizes[-1] = np.zeros(2, dtype=np.int64)  # trailing bucket sum 0 -> dropped
+    ta = _list_array([t.tolist() for t in times], pa.float64())
+    sa = _list_array([s.tolist() for s in sizes], token_type)
+    assert ta.offset == sa.offset == 2
+    got = kernels._samp_batch(ta, sa, feat, 1.0).to_pylist()
+    for g, t, s in zip(got, times, sizes):
+        exp = netml_ref.get_SAMP(t, s, feat, 1.0) if len(t) else np.array([])
+        np.testing.assert_allclose(np.asarray(g, np.float64), exp, rtol=0, atol=0)
+
+
+def test_samp_batch_all_fallback():
+    """Every row ineligible for the closed form (grid-boundary times,
+    >500 buckets, a capped gap): the loop results splice in by offset."""
+    times = [np.array([0.0, 1.0, 2.0]), np.arange(0.0, 900.0, 1.5),
+             np.array([0.0, 1000.0, 1001.0, 2000.0]), np.array([0.0, 3.0])]
+    sizes = [np.arange(1, len(t) + 1) for t in times]
+    ta = _list_array([t.tolist() for t in times], pa.float64())
+    sa = _list_array([s.tolist() for s in sizes], pa.int32())
+    got = kernels._samp_batch(ta, sa, "SAMP_SIZE", 1.0).to_pylist()
+    for g, t, s in zip(got, times, sizes):
+        np.testing.assert_allclose(
+            np.asarray(g), netml_ref.get_SAMP(t, s, "SAMP_SIZE", 1.0), rtol=0, atol=0)
+
+
+def test_fft_batch_pyarrow():
+    rows = [[1.0, 2.0, 3.0], [], None, list(np.linspace(0, 1, 20))]
+    got = kernels._fft_batch(_list_array(rows, pa.float64()), 8).to_pylist()
+    assert got[2] is None
+    for g, v in zip(got, rows):
+        if v is not None:
+            exp = np.real(np.fft.fft(np.asarray(v, np.float64), 8))
+            np.testing.assert_allclose(np.asarray(g), exp, rtol=0, atol=0)
 
 
 def test_header_features(spark):
