@@ -92,13 +92,17 @@ def main(argv=None):
     # feature-extraction + pandas_udf scoring pipeline (correct since
     # predict is deterministic, but double the work).
     scored = scored.persist()
-    if args.output:
-        scored.write.mode("overwrite").parquet(args.output)
-
-    totals = scored.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("prediction"), F.lit(0)).alias("anom"),
-    ).collect()[0]
+    try:
+        if args.output:
+            scored.write.mode("overwrite").parquet(args.output)
+        totals = scored.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum("prediction"), F.lit(0)).alias("anom"),
+        ).collect()[0]
+    finally:
+        # scored is materialized now; the plan's sequences cache is not
+        # read again
+        plan.release()
 
     # Report tail on the driver: at default verbosity only anomalies are
     # printed (cli.py:204-210); --report-all / -v>1 asks for every line.

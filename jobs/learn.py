@@ -98,9 +98,12 @@ def main(argv=None):
     entity_cols = tuple(args.entity_cols.split(","))
     order_cols = tuple(c for c in args.order_cols.split(",") if c)
 
+    plans = []  # released once the feature matrix is collected
+
     def extract_one(path):
         ev = spark.read.parquet(path)
         plan = FeaturePlan(feat_type=args.feat_type, q_interval=args.q_interval)
+        plans.append(plan)
         carry = ("source",) if "source" in ev.columns else ()
         return plan.extract(ev, entity_cols, args.ts_col, args.token_col,
                             order_cols, carry_cols=carry)
@@ -111,28 +114,32 @@ def main(argv=None):
     # is a DataFrame branch and the concat is unionByName.
     labeled = bool(args.labels or args.input_normal or args.input_abnormal)
     parts = []
-    for i, path in enumerate(args.inputs or ()):
-        f = extract_one(path)
-        if args.labels:
-            lab = spark.read.parquet(args.labels[i])
-            order_col = "src_order" if "src_order" in lab.columns else None
-            f = label_join(f, lab, (entity_cols[0],), order_col=order_col)
-        parts.append(f)
-    for flag_inputs, flag_label in ((args.input_normal, 0),
-                                    (args.input_abnormal, 1)):
-        for path in flag_inputs or ():
-            parts.append(extract_one(path)
-                         .withColumn("label", F.lit(flag_label).cast("int")))
-    feats = parts[0]
-    for f in parts[1:]:
-        # allowMissingColumns: inputs may disagree on the optional
-        # 'source' carry column (per-input carry detection) — the
-        # reference's pandas concat tolerates heterogeneous inputs, so
-        # the multi-leg union must too (ADVICE r5)
-        feats = feats.unionByName(f, allowMissingColumns=True)
-    label_col = "label" if labeled else None
+    try:
+        for i, path in enumerate(args.inputs or ()):
+            f = extract_one(path)
+            if args.labels:
+                lab = spark.read.parquet(args.labels[i])
+                order_col = "src_order" if "src_order" in lab.columns else None
+                f = label_join(f, lab, (entity_cols[0],), order_col=order_col)
+            parts.append(f)
+        for flag_inputs, flag_label in ((args.input_normal, 0),
+                                        (args.input_abnormal, 1)):
+            for path in flag_inputs or ():
+                parts.append(extract_one(path)
+                             .withColumn("label", F.lit(flag_label).cast("int")))
+        feats = parts[0]
+        for f in parts[1:]:
+            # allowMissingColumns: inputs may disagree on the optional
+            # 'source' carry column (per-input carry detection) — the
+            # reference's pandas concat tolerates heterogeneous inputs, so
+            # the multi-leg union must too (ADVICE r5)
+            feats = feats.unionByName(f, allowMissingColumns=True)
+        label_col = "label" if labeled else None
 
-    X, y = ndm.collect_matrix(feats, "features", label_col)
+        X, y = ndm.collect_matrix(feats, "features", label_col)
+    finally:
+        for plan in plans:
+            plan.release()
     counts = None if y is None else {
         int(k): int(v) for k, v in zip(*np.unique(y, return_counts=True))
     }

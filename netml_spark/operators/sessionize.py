@@ -1,6 +1,6 @@
 """Gap sessionization — the heart of the engine (reference parser.py:80-299).
 
-All variants are declarative window passes over ``(entity, ts)``:
+All variants are declarative passes over ``(entity, ts)``:
 
 - ``sessionize``          : clean cumulative-sum gap sessionization. Pure
                             Catalyst (lag + cumsum windows) — one shuffle on
@@ -11,9 +11,10 @@ All variants are declarative window passes over ``(entity, ts)``:
 - ``subflows_interval``   : the reference's grid-aligned interval re-split
                             (parser.py:209-299). The split anchor depends on
                             grid arithmetic over previous splits — inherently
-                            sequential per entity — so it runs as a numpy
-                            kernel inside ``mapInArrow`` over sorted Arrow
-                            batches of many entity-session groups.
+                            sequential per entity — so a numpy kernel labels
+                            each sorted row inside a narrow Arrow iterator UDF
+                            over (entity, ts) only; a native Filter drops the
+                            discarded rows.
 
 Scale notes (100 TB): the only wide exchange is hash partitioning by the
 entity key; every window uses the same partitioning so Catalyst reuses the
@@ -25,11 +26,14 @@ when a single entity is itself huge.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Iterator, Sequence, Tuple
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 
 from netml_spark.util import ts_seconds
 
@@ -186,20 +190,14 @@ def subflows_interval(
       - trailing segment discarded iff any split occurred (parser.py:278-283)
       - segments with < max(2, thres) rows dropped (parser.py:289-292).
 
-    Execution: ``repartition(entity)`` +
-    ``sortWithinPartitions(entity, ts, order)`` + ``mapInArrow`` — one
-    shuffle, and the kernel works on WHOLE Arrow batches of many
-    consecutive groups: gap candidates, subflow ids (grouped cumsum), the
-    trailing-segment discard, and the min-size filter are all computed
-    vectorized across every group in the batch at once; the only Python
-    loop is ``_split_positions`` over groups that actually contain a
-    candidate gap, on raw numpy slices. A per-group ``applyInPandas`` form
-    pays ~1 ms of pandas machinery (sort_values + groupby.transform +
-    frame build) PER GROUP — at 480 k flow groups ~100× the kernel's real
-    work, and at 10^9 groups (the 100 TB shape) unusable; the batched
-    kernel is flat in the group count. A group spanning an Arrow batch
-    boundary is carried into the next batch (memory bounded by the
-    largest single group).
+    Execution: ``repartition(entity)`` + ``sortWithinPartitions(entity,
+    ts, order)``, then a label column from an Arrow iterator UDF over
+    (entity, ts) only, then a native Filter on ``label >= 0``: one shuffle,
+    and pass-through columns never cross the Python boundary. The kernel
+    (``_subflow_labels``) labels whole batches of groups at once and gives
+    -1 to rows the trailing-segment discard or the min-size filter drops.
+    The UDF is nondeterministic on purpose: a deterministic one is pushed
+    below the Sort, and the kernel needs sorted input.
 
     ``assume_partitioned=True`` skips the repartition: correct whenever
     every (entity...) group already lives in ONE partition — in
@@ -214,23 +212,22 @@ def subflows_interval(
     flow_pkts_thres; pinned by the netml_subflows DuckDB gate)."""
     interval = float(interval)
     thres = max(2, int(flow_pkts_thres))
-    schema_fields = df.schema.fields
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in schema_fields]
-        + [f"`{subflow_col}` int"]
-    )
     entity_cols = list(entity_cols)
-    mapper = _make_subflow_arrow_mapper(entity_cols, ts_col, interval, thres,
-                                        subflow_col)
+
+    def label(batches: Iterator[Tuple[pa.Array, ...]]) -> Iterator[pa.Array]:
+        return _subflow_labels(batches, interval, thres)
+
+    label = arrow_udf(label, "int").asNondeterministic()
     base = df if assume_partitioned else df.repartition(*entity_cols)
     ordered = base.sortWithinPartitions(*entity_cols, ts_col, *order_cols)
-    return ordered.mapInArrow(mapper, schema=out_schema)
+    return (ordered.withColumn(subflow_col, label(*entity_cols, ts_col))
+            .filter(F.col(subflow_col) >= 0))
 
 
 def _subflow_assign(t: np.ndarray, starts: np.ndarray, interval: float,
                     thres: int):
-    """Pure-numpy core of the subflows kernel: given one batch's sorted
-    epoch-seconds array ``t`` and the group-start indices ``starts``,
+    """Pure-numpy core of the subflows kernel: given the sorted
+    epoch-seconds ``t`` of whole groups and their start indices ``starts``,
     return ``(keep, sub)`` — the surviving-row mask and each row's subflow
     id. Vectorized across every group in the batch; the only Python loop
     is ``_split_positions`` over groups that contain a candidate gap."""
@@ -274,120 +271,74 @@ def _subflow_assign(t: np.ndarray, starts: np.ndarray, interval: float,
     return keep, sub
 
 
-def _make_subflow_arrow_mapper(entity_cols, ts_col, interval, thres,
-                              subflow_col):
-    """The ``subflows_interval`` batched kernel as a ``mapInArrow``
-    function (r6 rework, guide §4.2). The r4/r5 ``mapInPandas`` form paid
-    the Arrow→pandas→Arrow conversion on EVERY column of every row — at
-    bench scale that materializes ~11M Python string objects per pass for
-    the two id columns alone, all of which the kernel merely passes
-    through. Operating on raw RecordBatches keeps pass-through columns as
-    Arrow buffers end to end: group detection runs on pyarrow compute
-    kernels, the split recurrence on numpy views of the ts column, and
-    row filtering is one ``batch.filter`` (offset rewrite, no object
-    materialization).
+def _na_mask(col: pa.Array) -> pa.Array:
+    m = pc.is_null(col)
+    if pa.types.is_floating(col.type):
+        m = pc.or_(m, pc.fill_null(pc.is_nan(col), False))
+    return m
 
-    Input contract (unchanged): batches arrive sorted by
-    (entity..., ts, order...) and each (entity...) group is contiguous
-    across the batch stream. A group spanning batch boundaries is held as
-    a LIST of zero-copy slices and concatenated ONCE when it closes.
-    Null-safety (ADVICE r4): Arrow nulls AND float NaN keys group
+
+def _to_seconds(col: pa.Array) -> np.ndarray:
+    if pa.types.is_timestamp(col.type):
+        scale = {"s": 1.0, "ms": 1e3, "us": 1e6, "ns": 1e9}[col.type.unit]
+        # epoch seconds (wall time as UTC — matches util.ts_seconds)
+        return col.cast(pa.int64()).to_numpy(zero_copy_only=False) / scale
+    return col.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+
+
+def _group_heads(keys: list, prev: list | None) -> np.ndarray:
+    """Indices of this batch's rows whose key differs from the row before.
+    Row 0 is tested against ``prev`` (the previous batch's last key row)
+    or is a head at the start of the stream. Null (or NaN) keys group
     together, matching groupBy/sort semantics."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    n = len(keys[0])
+    head = np.zeros(n, dtype=bool)
+    head[0] = prev is None
+    for i, col in enumerate(keys):
+        if prev is not None:
+            col = pa.concat_arrays([prev[i], col])
+        a, b = col.slice(0, len(col) - 1), col.slice(1)
+        # differ iff values differ (one-sided nulls count) and NOT both-NA
+        neq = pc.fill_null(pc.not_equal(b, a), True)
+        diff = pc.and_(neq, pc.invert(pc.and_(_na_mask(a), _na_mask(b))))
+        head[n - len(diff):] |= diff.to_numpy(zero_copy_only=False)
+    return np.flatnonzero(head)
 
-    def na_mask(col: "pa.Array"):
-        m = pc.is_null(col)
-        if pa.types.is_floating(col.type):
-            m = pc.or_(m, pc.fill_null(pc.is_nan(col), False))
-        return m
 
-    def to_seconds(col: "pa.Array") -> np.ndarray:
-        if pa.types.is_timestamp(col.type):
-            unit = col.type.unit
-            scale = {"s": 1.0, "ms": 1e3, "us": 1e6, "ns": 1e9}[unit]
-            # epoch seconds (wall time as UTC — matches util.ts_seconds)
-            return col.cast(pa.int64()).to_numpy(zero_copy_only=False) / scale
-        return col.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+def _subflow_labels(batches, interval: float, thres: int):
+    """The ``subflows_interval`` kernel: consumes ``(*entity, ts)`` Arrow
+    batches sorted by (entity..., ts, order...) and yields one int32 per
+    row — its subflow id, or -1 for a dropped row.
 
-    def group_starts_of(batch) -> np.ndarray:
-        n = batch.num_rows
-        change = np.zeros(n, dtype=bool)
-        change[0] = True
-        for c in entity_cols:
-            col = batch.column(batch.schema.get_field_index(c))
-            prev, cur = col.slice(0, n - 1), col.slice(1, n - 1)
-            # null (or NaN) keys group together: differ iff values differ
-            # (null-filled to True for one-sided nulls) and NOT both-NA
-            neq = pc.fill_null(pc.not_equal(cur, prev), True)
-            both_na = pc.and_(na_mask(cur), na_mask(prev))
-            diff = pc.and_(neq, pc.invert(both_na))
-            change[1:] |= diff.to_numpy(zero_copy_only=False)
-        return np.flatnonzero(change)
+    The open (possibly incomplete) last group's labels are held back until
+    the group closes; only its ts slices are kept. Output batches need not
+    match input batches, only the total row count."""
+    held: list = []  # ts slices of the open group
+    prev = None  # the previous batch's last key row
+    one = np.zeros(1, dtype=np.int64)
 
-    def same_group(a, b) -> bool:
-        # null/NaN-safe: does b's first row continue a's last group?
-        for c in entity_cols:
-            xa = a.column(a.schema.get_field_index(c))[a.num_rows - 1].as_py()
-            yb = b.column(b.schema.get_field_index(c))[0].as_py()
-            x_na = xa is None or (isinstance(xa, float) and np.isnan(xa))
-            y_na = yb is None or (isinstance(yb, float) and np.isnan(yb))
-            if x_na or y_na:
-                if not (x_na and y_na):
-                    return False
-            elif xa != yb:
-                return False
-        return True
-
-    def process(batch, starts: np.ndarray):
-        ts_idx = batch.schema.get_field_index(ts_col)
-        t = to_seconds(batch.column(ts_idx))
+    def labels(t, starts):
         keep, sub = _subflow_assign(t, starts, interval, thres)
-        out = batch.filter(pa.array(keep))
-        cols = out.columns + [pa.array(sub[keep], type=pa.int32())]
-        return pa.RecordBatch.from_arrays(
-            cols, names=batch.schema.names + [subflow_col]
-        )
+        return np.where(keep, sub, -1)
 
-    def mapper(batches):
-        # A group spanning Arrow batch boundaries is held as a LIST of
-        # zero-copy slices and concatenated ONCE when it closes (r4
-        # verdict item 4: O(m) row copies for an m-row group, not O(m·k)).
-        buf: list = []  # in-order slices of ONE (incomplete) group
-        one = np.zeros(1, dtype=np.int64)
-
-        def flush():
-            if len(buf) == 1:
-                grp = buf[0]
-            else:
-                tbl = pa.Table.from_batches(buf).combine_chunks()
-                grp = tbl.to_batches()[0] if tbl.num_rows else buf[0]
-            return process(grp, one)
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            starts = group_starts_of(batch)
-            if buf and not same_group(buf[-1], batch):
-                yield flush()
-                buf = []
-            if len(starts) == 1:
-                buf.append(batch)  # one group spans the whole batch so far
-                continue
-            if buf:
-                # first group of this batch closes the held group
-                cut = int(starts[1])
-                buf.append(batch.slice(0, cut))
-                yield flush()
-                buf = []
-                batch = batch.slice(cut)
-                starts = starts[1:] - cut
-            # hold back the (possibly incomplete) last group
-            last = int(starts[-1])
-            buf = [batch.slice(last)]
-            if last:
-                yield process(batch.slice(0, last), starts[:-1])
-        if buf:
-            yield flush()
-
-    return mapper
+    for *keys, ts in batches:
+        n = len(ts)
+        if n == 0:
+            continue
+        t = _to_seconds(ts)
+        heads = _group_heads(keys, prev)
+        prev = [k.slice(n - 1) for k in keys]
+        if len(heads) == 0:
+            held.append(t)  # the open group spans the whole batch
+            continue
+        first, last = int(heads[0]), int(heads[-1])
+        out = []
+        if held:  # the batch's first head closes the open group
+            out.append(labels(np.concatenate(held + [t[:first]]), one))
+        if last > first:
+            out.append(labels(t[first:last], heads[:-1] - first))
+        held = [t[last:]]
+        if out:
+            yield pa.array(np.concatenate(out), type=pa.int32())
+    if held:
+        yield pa.array(labels(np.concatenate(held), one), type=pa.int32())

@@ -6,13 +6,14 @@ Lifecycle (SURVEY.md §3):
 
   events --sessionize_timeout--> sessions          [1 shuffle on entity]
          --(interval<=0: duration quantile)------- [pass-1 agg -> scalar]
-         --subflows_interval--> subflows           [mapInArrow, same keys]
-         --events_to_sequences--> one row per flow [same partitioning]
+         --subflows_interval--> subflows           [label UDF + Filter, same keys]
+         --events_to_sequences--> one row per flow [re-shuffle on flow keys]
          --(dim quantile)------------------------- [pass-2 agg -> scalar]
          --kernel dispatch + fft/pad + header----> features:array<double>
 
-The two quantiles are the only driver round-trips; everything else is a
-single entity-partitioned pipeline. Feature dims per type follow
+The two quantiles are the only driver round-trips. The label UDF reports
+an unknown output partitioning, so ``events_to_sequences`` shuffles the
+subflow rows again by flow key. Feature dims per type follow
 parser.py:787-812 (IAT: dim-1, SIZE: dim, IAT_SIZE: 2*dim-1, STATS: 12,
 SAMP_*: dim-1 with rate = duration-quantile at q=0.3).
 """

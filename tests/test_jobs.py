@@ -194,3 +194,28 @@ def test_extract_features_releases_caches(spark, tmp_path, extra):
         "--timeout", "300", *extra,  # a plan no other test has cached
     ])
     assert persisted() <= before
+
+
+def test_learn_classify_release_caches(spark, tmp_path, capsys):
+    """learn releases every input's FeaturePlan cache once the feature
+    matrix is collected, classify once its scored table is materialized:
+    neither job leaves a new persisted RDD behind (same "nothing new"
+    check as above)."""
+    import jobs.classify as classify
+    import jobs.learn as learn
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    p = str(tmp_path / "model.pkl")
+    learn.main([
+        "--input-normal", EVENTS, "--input-abnormal", EVENTS,
+        "--feat-type", "IAT", "--q-interval", "0.85", "--model", "pca",
+        "--entity-cols", "user_id", "--token-col", "value",
+        "--order-cols", "event_id", "--output-model", p,
+    ])  # two inputs: two plans, a plan no other test has cached
+    assert persisted() <= before
+    classify.main(["--input", EVENTS, "--model", p])
+    assert "# flows=" in capsys.readouterr().out
+    assert persisted() <= before

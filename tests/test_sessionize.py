@@ -150,10 +150,10 @@ def test_sessionize_thres1_keeps_entity_bar(spark):
 
 
 def test_subflows_groups_spanning_arrow_batches(spark):
-    """The batched mapInPandas kernel buffers a group that spans an Arrow
-    batch boundary into the next batch. Force pathological batching (5
-    rows per batch, groups of 7+) and pin equality against the same call
-    under default batching."""
+    """The label kernel holds back a group that spans an Arrow batch
+    boundary until the group closes. Force pathological batching (5 rows
+    per batch, groups of 7+) and pin equality against the same call under
+    default batching."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
@@ -192,16 +192,16 @@ def test_subflows_groups_spanning_arrow_batches(spark):
 
 
 def test_subflow_mapper_batch_boundary_invariance():
-    """Pure-pyarrow (no Spark): _make_subflow_arrow_mapper must produce
-    the SAME rows no matter how the sorted partition stream is chopped
-    into Arrow record batches — including batch sizes of 1, groups
-    spanning dozens of batches, NaN entity keys AND genuine Arrow nulls
-    (null-safe grouping, ADVICE r4; Arrow rework r6)."""
+    """Pure-pyarrow (no Spark): the subflows label kernel must give every
+    row the SAME label no matter how the sorted partition stream is
+    chopped into Arrow batches — including batch sizes of 1, a group
+    spanning hundreds of batches, float NaN entity keys AND genuine Arrow
+    nulls (null-safe grouping) — and exactly one label per input row."""
     import numpy as np
     import pandas as pd
     import pyarrow as pa
 
-    from netml_spark.operators.sessionize import _make_subflow_arrow_mapper
+    from netml_spark.operators.sessionize import _subflow_labels
 
     rng = np.random.default_rng(5)
     rows = []
@@ -214,43 +214,40 @@ def test_subflow_mapper_batch_boundary_invariance():
     pdf = (pd.DataFrame(rows, columns=["doc_id", "session_id", "ts", "seq"])
            .sort_values(["doc_id", "session_id", "ts", "seq"], na_position="first")
            .reset_index(drop=True))
-    # a second variant where the NaN keys are REAL Arrow nulls
-    tbl = pa.Table.from_pandas(pdf, preserve_index=False)
+    # float NaN keys kept as NaN values (from_pandas=False) ...
+    nan_key = pa.array(pdf["doc_id"].to_numpy(), type=pa.float64(),
+                       from_pandas=False)
+    assert nan_key.null_count == 0 and np.isnan(nan_key.to_numpy()).any()
+    # ... and as REAL Arrow nulls (what Spark ships for SQL NULL)
+    null_key = pa.array(pdf["doc_id"], type=pa.float64(), from_pandas=True)
+    assert null_key.null_count > 0
+    session = pa.array(pdf["session_id"], type=pa.int64())
+    ts = pa.array(pdf["ts"], type=pa.float64())
 
-    def run(batch_size, table):
-        mapper = _make_subflow_arrow_mapper(["doc_id", "session_id"], "ts",
-                                            50.0, 2, "subflow_id")
-        chunks = table.combine_chunks().to_batches(max_chunksize=batch_size)
-        outs = [o for o in mapper(iter(chunks)) if o.num_rows]
-        out = pa.Table.from_batches(outs).to_pandas()
-        return (out.sort_values(["doc_id", "session_id", "ts", "seq"],
-                                na_position="first")
-                .reset_index(drop=True))
+    def labels_of(batch_size, key):
+        batches = ((key.slice(a, batch_size), session.slice(a, batch_size),
+                    ts.slice(a, batch_size))
+                   for a in range(0, len(pdf), batch_size))
+        out = list(_subflow_labels(batches, 50.0, 2))
+        got = np.concatenate([o.to_numpy() for o in out])
+        assert all(o.type == pa.int32() for o in out)
+        assert len(got) == len(pdf)  # exactly one label per input row
+        return got
 
-    base = run(len(pdf), tbl)  # single batch: the trusted DuckDB-gated path
-    assert len(base) > 0 and base["subflow_id"].max() >= 1
-    assert base["doc_id"].isna().any()  # NaN group survived the filter
-    for bs in (1, 3, 7, 64):
-        pd.testing.assert_frame_equal(run(bs, tbl), base)
-    # Arrow-null keys (what Spark actually ships for SQL NULL): the NaN
-    # doubles become nulls; grouping must be identical
-    null_key = pa.array(
-        [None if (v is not None and np.isnan(v)) else v
-         for v in tbl.column("doc_id").to_pylist()],
-        type=pa.float64(),
-    )
-    tbl_null = tbl.set_column(0, "doc_id", null_key)
-    base_null = run(len(pdf), tbl_null)
-    assert base_null["doc_id"].isna().any()
-    for bs in (1, 7, 64):
-        pd.testing.assert_frame_equal(run(bs, tbl_null), base_null)
+    for key in (nan_key, null_key):
+        base = labels_of(len(pdf), key)  # single batch: the DuckDB-gated path
+        assert base.max() >= 1 and (base < 0).any()  # splits and drops occur
+        assert (base[pdf["doc_id"].isna().to_numpy()] >= 0).any()  # NaN group kept
+        mega = (pdf["doc_id"] == 2).to_numpy()
+        assert mega.sum() == 400 and base[mega].max() >= 1
+        for bs in (1, 3, 7, 64):
+            np.testing.assert_array_equal(labels_of(bs, key), base)
 
 
 def test_subflows_mega_group_spanning_many_batches(spark):
-    """r4 verdict item 4: one mega-group spanning >=50 tiny Arrow batches
-    must be buffered as a LIST and concatenated once (the old per-batch
-    pd.concat re-copied the whole buffer per batch, O(m*k)); equality vs
-    default batching pins the rework."""
+    """One mega-group spanning 80 tiny Arrow batches: the label kernel
+    holds its ts slices and labels it once when it closes; equality vs
+    default batching pins it."""
     import numpy as np
     import pandas as pd
 

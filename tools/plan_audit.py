@@ -73,6 +73,20 @@ def main():
     results["subflows_chain_single_shuffle"] = (
         len(re.findall(r"\(\d+\) Exchange", p)) == 1
     )
+    # 2c. ... and its kernel is a NARROW label UDF: one ArrowEvalPython
+    # whose arguments are only entity + ts (pass-through columns never
+    # reach Python), evaluated above the Sort (a deterministic UDF would
+    # be pushed below it and lose the order), and no MapInArrow.
+    evals = re.findall(r"\(\d+\) ArrowEvalPython\n.*\nArguments: \[\w+\(([^)]*)\)", p)
+    udf_args = [a.strip().split("#")[0] for a in evals[0].split(",")] if evals else []
+    results["subflows_narrow_udf"] = (
+        len(evals) == 1
+        and udf_args == ["user_id", "session_id", "ts"]
+        and re.search(r"ArrowEvalPython \(\d+\)\n\s*\+- Sort", p) is not None
+        and "MapInArrow" not in p
+    )
+    if not results["subflows_narrow_udf"]:
+        print(f"  (ArrowEvalPython nodes: {len(evals)}, UDF args: {udf_args})")
 
     # 3. label join broadcasts
     import pandas as pd
