@@ -100,8 +100,7 @@ def main(argv=None):
             F.coalesce(F.sum("prediction"), F.lit(0)).alias("anom"),
         ).collect()[0]
     finally:
-        # scored is materialized now; the plan's sequences cache is not
-        # read again
+        # scored is materialized: the sequences cache is not read again
         plan.release()
 
     # Report tail on the driver: at default verbosity only anomalies are

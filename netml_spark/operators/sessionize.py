@@ -212,7 +212,6 @@ def subflows_interval(
     flow_pkts_thres; pinned by the netml_subflows DuckDB gate)."""
     interval = float(interval)
     thres = max(2, int(flow_pkts_thres))
-    entity_cols = list(entity_cols)
 
     def label(batches: Iterator[Tuple[pa.Array, ...]]) -> Iterator[pa.Array]:
         return _subflow_labels(batches, interval, thres)

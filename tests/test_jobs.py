@@ -173,49 +173,42 @@ def test_classify_empty_input_zero_report(spark, tmp_path, capsys, model_path):
 
 
 @pytest.mark.parametrize("extra", [[], ["--checkpoint", "ckpt",
-                                        "--partition-col", "event_type"]])
+                                        "--partition-col", "event_type"],
+                                   "learn+classify"])
 def test_extract_features_releases_caches(spark, tmp_path, extra):
     """extract_features adds no persisted RDD: the plain path releases the
     plan's sequences cache after its write, the checkpoint path after each
-    partition's manifest record. (Earlier tests in this session may hold
-    caches; a release can drop one of them when Spark shares the entry
-    between equal plans, so the check is "nothing new", not "equal".)"""
-    import jobs.extract_features as ef
-
-    def persisted():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
-    before = persisted()
-    extra = [str(tmp_path / a) if a == "ckpt" else a for a in extra]
-    ef.main([
-        "--input", EVENTS, "--output", str(tmp_path / "features"),
-        "--feat-type", "SAMP_NUM", "--fft", "--entity-cols", "user_id",
-        "--token-col", "value", "--order-cols", "event_id",
-        "--timeout", "300", *extra,  # a plan no other test has cached
-    ])
-    assert persisted() <= before
-
-
-def test_learn_classify_release_caches(spark, tmp_path, capsys):
-    """learn releases every input's FeaturePlan cache once the feature
-    matrix is collected, classify once its scored table is materialized:
-    neither job leaves a new persisted RDD behind (same "nothing new"
-    check as above)."""
+    partition's manifest record. The "learn+classify" case runs learn over
+    two inputs (two plans, released once the matrix is collected), then
+    classify (released once its scored table is materialized). (Earlier
+    tests in this session may hold caches; a release can drop one of them
+    when Spark shares the entry between equal plans, so the check is
+    "nothing new", not "equal".)"""
     import jobs.classify as classify
+    import jobs.extract_features as ef
     import jobs.learn as learn
 
     def persisted():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     before = persisted()
-    p = str(tmp_path / "model.pkl")
-    learn.main([
-        "--input-normal", EVENTS, "--input-abnormal", EVENTS,
-        "--feat-type", "IAT", "--q-interval", "0.85", "--model", "pca",
-        "--entity-cols", "user_id", "--token-col", "value",
-        "--order-cols", "event_id", "--output-model", p,
-    ])  # two inputs: two plans, a plan no other test has cached
+    if extra == "learn+classify":
+        model = str(tmp_path / "model.pkl")
+        learn.main([
+            "--input-normal", EVENTS, "--input-abnormal", EVENTS,
+            "--feat-type", "IAT", "--q-interval", "0.85", "--model", "pca",
+            "--entity-cols", "user_id", "--token-col", "value",
+            "--order-cols", "event_id", "--output-model", model,
+        ])  # q-interval 0.85: a plan no other test has cached
+        assert persisted() <= before
+        classify.main(["--input", EVENTS, "--model", model])
+    else:
+        extra = [str(tmp_path / a) if a == "ckpt" else a for a in extra]
+        ef.main([
+            "--input", EVENTS, "--output", str(tmp_path / "features"),
+            "--feat-type", "SAMP_NUM", "--fft", "--entity-cols", "user_id",
+            "--token-col", "value", "--order-cols", "event_id",
+            "--timeout", "300", *extra,  # a plan no other test has cached
+        ])
     assert persisted() <= before
-    classify.main(["--input", EVENTS, "--model", p])
-    assert "# flows=" in capsys.readouterr().out
-    assert persisted() <= before
+
