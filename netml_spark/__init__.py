@@ -3,17 +3,18 @@
 Recasts the capabilities of noise-lab/netml (reference at /root/reference,
 see SURVEY.md) as declarative, Catalyst-optimizable DataFrame operators:
 
-- L1 relational temporal core: gap sessionization, as-of join, backfill,
-  lag/lead, interval resample (``operators.sessionize``, ``operators.asof``).
-- L2 feature kernels: vectorized Arrow/pandas-UDF transcriptions of the
-  reference's per-flow numeric loops (IAT, SIZE, IAT_SIZE, SAMP_NUM,
-  SAMP_SIZE, FFT) plus a fully Catalyst-native STATS aggregate
+- L1 relational temporal core: gap sessionization, grid-aligned interval
+  re-split, as-of join, backfill (``operators.sessionize``,
+  ``operators.asof``).
+- L2 feature kernels: the reference's per-flow numeric loops as native
+  array expressions (IAT, SIZE, IAT_SIZE) and Arrow UDFs (SAMP_NUM,
+  SAMP_SIZE, FFT), plus a fully Catalyst-native STATS aggregate
   (``operators.kernels``, ``operators.stats``).
 - L3 pipeline: ``FeaturePlan`` replicating the reference's
   ``flow2features`` dispatch (``pipeline``), checkpoint manifest
   (``manifest``), streaming twin (``streaming``).
 - Training-data ops: dedup (exact/minhash/simhash/jaccard), similarity
-  search, text analysis, multimodal plumbing (``operators.dedup`` etc.).
+  search, text analysis (``operators.dedup`` etc.).
 
 Everything here is public-knowledge PySpark; no code is copied from the
 reference (its engine is row-at-a-time single-process Python — see

@@ -1,4 +1,4 @@
-"""Point-in-time (as-of) join, backfill, lag/lead — the L1 temporal core.
+"""Point-in-time (as-of) join and backfill — the L1 temporal core.
 
 The north rule requires as-of feature lookup at entity×timestamp with zero
 temporal leakage (reference analogue: the exact-key label probe,
@@ -178,22 +178,4 @@ def backfill(
     out = df
     for c in cols:
         out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
-    return out
-
-
-def with_lag_lead(
-    df: DataFrame,
-    cols: Sequence[str],
-    entity_cols: Sequence[str] = ("doc_id",),
-    ts_col: str = "ts",
-    order_cols: Sequence[str] = (),
-    n: int = 1,
-) -> DataFrame:
-    """Attach lag/lead columns (and the inter-event gap in seconds)."""
-    w = Window.partitionBy(*entity_cols).orderBy(ts_col, *order_cols)
-    ts_d = ts_seconds(df, ts_col)
-    out = df.withColumn("gap_s", ts_d - F.lag(ts_d, n).over(w))
-    for c in cols:
-        out = out.withColumn(f"{c}_lag{n}", F.lag(c, n).over(w))
-        out = out.withColumn(f"{c}_lead{n}", F.lead(c, n).over(w))
     return out

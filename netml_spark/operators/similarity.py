@@ -12,10 +12,9 @@
   are NATIVE sequential-fold dot products against literal centroids —
   fully codegen, no plan-time driver action, and bit-reproducible in the
   DuckDB oracle (same left-fold order as list_reduce).
-- Centroids: ``ivf_random_centroids`` (seeded, data-independent — the
-  oracle-checkable default) or ``ivf_train_centroids`` (mini k-means on a
-  deterministic hash-ordered corpus sample — unbiased, unlike a
-  limit().collect() of the first partitions; better cells, data-dependent).
+- Centroids: ``ivf_random_centroids`` (seeded, data-independent, so the
+  DuckDB oracle embeds the same literals) by default; any caller-supplied
+  unit-centroid array works the same way.
 
 Scale notes: at 10^12 rows the IVF cell id becomes the partition/cluster
 key (write the corpus bucketed by cell); probing touches only matching
@@ -65,41 +64,6 @@ def ivf_random_centroids(n_cells: int, dim: int, seed: int = 42) -> np.ndarray:
     return C / np.linalg.norm(C, axis=1, keepdims=True)
 
 
-def ivf_train_centroids(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    sample_size: int = 4096,
-    seed: int = 42,
-    iters: int = 5,
-) -> np.ndarray:
-    """Mini k-means on a deterministic hash-ordered sample of the corpus.
-
-    The sample is the ``sample_size`` rows with smallest
-    xxhash64(vector-as-string) — a uniform pseudo-random subset computed
-    with a per-partition top-n (TakeOrdered; no full sort, no bias toward
-    the first partitions like round 1's limit().collect())."""
-    rows = (
-        corpus.select(F.col(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col("v").cast("string")))
-        .limit(int(sample_size))
-        .collect()
-    )
-    X = np.stack([np.asarray(r.v, dtype=np.float64) for r in rows])
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    rng = np.random.default_rng(seed)
-    C = X[rng.choice(len(X), size=n_cells, replace=False)]
-    for _ in range(iters):
-        sims = X @ C.T
-        assign = np.argmax(sims, axis=1)
-        for j in range(n_cells):
-            m = assign == j
-            if m.any():
-                v = X[m].mean(axis=0)
-                C[j] = v / max(np.linalg.norm(v), 1e-12)
-    return C
-
-
 def _cell_dots(vec_col, centroids: np.ndarray):
     """Array of sequential-fold dots of the (double-cast) vector against
     every centroid. Argmax over these is scale-invariant in the vector
@@ -125,8 +89,9 @@ def ivf_topk(
     """IVF-partitioned ANN: assign corpus to nearest centroid cell (first
     argmax wins ties), probe the n_probe nearest cells per query
     (dot-descending, cell-id tie-break), exact cosine re-rank within the
-    candidates. Pass trained ``centroids`` (ivf_train_centroids) for
-    data-adapted cells; the default is seeded random unit centroids."""
+    candidates. ``centroids`` defaults to seeded random unit centroids
+    (``ivf_random_centroids``); pass an ``(n_cells, dim)`` array to use
+    other cells."""
     if centroids is None:
         centroids = ivf_random_centroids(n_cells, dim, seed)
     n_cells = len(centroids)

@@ -3,8 +3,7 @@
 AQE's skew-join splitting covers joins, but NOT window / grouped-map /
 ordered-collect passes — a single giant entity still lands on one task.
 What the measurements say (BENCH/BASELINE.md skew tables): pick the
-remedy by the PASS CLASS that actually serializes, detected with
-``heavy_hitters``:
+remedy by the PASS CLASS that actually serializes:
 
 - window/sort passes (sessionize)      -> ``bounded_sessionize`` (3.7x
   over the naive window sort on the 16M heavy-hitter corpus)
@@ -16,8 +15,10 @@ remedy by the PASS CLASS that actually serializes, detected with
   0.46-0.58x — slower — on that corpus); reach for ``salted_agg`` only
   when the final per-key group state itself blows up AND the partials
   are mergeable.
-- ``heavy_hitters``: cheap approximate heavy-key detector (sample + count)
-  used to decide when a skew-aware plan is worth the extra shuffle.
+
+Each remedy costs one extra shuffle, so the caller picks it explicitly
+for the entity sizes it knows; the skew tables put the wall-time
+crossover for ordered collects between 0.8M and 3.2M rows on one entity.
 
 Sessionization itself cannot be salted without breaking gap semantics
 across salt boundaries (a session may span salts); the engine's stance for
@@ -37,20 +38,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 AGGS = ("count", "sum", "min", "max", "mean")
-
-
-def heavy_hitters(
-    df: DataFrame, key_cols: Sequence[str], threshold_rows: int = 1_000_000,
-    fraction: float = 0.001,
-) -> DataFrame:
-    """Approximate keys whose row count exceeds threshold_rows: sample,
-    count, scale. One tiny job on a fraction of the data."""
-    est = (
-        df.sample(fraction=fraction, seed=42)
-        .groupBy(*key_cols)
-        .agg((F.count(F.lit(1)) / fraction).alias("est_rows"))
-    )
-    return est.filter(F.col("est_rows") >= threshold_rows)
 
 
 def salted_agg(
@@ -113,48 +100,6 @@ def salted_agg(
     if "max" in aggs:
         out_cols.append(F.col("_max").alias(f"max_{value_col}"))
     return merged.select(*out_cols)
-
-
-def sessionize_auto(
-    df: DataFrame,
-    entity_cols: Sequence[str],
-    ts_col: str,
-    gap: float,
-    bucket_width: float | None = None,
-    threshold_rows: int = 2_000_000,
-    fraction: float = 0.001,
-    order_cols: Sequence[str] = (),
-    session_col: str = "session_id",
-) -> DataFrame:
-    """``heavy_hitters``-gated sessionizer — the documented auto-selector
-    (r4 verdict): ONE tiny sample job decides the plan. No heavy key ->
-    the exact window sessionizer; any entity estimated above
-    ``threshold_rows`` -> ``bounded_sessionize`` (bucket_width defaults
-    to 1000x gap, so ~0.1% of the hot entity's sessions split at bucket
-    boundaries — the documented approximation, taken only when the exact
-    plan would serialize one task on the hot entity's sort).
-
-    ``threshold_rows`` default calibrated by the certified skew rows
-    (BENCH/BASELINE.md): at a 0.8M-row hot entity bounded already edges
-    the naive window sort (1.16x), at 3.2M it wins 3.70x — the default
-    engages the remedy from 2M, below which the boundary-split
-    approximation is not worth a ~tie.
-
-    The session id is a STRING on both paths (the bounded path's ids are
-    bucket-qualified) so the output schema does not depend on the data.
-    The sample job is a deliberate plan-time action, same class as the
-    two-pass quantile scalars (SURVEY.md §3.1)."""
-    from netml_spark.operators.sessionize import sessionize
-
-    hot = heavy_hitters(df, entity_cols, threshold_rows=threshold_rows,
-                        fraction=fraction).limit(1).count()
-    if hot:
-        width = float(bucket_width) if bucket_width else 1000.0 * float(gap)
-        return bounded_sessionize(df, entity_cols, ts_col, gap, width,
-                                  order_cols, session_col)
-    out = sessionize(df, entity_cols, ts_col, gap, order_cols=order_cols,
-                     session_col=session_col)
-    return out.withColumn(session_col, F.col(session_col).cast("string"))
 
 
 def bounded_sequence_build(
@@ -222,45 +167,6 @@ def bounded_sequence_build(
         F.size("_p").cast("int").alias("n_tok"),
         *carry_cols,
     )
-
-
-def sequence_build_auto(
-    df: DataFrame,
-    entity_cols: Sequence[str],
-    ts_col: str,
-    token_col: str,
-    bucket_width: float = 3600.0,
-    threshold_rows: int = 2_000_000,
-    fraction: float = 0.001,
-    order_cols: Sequence[str] = (),
-    carry_cols: Sequence[str] = (),
-) -> DataFrame:
-    """``heavy_hitters``-gated ordered collect — the collect-class twin of
-    ``sessionize_auto``. Unlike the sessionize selector, BOTH paths here
-    are exact and schema-identical, so the gate trades only plan shape:
-    no heavy key -> the one-shuffle ``events_to_sequences``; any entity
-    estimated above ``threshold_rows`` -> ``bounded_sequence_build``'s
-    two-stage time-bucket merge, which costs a second (tiny, one row per
-    (entity, bucket)) shuffle but never sorts a hot entity's whole
-    history in one task's aggregation buffer. ONE sample job decides —
-    the same deliberate plan-time action class as the two-pass quantile
-    scalars (SURVEY.md §3.1).
-
-    ``threshold_rows`` default calibrated by the three certified skew
-    rows (BENCH/BASELINE.md): naive wins 1.67x at a 0.8M-row hot entity,
-    bounded wins 1.44x at 3.2M, ~tie (0.84x) at 12.8M where bounded's
-    real value is bounded per-task sort memory — the wall-time crossover
-    sits between 0.8M and 3.2M, and 2M also puts the memory-risk
-    asymmetry on the safe side."""
-    from netml_spark.operators.sequences import events_to_sequences
-
-    hot = heavy_hitters(df, entity_cols, threshold_rows=threshold_rows,
-                        fraction=fraction).limit(1).count()
-    if hot:
-        return bounded_sequence_build(df, entity_cols, ts_col, token_col,
-                                      bucket_width, order_cols, carry_cols)
-    return events_to_sequences(df, entity_cols, ts_col, token_col,
-                               order_cols, carry_cols)
 
 
 def bounded_sessionize(

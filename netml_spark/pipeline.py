@@ -48,7 +48,7 @@ class FeaturePlan:
     interval: float = 0.0  # <=0: derive from duration quantile (parser.py:729)
     timeout: float = 600.0  # tcp_timeout == udp_timeout default (parser.py:80)
     flow_pkts_thres: int = 2
-    approx_quantiles: bool = False  # percentile_approx on the bench path
+    approx_quantiles: bool = False  # percentile_approx (extract_features --approx-quantiles)
     # filled by extract():
     dim: int | None = field(default=None, init=False)
     split_interval: float | None = field(default=None, init=False)
@@ -89,6 +89,13 @@ class FeaturePlan:
         # caller did (r3 verdict item 6). self.dim/split_interval then hold
         # the placeholders, flagged by self.empty_input.
         self.empty_input = False
+
+        # An event without a time (null, or NaN for double input) has no
+        # place in a session or on the split grid: drop it once, here.
+        keep = F.col(ts_col).isNotNull()
+        if dict(events.dtypes)[ts_col] in ("double", "float"):
+            keep &= ~F.isnan(ts_col)
+        events = events.filter(keep)
 
         # stage 1: timeout sessionize (parser.py:80-206). The per-session
         # min-size filter is DEFERRED (r6): the subflow min-size filter in

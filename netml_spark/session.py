@@ -48,11 +48,10 @@ def get_spark(
         # (mapInArrow slice + kernel dispatch + numpy setup). 8192 rows
         # amortizes that 4x while the BYTE cap below (Spark 4) keeps
         # worst-case batches of long token arrays memory-bounded — the
-        # byte cap, not the row cap, is the real safety knob.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "8192"))
-        .config("spark.sql.execution.arrow.maxBytesPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BYTES", str(32 * 1024 * 1024)))
+        # byte cap, not the row cap, is the real safety knob. Callers that
+        # need other sizes pass them through extra_conf.
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(32 * 1024 * 1024))
         # AQE: runtime coalesce + skew-join splitting for heavy-hitter keys.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -140,3 +140,41 @@ def test_empty_input_error_is_distinct(spark):
         exact_quantile(df, "duration", 0.9)
     with pytest.raises(AnalysisException):
         exact_quantile(df, "no_such_column", 0.9)
+
+
+@pytest.mark.parametrize("ts_type", ["double", "timestamp"])
+@pytest.mark.parametrize("interval", [10.0, 0.0], ids=["forced_split", "derived"])
+def test_featureplan_drops_null_ts_rows(spark, interval, ts_type):
+    """A null ts (or a NaN one, for double input) places an event nowhere
+    in time, so extract drops it before sessionizing: the output equals
+    that of the input without those rows. Unfiltered, a null at the head
+    of a session that splits anchors the subflows grid on NaN and the
+    kernel raises; with a derived interval the null rides along in
+    ``times``."""
+    from pyspark.sql import functions as F
+
+    # four bursts 30 s apart: one 600 s-timeout session per entity that a
+    # 10 s interval splits at every burst
+    times = [30.0 * b + i for b in range(4) for i in range(4)]
+    clean = [(e, t0 + t, i % 7, i) for e, t0 in (("a", 0.0), ("b", 1000.0))
+             for i, t in enumerate(times)]
+    bad = [("a", None, 3, -1)]
+    if ts_type == "double":
+        bad.append(("b", float("nan"), 4, -1))
+    schema = "doc_id string, ts double, token int, seq long"
+
+    def run(rows):
+        df = spark.createDataFrame(rows, schema)
+        if ts_type == "timestamp":
+            df = df.withColumn("ts", F.timestamp_seconds("ts"))
+        plan = FeaturePlan(feat_type="IAT", interval=interval)
+        out = plan.extract(df, ("doc_id",), "ts", "token", ("seq",), carry_cols=())
+        rows = out.select("doc_id", "session_id", "subflow_id", "times",
+                          "features").collect()
+        return sorted(tuple(r) for r in rows), plan.split_interval
+
+    want, want_interval = run(clean)
+    got, got_interval = run(clean + bad)
+    assert len(want) > (2 if interval else 0)
+    assert got_interval == want_interval
+    assert got == want

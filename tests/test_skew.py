@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from netml_spark.operators import sessionize
 from netml_spark.operators.skew import (
-    bounded_sequence_build, bounded_sessionize, heavy_hitters, salted_agg,
+    bounded_sequence_build, bounded_sessionize, salted_agg,
 )
 
 
@@ -56,17 +56,6 @@ def test_salted_agg_matches_plain(spark):
     np.testing.assert_allclose(got_d["sum_v"], exp_d["sum_v"], rtol=1e-9)
 
 
-def test_heavy_hitters_detects(spark):
-    rng = np.random.default_rng(5)
-    pdf = pd.DataFrame({
-        "k": np.where(rng.random(50_000) < 0.6, "big", rng.integers(0, 200, 50_000).astype(str)),
-    })
-    hh = heavy_hitters(spark.createDataFrame(pdf), ("k",),
-                       threshold_rows=10_000, fraction=0.05).toPandas()
-    assert "big" in set(hh["k"])
-    assert len(hh) <= 3
-
-
 def test_bounded_sessionize_away_from_boundaries(spark):
     rng = np.random.default_rng(9)
     # sessions well inside buckets: bucket 10_000s, gap 600s, sessions ~100s
@@ -90,38 +79,6 @@ def test_bounded_sessionize_away_from_boundaries(spark):
     # sessions that straddle a 10k boundary may split; allow only those
     assert (c >= p).all()
     assert (c - p).sum() <= 3  # rare boundary splits at most
-
-
-def test_sessionize_auto_selects_by_detection(spark):
-    """sessionize_auto (r4 verdict: heavy_hitters as the documented
-    auto-selector): no heavy key -> exact window sessionizer (string-cast
-    ids equal the plain path); a detected heavy key -> bounded plan
-    (bucket-qualified string ids), same row coverage."""
-    from netml_spark.operators.skew import sessionize_auto
-
-    rng = np.random.default_rng(17)
-    n = 40_000
-    pdf = pd.DataFrame({
-        "ent": np.where(rng.random(n) < 0.5, "HOT",
-                        rng.integers(0, 500, n).astype(str)),
-        "ts": 1_700_000_000.0 + rng.uniform(0, 86_400.0, n),
-    })
-    df = spark.createDataFrame(pdf)
-
-    # threshold far above every key: exact path
-    exact = sessionize_auto(df, ("ent",), "ts", 600.0,
-                            threshold_rows=10**9, fraction=0.05).toPandas()
-    plain = sessionize(df, ("ent",), "ts", 600.0).toPandas()
-    key = ["ent", "ts"]
-    m = (exact.sort_values(key).reset_index(drop=True),
-         plain.sort_values(key).reset_index(drop=True))
-    assert (m[0]["session_id"] == m[1]["session_id"].astype(str)).all()
-
-    # threshold below the hot key: bounded path (bucket-qualified ids)
-    bounded = sessionize_auto(df, ("ent",), "ts", 600.0,
-                              threshold_rows=5_000, fraction=0.05).toPandas()
-    assert len(bounded) == n  # no rows lost
-    assert bounded["session_id"].str.contains("_").any()
 
 
 def test_bounded_sequence_build_exact(spark):
@@ -177,43 +134,3 @@ def test_bounded_sequence_build_exact(spark):
     np.testing.assert_array_equal(
         np.asarray(plain_o.loc["HOT", "tokens"]),
         np.asarray(bounded_o.loc["HOT", "tokens"]))
-
-
-def test_sequence_build_auto_both_paths_exact(spark):
-    """sequence_build_auto: both selector outcomes return the SAME rows
-    (both paths are exact, unlike the sessionize selector) — only the
-    plan shape changes. The hot-key branch must actually take the
-    two-stage bounded plan (two exchanges in the physical plan)."""
-    import re
-
-    from netml_spark.operators.skew import sequence_build_auto
-
-    rng = np.random.default_rng(29)
-    n = 30_000
-    pdf = pd.DataFrame({
-        "ent": np.where(rng.random(n) < 0.5, "HOT",
-                        rng.integers(0, 300, n).astype(str)),
-        "ts": 1_700_000_000.0 + rng.uniform(0, 86_400.0, n),
-        "token": rng.integers(0, 1000, n),
-    })
-    df = spark.createDataFrame(pdf)
-
-    cold = sequence_build_auto(df, ("ent",), "ts", "token",
-                               bucket_width=3600.0,
-                               threshold_rows=10**9, fraction=0.05)
-    hot = sequence_build_auto(df, ("ent",), "ts", "token",
-                              bucket_width=3600.0,
-                              threshold_rows=5_000, fraction=0.05)
-    n_ex = len(re.findall(r"\(\d+\) Exchange",
-                          hot._sc._jvm.PythonSQLUtils.explainString(
-                              hot._jdf.queryExecution(), "formatted")))
-    assert n_ex == 2  # bounded two-stage plan selected
-
-    a = cold.toPandas().set_index("ent").sort_index()
-    b = hot.toPandas().set_index("ent").sort_index()
-    assert (a["n_tok"] == b["n_tok"]).all() and len(a) == len(b)
-    for k in ("HOT", a.index[1]):
-        np.testing.assert_array_equal(np.asarray(a.loc[k, "tokens"]),
-                                      np.asarray(b.loc[k, "tokens"]))
-        np.testing.assert_array_equal(np.asarray(a.loc[k, "times"]),
-                                      np.asarray(b.loc[k, "times"]))

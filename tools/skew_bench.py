@@ -55,9 +55,8 @@ CPUS = int(os.environ.get("SKEW_CPUS", "16"))
 # SKEW_HOT_FRAC picks the regime: 0.2 (default) puts the hot entity a
 # bit over per-core average work — the honest "mild skew" shape where
 # the remedies' extra exchange LOSES; 0.8 makes one entity dominate the
-# corpus (hot rows >> total/cores) — the shape the remedies (and the
-# 5M-row heavy_hitters gate in sequence_build_auto/sessionize_auto)
-# exist for. Measuring BOTH sides calibrates the auto threshold.
+# corpus (hot rows >> total/cores) — the shape the remedies exist for.
+# Measuring BOTH sides locates the crossover where a remedy starts to pay.
 HOT_FRAC = float(os.environ.get("SKEW_HOT_FRAC", "0.20"))
 N_COLD = 200_000
 GAP = 30.0
