@@ -46,7 +46,8 @@ def main(argv=None):
                     help="manifest root for idempotent per-partition resume")
     ap.add_argument("--partition-col", default="source")
     ap.add_argument("--approx-quantiles", action="store_true",
-                    help="percentile_approx for the two-pass scalars (bench path)")
+                    help="percentile_approx for the two-pass scalars (pinned "
+                         "accuracy instead of exact percentiles)")
     args = ap.parse_args(argv)
 
     from pyspark.sql import functions as F

@@ -6,10 +6,11 @@ see SURVEY.md) as declarative, Catalyst-optimizable DataFrame operators:
 - L1 relational temporal core: gap sessionization, grid-aligned interval
   re-split, as-of join, backfill (``operators.sessionize``,
   ``operators.asof``).
-- L2 feature kernels: the reference's per-flow numeric loops as native
-  array expressions (IAT, SIZE, IAT_SIZE) and Arrow UDFs (SAMP_NUM,
-  SAMP_SIZE, FFT), plus a fully Catalyst-native STATS aggregate
-  (``operators.kernels``, ``operators.stats``).
+- L2 feature kernels: the reference's per-flow numeric loops as Arrow
+  scalar UDFs over flat value buffers (IAT, IAT_SIZE, SAMP_NUM, SAMP_SIZE,
+  FFT; one ArrowEvalPython node per select), SIZE as a native cast, plus
+  a fully Catalyst-native STATS aggregate (``operators.kernels``,
+  ``operators.stats``).
 - L3 pipeline: ``FeaturePlan`` replicating the reference's
   ``flow2features`` dispatch (``pipeline``), checkpoint manifest
   (``manifest``), streaming twin (``streaming``).

@@ -1,12 +1,17 @@
 """Per-sequence feature kernels (reference parser.py:354-652).
 
 Operate on array columns of the sequences shape (times:array<double>,
-tokens:array<int>). Wherever semantics allow, the kernel is a *native array
-expression* (JVM-side, whole-stage codegen, zero Python): IAT, SIZE,
-IAT_SIZE, pad/truncate, header flag counts. The genuinely sequential or
-numpy-only kernels (SAMP's dual 500-cap loop, FFT) are Arrow scalar UDFs:
-each reads a batch's flat value buffer plus row lengths and returns one
-ListArray, with no pandas conversion and no per-row Python on the fast path.
+tokens:array<int>). Kernels that are plain array expressions stay native
+and codegen'd: SIZE (one cast), pad/truncate, the TTL part of the header.
+Every kernel that walks the elements of a row (IAT, IAT_SIZE, SAMP, FFT)
+is an Arrow scalar UDF: each reads a batch's flat value buffers plus row
+lengths and returns one ListArray, with no pandas conversion and no
+per-row Python on the fast path. Spark's higher-order lambdas
+(``zip_with``/``transform``/``aggregate``) are no faster: they are
+``CodegenFallback`` and box every element (about 300 ns each), while all
+Arrow UDFs of one select share ONE ArrowEvalPython node, where
+``times``/``tokens`` cross the boundary once and chained calls such as
+``fft_udf(n)(iat("times"))`` run inside the Python worker.
 
 Each kernel cites the reference lines whose output it reproduces; parity is
 pinned by tests vs the numpy oracle (netml_spark.oracle.netml_ref).
@@ -20,47 +25,23 @@ import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import ArrayType, DoubleType
 
 from netml_spark.oracle import netml_ref
+
+# A typed return type: a DDL string would need an active session to parse
+# when the module-level UDFs below are defined.
+_DOUBLES = ArrayType(DoubleType())
 
 # ---------------------------------------------------------------------------
 # Native array-expression kernels
 # ---------------------------------------------------------------------------
 
 
-def iat(times: Column | str) -> Column:
-    """Inter-arrival gaps: np.diff twin (parser.py:354-375). Native:
-    zip_with of the array against its own tail — no shuffle, no Python."""
-    t = F.col(times) if isinstance(times, str) else times
-    n = F.size(t)
-    return F.when(
-        n >= 2,
-        F.zip_with(
-            F.slice(t, 2, n - 1), F.slice(t, 1, n - 1), lambda a, b: a - b
-        ),
-    ).otherwise(F.array().cast("array<double>"))
-
-
 def sizes_double(tokens: Column | str) -> Column:
     """SIZE feature: the token/size series as array<double> (parser.py:378-398)."""
     t = F.col(tokens) if isinstance(tokens, str) else tokens
-    return F.transform(t, lambda x: x.cast("double"))
-
-
-def iat_size(times: Column | str, tokens: Column | str) -> Column:
-    """Interleave [iat_0, size_0, ..., iat_{n-2}, size_{n-2}, size_{n-1}]
-    (parser.py:401-427; size_j pairs with iat_j, last size appended).
-    Native: flatten(zip_with(iats, sizes[:n-1], (a,b)->array(a,b))) ++ [last]."""
-    t = F.col(times) if isinstance(times, str) else times
-    s = sizes_double(tokens)
-    n = F.size(t)
-    gaps = iat(t)
-    pairs = F.flatten(
-        F.zip_with(gaps, F.slice(s, 1, n - 1), lambda a, b: F.array(a, b))
-    )
-    return F.when(n >= 2, F.concat(pairs, F.slice(s, -1, 1))).otherwise(
-        F.when(n == 1, F.slice(s, -1, 1)).otherwise(F.array().cast("array<double>"))
-    )
+    return t.cast("array<double>")
 
 
 def pad_truncate(v: Column | str, dim: int) -> Column:
@@ -95,14 +76,11 @@ def header_flag_counts(flags_arr: Column | str, protos_arr: Column | str) -> Col
 def header_features(flags_arr, protos_arr, ttls_arr) -> Column:
     """flag counts ++ per-packet TTLs (parser.py:300-349)."""
     ttl = F.col(ttls_arr) if isinstance(ttls_arr, str) else ttls_arr
-    return F.concat(
-        header_flag_counts(flags_arr, protos_arr),
-        F.transform(ttl, lambda x: x.cast("double")),
-    )
+    return F.concat(header_flag_counts(flags_arr, protos_arr), ttl.cast("array<double>"))
 
 
 # ---------------------------------------------------------------------------
-# Arrow-native UDF kernels (sequential or numpy-only semantics)
+# Arrow-native UDF kernels
 # ---------------------------------------------------------------------------
 
 
@@ -114,11 +92,77 @@ def _flat(arr: pa.ListArray):
     return vals.astype(np.float64, copy=False), lens.astype(np.int64)
 
 
-def _lists(lens: np.ndarray, values: np.ndarray, null: pa.Array) -> pa.ListArray:
-    """One array<double> ListArray from row lengths + concatenated values."""
-    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
+def _valid_rows(*cols: pa.ListArray):
+    """(valid, cols): the rows non-null in EVERY input, and the inputs
+    filtered to them, so that their flat buffers stay row-aligned."""
+    null = cols[0].is_null()
+    for c in cols[1:]:
+        null = pc.or_(null, c.is_null())
+    valid = ~null.to_numpy(zero_copy_only=False)
+    if not valid.all():
+        cols = tuple(c.filter(pa.array(valid)) for c in cols)
+    return valid, cols
+
+
+def _lists(lens: np.ndarray, values: np.ndarray, valid: np.ndarray) -> pa.ListArray:
+    """One array<double> ListArray from the valid rows' lengths plus their
+    concatenated values; every other row is null."""
+    full = np.zeros(len(valid), dtype=np.int64)
+    full[valid] = lens
+    offsets = np.concatenate(([0], np.cumsum(full))).astype(np.int32)
     return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values, pa.float64()),
-                                    mask=null)
+                                    mask=pa.array(~valid))
+
+
+def _row_ends(lens: np.ndarray) -> np.ndarray:
+    """Flat index of each non-empty row's last value."""
+    return np.cumsum(lens)[lens > 0] - 1
+
+
+def _iat_batch(times: pa.ListArray) -> pa.ListArray:
+    """np.diff of every row of one Arrow batch (parser.py:354-375): one
+    diff over the flat buffer, minus the gaps that straddle two rows. A
+    row of fewer than two values gives []; a null row stays null."""
+    valid, (times,) = _valid_rows(times)
+    t, lens = _flat(times)
+    keep = np.ones(len(t), dtype=bool)
+    keep[_row_ends(lens)] = False
+    return _lists(np.maximum(lens - 1, 0), np.diff(t)[keep[:-1]], valid)
+
+
+def _iat_size_batch(times: pa.ListArray, tokens: pa.ListArray) -> pa.ListArray:
+    """[iat_0, size_0, ..., iat_{n-2}, size_{n-2}, size_{n-1}] for every
+    row of one Arrow batch (parser.py:401-427): gaps and sizes interleave
+    over the flat buffers, each row's last slot holding its last size, and
+    the size after that slot is dropped. A null row in either input gives
+    a null row."""
+    valid, (times, tokens) = _valid_rows(times, tokens)
+    t, lens = _flat(times)
+    s, _ = _flat(tokens)
+    last = _row_ends(lens)
+    gap = np.empty_like(t)
+    gap[:-1] = np.diff(t)
+    gap[last] = s[last]
+    pairs = np.empty(2 * len(t), dtype=np.float64)
+    pairs[0::2], pairs[1::2] = gap, s
+    keep = np.ones(len(pairs), dtype=bool)
+    keep[2 * last + 1] = False
+    return _lists(np.maximum(2 * lens - 1, 0), pairs[keep], valid)
+
+
+@arrow_udf(_DOUBLES)
+def iat(times: pa.Array) -> pa.Array:
+    """Inter-arrival gaps, the np.diff twin (parser.py:354-375), as an
+    Arrow scalar UDF over a times column (see _iat_batch)."""
+    return _iat_batch(times)
+
+
+@arrow_udf(_DOUBLES)
+def iat_size(times: pa.Array, tokens: pa.Array) -> pa.Array:
+    """IAT and SIZE interleaved (parser.py:401-427; size_j pairs with
+    iat_j, the last size appended) as an Arrow scalar UDF over the times
+    and tokens columns (see _iat_size_batch)."""
+    return _iat_size_batch(times, tokens)
 
 
 def _samp_batch(times: pa.ListArray, tokens: pa.ListArray, feat: str, rate: float):
@@ -139,10 +183,7 @@ def _samp_batch(times: pa.ListArray, tokens: pa.ListArray, feat: str, rate: floa
     Ineligible rows run the verbatim loop on slices of the flat buffers
     and are spliced in by offset. margin bounds ~1000 accumulated ulps,
     far above any drift. A null row in either input gives a null row."""
-    null = pc.or_(times.is_null(), tokens.is_null())
-    valid = ~null.to_numpy(zero_copy_only=False)
-    if not valid.all():  # keep the two flat buffers row-aligned
-        times, tokens = times.filter(pa.array(valid)), tokens.filter(pa.array(valid))
+    valid, (times, tokens) = _valid_rows(times, tokens)
     t, lens = _flat(times)
     s, _ = _flat(tokens)
     n = len(lens)
@@ -186,9 +227,7 @@ def _samp_batch(times: pa.ListArray, tokens: pa.ListArray, feat: str, rate: floa
     fast = np.repeat(~bad, out_lens)
     values[fast] = B[keep]
     values[~fast] = np.concatenate(slow) if slow else []
-    full = np.zeros(len(valid), dtype=np.int64)
-    full[valid] = out_lens
-    return _lists(full, values, null)
+    return _lists(out_lens, values, valid)
 
 
 def samp_udf(sampling_feature: str, sampling_rate: float):
@@ -198,7 +237,7 @@ def samp_udf(sampling_feature: str, sampling_rate: float):
     tests/test_kernels.py and the hypothesis properties."""
     feat, rate = sampling_feature, float(sampling_rate)
 
-    @arrow_udf("array<double>")
+    @arrow_udf(_DOUBLES)
     def _samp(times: pa.Array, tokens: pa.Array) -> pa.Array:
         return _samp_batch(times, tokens, feat, rate)
 
@@ -209,6 +248,7 @@ def _fft_batch(v: pa.ListArray, n: int) -> pa.ListArray:
     """Real part of np.fft.fft(row, n) for every row of one Arrow batch:
     each row's first min(len, n) values are scattered into a zero
     (rows, n) matrix and transformed in one call. A null row stays null."""
+    valid, (v,) = _valid_rows(v)
     vals, lens = _flat(v)
     m = np.minimum(lens, n)
     row = np.repeat(np.arange(len(lens)), m)
@@ -216,7 +256,7 @@ def _fft_batch(v: pa.ListArray, n: int) -> pa.ListArray:
     M = np.zeros((len(lens), n), dtype=np.float64)
     M[row, col] = vals[(np.cumsum(lens) - lens)[row] + col]
     out = np.ascontiguousarray(np.fft.fft(M, axis=1).real).ravel()
-    return _lists(np.full(len(lens), n), out, v.is_null())
+    return _lists(np.full(len(lens), n), out, valid)
 
 
 def fft_udf(fft_bin: int):
@@ -224,7 +264,7 @@ def fft_udf(fft_bin: int):
     Arrow scalar UDF: one batched FFT per Arrow batch (see _fft_batch)."""
     nbin = int(fft_bin)
 
-    @arrow_udf("array<double>")
+    @arrow_udf(_DOUBLES)
     def _fft(v: pa.Array) -> pa.Array:
         return _fft_batch(v, nbin)
 

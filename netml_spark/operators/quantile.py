@@ -9,7 +9,8 @@ pass 2 (the only driver round-trip in the engine, SURVEY.md §3.1).
 identical to ``np.quantile``'s default (parity pinned in tests). At
 10^12-row scale exact percentile of *per-flow* aggregates is itself a big
 shuffle; ``approx=True`` switches to ``percentile_approx`` with a pinned
-accuracy for the bench path (documented tolerance, SURVEY.md §7.4.3).
+accuracy (documented tolerance, SURVEY.md §7.4.3). Only
+``jobs/extract_features.py --approx-quantiles`` sets it.
 """
 
 from __future__ import annotations

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 
-from netml_spark.util import ts_seconds
+from netml_spark.util import drop_null_ts, ts_seconds
 
 
 def _entity_window(entity_cols: Sequence[str], ts_col: str, order_cols: Sequence[str]):
@@ -190,6 +190,9 @@ def subflows_interval(
       - trailing segment discarded iff any split occurred (parser.py:278-283)
       - segments with < max(2, thres) rows dropped (parser.py:289-292).
 
+    Rows whose ts is null (or NaN) are dropped first: they have no place
+    on the split grid.
+
     Execution: ``repartition(entity)`` + ``sortWithinPartitions(entity,
     ts, order)``, then a label column from an Arrow iterator UDF over
     (entity, ts) only, then a native Filter on ``label >= 0``: one shuffle,
@@ -217,6 +220,7 @@ def subflows_interval(
         return _subflow_labels(batches, interval, thres)
 
     label = arrow_udf(label, "int").asNondeterministic()
+    df = drop_null_ts(df, ts_col)  # a NaN grid anchor cannot split
     base = df if assume_partitioned else df.repartition(*entity_cols)
     ordered = base.sortWithinPartitions(*entity_cols, ts_col, *order_cols)
     return (ordered.withColumn(subflow_col, label(*entity_cols, ts_col))

@@ -33,6 +33,7 @@ from netml_spark.operators.quantile import (
 from netml_spark.operators.sequences import events_to_sequences
 from netml_spark.operators.sessionize import sessionize_timeout, subflows_interval
 from netml_spark.operators.stats import stats_vector
+from netml_spark.util import drop_null_ts, ts_seconds
 
 FEAT_TYPES = ("IAT", "SIZE", "IAT_SIZE", "STATS", "SAMP_NUM", "SAMP_SIZE")
 
@@ -90,12 +91,7 @@ class FeaturePlan:
         # the placeholders, flagged by self.empty_input.
         self.empty_input = False
 
-        # An event without a time (null, or NaN for double input) has no
-        # place in a session or on the split grid: drop it once, here.
-        keep = F.col(ts_col).isNotNull()
-        if dict(events.dtypes)[ts_col] in ("double", "float"):
-            keep &= ~F.isnan(ts_col)
-        events = events.filter(keep)
+        events = drop_null_ts(events, ts_col)
 
         # stage 1: timeout sessionize (parser.py:80-206). The per-session
         # min-size filter is DEFERRED (r6): the subflow min-size filter in
@@ -115,8 +111,6 @@ class FeaturePlan:
         if self.interval > 0:
             self.split_interval = float(self.interval)
         else:
-            from netml_spark.util import ts_seconds
-
             ts_d = ts_seconds(sess, ts_col)
             durations = sess.groupBy(*sess_keys).agg(
                 (F.max(ts_d) - F.min(ts_d)).alias("duration"),

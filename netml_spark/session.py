@@ -56,6 +56,12 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Let AQE change a cached plan's output partitioning. Without it AQE
+        # cannot coalesce the final stage of a cached plan (such as
+        # FeaturePlan's sequences cache): a write over the cache then runs
+        # one task and writes one file per shuffle partition, and behind a
+        # Python kernel pays one Python task each, however small they are.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Exact-percentile two-pass plans collect one scalar; keep broadcast
         # threshold at default 10MB — label/dim tables broadcast freely.

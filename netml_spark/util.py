@@ -27,3 +27,12 @@ def ts_seconds(df: DataFrame, ts_col: str) -> Column:
         # lag()/window args as plain attributes — nothing extra shuffles.
         return c
     return c.cast("double")
+
+
+def drop_null_ts(df: DataFrame, ts_col: str) -> DataFrame:
+    """Drop the rows without a time (null ``ts``, or NaN for double/float
+    input): they have no place in a session or on a split grid."""
+    keep = F.col(ts_col).isNotNull()
+    if dict(df.dtypes)[ts_col] in ("double", "float"):
+        keep &= ~F.isnan(ts_col)
+    return df.filter(keep)

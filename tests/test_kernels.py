@@ -139,26 +139,34 @@ def test_fft_kernel(spark, token_events_df, token_events_pdf):
 
 def test_udfs_null_row_gives_null(spark):
     """A null row in any input of a UDF gives a null output row; an empty
-    row gives an empty SAMP and an all-zero FFT."""
+    row gives an empty IAT, IAT_SIZE and SAMP and an all-zero FFT; a
+    one-value row gives [] for IAT and [size] for IAT_SIZE."""
     df = spark.createDataFrame(
         [(0, [0.0, 0.4, 2.5], [3, 4, 5]), (1, None, [1]), (2, [0.0, 1.5], None),
-         (3, [], [])],
+         (3, [], []), (4, [2.0], [9])],
         "i int, times array<double>, tokens array<int>",
     )
-    got = {r.i: (r.s, r.f) for r in df.select(
+    got = {r.i: r for r in df.select(
         "i", kernels.samp_udf("SAMP_SIZE", 1.0)("times", "tokens").alias("s"),
         kernels.fft_udf(4)("times").alias("f"),
+        kernels.iat("times").alias("iat"),
+        kernels.iat_size("times", "tokens").alias("iat_size"),
     ).collect()}
-    assert got[0][0] == [7.0, 0.0, 5.0]
-    assert got[1] == (None, None)
-    assert got[2][0] is None and got[2][1] is not None
-    assert got[3] == ([], [0.0] * 4)
+    assert got[0].s == [7.0, 0.0, 5.0]
+    assert got[0].iat == list(np.diff([0.0, 0.4, 2.5]))
+    assert got[0].iat_size == list(netml_ref.get_IAT_SIZE([0.0, 0.4, 2.5], [3, 4, 5]))
+    assert (got[1].s, got[1].f, got[1].iat, got[1].iat_size) == (None,) * 4
+    assert got[2].s is None and got[2].iat_size is None
+    assert got[2].f is not None and got[2].iat == [1.5]
+    assert (got[3].s, got[3].f, got[3].iat, got[3].iat_size) == ([], [0.0] * 4, [], [])
+    assert (got[4].iat, got[4].iat_size) == ([], [9.0])
 
 
 def test_udfs_are_arrow_scalar_udfs():
-    """Both kernels stay Arrow-native: a pandas UDF would bring back the
-    per-row pandas conversion at the Python boundary."""
-    for udf in (kernels.samp_udf("SAMP_NUM", 1.0), kernels.fft_udf(8)):
+    """Every element-walking kernel stays Arrow-native: a pandas UDF would
+    bring back the per-row pandas conversion at the Python boundary."""
+    for udf in (kernels.samp_udf("SAMP_NUM", 1.0), kernels.fft_udf(8),
+                kernels.iat, kernels.iat_size):
         assert udf.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
 
 
@@ -200,6 +208,45 @@ def test_samp_batch_all_fallback():
     for g, t, s in zip(got, times, sizes):
         np.testing.assert_allclose(
             np.asarray(g), netml_ref.get_SAMP(t, s, "SAMP_SIZE", 1.0), rtol=0, atol=0)
+
+
+def _iat_rows():
+    """Row values for the IAT batch tests: random lengths, then the empty
+    and one-value edge rows."""
+    rng = np.random.default_rng(7)
+    times = [np.sort(rng.uniform(0, 60, int(rng.integers(2, 30)))) for _ in range(12)]
+    times[3:3] = [np.array([]), np.array([4.5])]
+    times += [np.array([]), np.array([1.25])]
+    return rng, times
+
+
+def test_iat_batch_pyarrow():
+    """The IAT batch kernel on a sliced ListArray equals np.diff per row
+    exactly, across empty and one-value rows."""
+    _, times = _iat_rows()
+    ta = _list_array([t.tolist() for t in times], pa.float64())
+    assert ta.offset == 2
+    got = kernels._iat_batch(ta).to_pylist()
+    assert len(got) == len(times)
+    for g, t in zip(got, times):
+        np.testing.assert_allclose(np.asarray(g, np.float64), netml_ref.get_IAT(t),
+                                   rtol=0, atol=0)
+
+
+@pytest.mark.parametrize("token_type", [pa.int32(), pa.float64()])
+def test_iat_size_batch_pyarrow(token_type):
+    """The IAT_SIZE batch kernel on sliced ListArrays equals the
+    reference interleave exactly, across empty and one-value rows."""
+    rng, times = _iat_rows()
+    sizes = [rng.integers(0, 1500, len(t)) for t in times]
+    ta = _list_array([t.tolist() for t in times], pa.float64())
+    sa = _list_array([s.tolist() for s in sizes], token_type)
+    assert ta.offset == sa.offset == 2
+    got = kernels._iat_size_batch(ta, sa).to_pylist()
+    assert len(got) == len(times)
+    for g, t, s in zip(got, times, sizes):
+        exp = netml_ref.get_IAT_SIZE(t, s) if len(t) else np.array([])
+        np.testing.assert_allclose(np.asarray(g, np.float64), exp, rtol=0, atol=0)
 
 
 def test_fft_batch_pyarrow():

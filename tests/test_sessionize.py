@@ -308,3 +308,27 @@ def test_subflows_null_keys_one_group(spark):
     # NaN bug the null rows would be singletons and all dropped
     assert len(out) == 10
     assert out["doc_id"].isna().sum() == 5
+
+
+def test_subflows_drops_null_ts_rows(spark):
+    """Called directly, subflows_interval drops a row whose ts is null or
+    NaN, as FeaturePlan.extract does: the output equals that of the input
+    without those rows. Kept, a null sorts to the head of its group and
+    anchors the split grid on NaN, so the kernel raises; a NaN sorts to
+    the tail and rides along in the last subflow."""
+    # groups a and b: four bursts 30 s apart, which a 10 s interval splits
+    # at every burst; group c: one burst, no split
+    clean = [(d, 0, 30.0 * b + i, 4 * b + i) for d in ("a", "b")
+             for b in range(4) for i in range(4)]
+    clean += [("c", 0, float(i), i) for i in range(4)]
+    bad = [("a", 0, None, -1), ("b", 0, float("nan"), -1), ("c", 0, float("nan"), -1)]
+    schema = "doc_id string, session_id long, ts double, seq long"
+
+    def run(rows):
+        df = spark.createDataFrame(rows, schema)
+        out = subflows_interval(df, 10.0, ("doc_id", "session_id"), "ts", 2, ("seq",))
+        return sorted(tuple(r) for r in out.collect())
+
+    want = run(clean)
+    assert {r[-1] for r in want if r[0] == "a"} == {0, 1, 2}  # a splits
+    assert run(clean + bad) == want

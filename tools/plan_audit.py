@@ -6,7 +6,8 @@ Checks (planning only, nothing executes):
      STATS agg all reuse the entity hash partitioning)
   3. label join broadcasts the label side (BroadcastHashJoin)
   4. as-of join contains NO join operator at all (union + window)
-  5. kernels stay inside WholeStageCodegen (no Python in the hot path)
+  5. the per-sequence kernels of one select share ONE ArrowEvalPython
+     node over the times/tokens attributes (no JVM array lambdas)
 
 Run: python tools/plan_audit.py   (prints PASS/FAIL per property)
 """
@@ -106,19 +107,44 @@ def main():
     results["asof_no_join_operator"] = "Join" not in p
     results["asof_single_shuffle"] = len(re.findall(r"\(\d+\) Exchange", p)) == 1
 
-    # 5. native kernels: no Python eval in plan
+    # 5. per-sequence kernels: every element-walking kernel of one select
+    # runs in ONE ArrowEvalPython node whose UDF arguments are only the
+    # sequences' times/tokens attributes, so each crosses the boundary
+    # once and fft(iat(times)) chains inside the Python worker (no
+    # JVM-side array lambdas feeding Python); no other Python node.
     from netml_spark.operators import kernels
     from netml_spark.operators.sequences import events_to_sequences
 
-    seqs = events_to_sequences(ev, ("user_id",), "ts", "event_id", ("event_id",), ())
-    k = seqs.select(kernels.pad_truncate(kernels.iat("times"), 8).alias("f"))
+    seq_tab = spark.createDataFrame([([0.0, 1.0], [1, 2])],
+                                    "times array<double>, tokens array<int>")
+    k = seq_tab.select(
+        kernels.pad_truncate(kernels.iat("times"), 8).alias("iat"),
+        kernels.iat_size("times", "tokens").alias("iat_size"),
+        kernels.samp_udf("SAMP_SIZE", 1.0)("times", "tokens").alias("samp"),
+        kernels.fft_udf(8)(kernels.iat("times")).alias("fft"),
+    )
     p = plan_str(k)
-    results["kernels_no_python"] = ("Python" not in p) and ("BatchEvalPython" not in p)
+    udf_lists = re.findall(r"\(\d+\) ArrowEvalPython\n.*\nArguments: \[(.*)\], \[", p)
+    args = udf_lists[0] if udf_lists else ""
+    # a top-level call's result id ends an argument; a nested one is
+    # followed by ")"; an attribute reference does not follow ")"
+    n_calls = len(re.findall(r"\)#\d+(?=, |$)", args))
+    refs = set(re.findall(r"(?<![)\w])(\w+)#\d+", args))
+    results["kernels_one_arrow_node"] = (
+        len(udf_lists) == 1
+        and n_calls == 4
+        and refs == {"times", "tokens"}
+        and "BatchEvalPython" not in p
+        and "MapInArrow" not in p
+    )
+    if not results["kernels_one_arrow_node"]:
+        print(f"  (ArrowEvalPython nodes: {len(udf_lists)}, UDF calls: {n_calls}, "
+              f"argument references: {sorted(refs)})")
+
     # collect_list must have a MAP-SIDE partial (partial_collect_list before
-    # the exchange) and exactly one exchange. Note: ObjectHashAggregate and
-    # higher-order array functions are not codegen-supported in Spark
-    # itself, so "codegen id" is legitimately absent here; the JVM-side /
-    # no-Python property above is the one the engine promises.
+    # the exchange) and exactly one exchange.
+    seqs = events_to_sequences(ev, ("user_id",), "ts", "event_id", ("event_id",), ())
+    p = plan_str(seqs.select(kernels.pad_truncate(kernels.iat("times"), 8).alias("f")))
     results["kernels_map_side_partial"] = "partial_collect_list" in p
     results["kernels_single_shuffle"] = len(re.findall(r"\(\d+\) Exchange", p)) == 1
 
