@@ -7,10 +7,10 @@ see SURVEY.md) as declarative, Catalyst-optimizable DataFrame operators:
   re-split, as-of join, backfill (``operators.sessionize``,
   ``operators.asof``).
 - L2 feature kernels: the reference's per-flow numeric loops as Arrow
-  scalar UDFs over flat value buffers (IAT, IAT_SIZE, SAMP_NUM, SAMP_SIZE,
-  FFT; one ArrowEvalPython node per select), SIZE as a native cast, plus
-  a fully Catalyst-native STATS aggregate (``operators.kernels``,
-  ``operators.stats``).
+  scalar UDFs over flat value buffers (IAT, IAT_SIZE, STATS, SAMP_NUM,
+  SAMP_SIZE, FFT, header; one ArrowEvalPython node per select), SIZE as a
+  native cast (``operators.kernels``), plus a Catalyst-native STATS
+  aggregate over event rows (``operators.stats``).
 - L3 pipeline: ``FeaturePlan`` replicating the reference's
   ``flow2features`` dispatch (``pipeline``), checkpoint manifest
   (``manifest``), streaming twin (``streaming``).

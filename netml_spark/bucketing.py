@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -41,22 +41,3 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.format("parquet").saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table (bucket metadata comes from the catalog, so
-    joins/aggs on the bucket key skip the exchange)."""
-    return spark.table(table)
-
-
-def cobucket_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: Sequence[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Join two co-bucketed tables on their bucket key. With matching
-    bucket counts the physical plan contains NO Exchange on either side —
-    the point of the layout."""
-    return spark.table(left_table).join(spark.table(right_table), list(on), how)

@@ -1,17 +1,17 @@
-"""Per-sequence feature kernels (reference parser.py:354-652).
+"""Per-sequence feature kernels (reference parser.py:300-652).
 
 Operate on array columns of the sequences shape (times:array<double>,
-tokens:array<int>). Kernels that are plain array expressions stay native
-and codegen'd: SIZE (one cast), pad/truncate, the TTL part of the header.
-Every kernel that walks the elements of a row (IAT, IAT_SIZE, SAMP, FFT)
-is an Arrow scalar UDF: each reads a batch's flat value buffers plus row
-lengths and returns one ListArray, with no pandas conversion and no
-per-row Python on the fast path. Spark's higher-order lambdas
-(``zip_with``/``transform``/``aggregate``) are no faster: they are
-``CodegenFallback`` and box every element (about 300 ns each), while all
-Arrow UDFs of one select share ONE ArrowEvalPython node, where
-``times``/``tokens`` cross the boundary once and chained calls such as
-``fft_udf(n)(iat("times"))`` run inside the Python worker.
+tokens:array<int>, plus the header's per-packet flag/proto/TTL series).
+Two kernels are plain array expressions and stay native: SIZE (one cast)
+and pad/truncate. Every other kernel (IAT, IAT_SIZE, STATS, SAMP, FFT,
+header) is an Arrow scalar UDF of ONE shape: it reads a batch's flat
+value buffers plus row lengths and returns one ListArray, with no pandas
+conversion and no per-row Python on the fast path. Spark's higher-order
+array lambdas are no faster: they are ``CodegenFallback`` and box every
+element (about 300 ns each), while all Arrow UDFs of one select share ONE
+ArrowEvalPython node, where ``times``/``tokens`` cross the boundary once
+and chained calls such as ``fft_udf(n)(iat("times"))`` run inside the
+Python worker.
 
 Each kernel cites the reference lines whose output it reproduces; parity is
 pinned by tests vs the numpy oracle (netml_spark.oracle.netml_ref).
@@ -49,34 +49,6 @@ def pad_truncate(v: Column | str, dim: int) -> Column:
     c = F.col(v) if isinstance(v, str) else v
     padded = F.concat(c, F.array_repeat(F.lit(0.0), int(dim)))
     return F.slice(padded, 1, int(dim))
-
-
-TCP_FLAG_ORDER = "FSRPAUEC"
-
-
-def header_flag_counts(flags_arr: Column | str, protos_arr: Column | str) -> Column:
-    """8 TCP-flag counts over a per-sequence array of flag strings
-    (parser.py:311-343): each char counted once per packet, only proto==6
-    packets contribute. Native: per-flag aggregate over the zipped arrays."""
-    fl = F.col(flags_arr) if isinstance(flags_arr, str) else flags_arr
-    pr = F.col(protos_arr) if isinstance(protos_arr, str) else protos_arr
-    zipped = F.zip_with(fl, pr, lambda f, p: F.struct(f.alias("f"), p.alias("p")))
-
-    def count_flag(ch: str) -> Column:
-        return F.aggregate(
-            zipped,
-            F.lit(0.0),
-            lambda acc, x: acc
-            + F.when((x["p"] == 6) & x["f"].contains(ch), 1.0).otherwise(0.0),
-        )
-
-    return F.array(*[count_flag(ch) for ch in TCP_FLAG_ORDER])
-
-
-def header_features(flags_arr, protos_arr, ttls_arr) -> Column:
-    """flag counts ++ per-packet TTLs (parser.py:300-349)."""
-    ttl = F.col(ttls_arr) if isinstance(ttls_arr, str) else ttls_arr
-    return F.concat(header_flag_counts(flags_arr, protos_arr), ttl.cast("array<double>"))
 
 
 # ---------------------------------------------------------------------------
@@ -163,6 +135,74 @@ def iat_size(times: pa.Array, tokens: pa.Array) -> pa.Array:
     iat_j, the last size appended) as an Arrow scalar UDF over the times
     and tokens columns (see _iat_size_batch)."""
     return _iat_size_batch(times, tokens)
+
+
+def _stats_batch(times: pa.ListArray, tokens: pa.ListArray) -> pa.ListArray:
+    """The STATS 12-vector of every row of one Arrow batch, in STATS_COLS
+    order (parser.py:430-469): duration from the row ends (times are in
+    order), sums by one np.bincount, population std, and min/max/quartiles
+    from one lexsort with np.quantile's linear lerp; rates are 0 when the
+    duration is 0. A null row in either input, or an empty row (no packet,
+    no statistics), gives a null row."""
+    valid, (times, tokens) = _valid_rows(times, tokens)
+    t, lens = _flat(times)
+    s, _ = _flat(tokens)
+    valid[valid] = lens > 0
+    lens = lens[lens > 0]
+    n, num = len(lens), lens.astype(np.float64)
+    row = np.repeat(np.arange(n), lens)
+    ends = np.cumsum(lens)
+    first = ends - lens
+    dur = t[ends - 1] - t[first]
+    total = np.bincount(row, weights=s, minlength=n)
+    mean = total / num
+    std = np.sqrt(np.bincount(row, weights=(s - mean[row]) ** 2, minlength=n) / num)
+    srt = s[np.lexsort((s, row))]
+    pos = np.multiply.outer(num - 1, [0.25, 0.5, 0.75])
+    lo = np.floor(pos)
+    a, b = (srt[first[:, None] + i.astype(np.int64)] for i in (lo, np.ceil(pos)))
+    f = pos - lo
+    q = np.where(f >= 0.5, b - (b - a) * (1 - f), a + (b - a) * f)
+    rates = np.zeros((2, n))
+    np.divide([num, total], dur, out=rates, where=dur != 0)
+    out = np.column_stack([dur, *rates, mean, std, *q.T, srt[first], srt[ends - 1],
+                           num, total])
+    return _lists(np.full(n, 12), out.ravel(), valid)
+
+
+def _header_batch(flags: pa.ListArray, protos: pa.ListArray,
+                  ttls: pa.ListArray) -> pa.ListArray:
+    """The 8 TCP-flag counts (order FSRPAUEC) then the TTLs of every row of
+    one Arrow batch (parser.py:300-349): every occurrence of a flag
+    character counts, on proto 6 packets only; a null flag string counts
+    nothing. A null row in any input gives a null row."""
+    valid, (flags, protos, ttls) = _valid_rows(flags, protos, ttls)
+    ttl, lens = _flat(ttls)
+    tcp = _flat(protos)[0] == 6
+    fl = pc.list_flatten(flags)
+    n = len(lens)
+    row = np.repeat(np.arange(n), lens)
+    counts = [np.bincount(row, minlength=n, weights=tcp * pc.count_substring(fl, ch)
+                          .fill_null(0).to_numpy(zero_copy_only=False))
+              for ch in "FSRPAUEC"]
+    heads = np.repeat(np.cumsum(lens) - lens, 8)  # each row's counts go first
+    out = np.insert(ttl, heads, np.column_stack(counts).ravel())
+    return _lists(lens + 8, out, valid)
+
+
+@arrow_udf(_DOUBLES)
+def stats(times: pa.Array, tokens: pa.Array) -> pa.Array:
+    """STATS 12-vector (parser.py:430-469) as an Arrow scalar UDF over the
+    times and tokens columns (see _stats_batch)."""
+    return _stats_batch(times, tokens)
+
+
+@arrow_udf(_DOUBLES)
+def header(flags: pa.Array, protos: pa.Array, ttls: pa.Array) -> pa.Array:
+    """Header features, flag counts ++ TTLs (parser.py:300-349), as an
+    Arrow scalar UDF over the per-packet flag, proto and TTL series (see
+    _header_batch)."""
+    return _header_batch(flags, protos, ttls)
 
 
 def _samp_batch(times: pa.ListArray, tokens: pa.ListArray, feat: str, rate: float):

@@ -1,4 +1,5 @@
-"""STATS 12-vector aggregate — fully Catalyst-native (reference parser.py:430-469).
+"""STATS 12-vector aggregate over event rows — fully Catalyst-native
+(reference parser.py:430-469); FeaturePlan uses ``kernels.stats`` instead.
 
 One ``groupBy(keys).agg(...)``: hash aggregate with map-side partials, no
 UDF, no window. ``percentile`` is Spark's exact percentile with linear
@@ -54,11 +55,3 @@ def stats_features(
         "size_mean", "size_std", "size_q1", "size_q2", "size_q3",
         "size_min", "size_max", "num_pkts", "num_bytes",
     )
-
-
-def stats_vector(df: DataFrame, keys: Sequence[str], ts_col: str = "ts",
-                 size_col: str = "token") -> DataFrame:
-    """Same as stats_features but packed as features:array<double> in the
-    reference's column order (parser.py:461-463) — feeds FeaturePlan."""
-    s = stats_features(df, keys, ts_col, size_col)
-    return s.select(*keys, F.array(*[F.col(c) for c in STATS_COLS]).alias("features"))

@@ -231,8 +231,8 @@ def pad_truncate(v, dim):
 def get_header(protos, ttls, flags_strs):
     """8 TCP-flag counts ++ per-packet TTL list. Ref: parser.py:300-349.
 
-    ``flags_strs`` are per-packet TCP flag strings (e.g. 'SA'); each char
-    counted once per packet (parser.py:332-336); non-TCP packets contribute
+    ``flags_strs`` are per-packet TCP flag strings (e.g. 'SA'); every char
+    occurrence counts (parser.py:332-336); non-TCP packets contribute
     no flag counts but DO contribute their TTL (parser.py:343-347)."""
     order = "FSRPAUEC"
     counts = np.zeros(8, dtype=np.float64)

@@ -4,12 +4,14 @@
 
 Lifecycle (SURVEY.md §3):
 
-  events --sessionize_timeout--> sessions          [1 shuffle on entity]
+  events --drop null/NaN ts and null tokens------- [one Filter]
+         --sessionize_timeout--> sessions          [1 shuffle on entity]
          --(interval<=0: duration quantile)------- [pass-1 agg -> scalar]
          --subflows_interval--> subflows           [label UDF + Filter, same keys]
          --events_to_sequences--> one row per flow [re-shuffle on flow keys]
          --(dim quantile)------------------------- [pass-2 agg -> scalar]
          --kernel dispatch + fft/pad + header----> features:array<double>
+                                                   [Arrow UDFs over the cache]
 
 The two quantiles are the only driver round-trips. The label UDF reports
 an unknown output partitioning, so ``events_to_sequences`` shuffles the
@@ -32,7 +34,6 @@ from netml_spark.operators.quantile import (
 )
 from netml_spark.operators.sequences import events_to_sequences
 from netml_spark.operators.sessionize import sessionize_timeout, subflows_interval
-from netml_spark.operators.stats import stats_vector
 from netml_spark.util import drop_null_ts, ts_seconds
 
 FEAT_TYPES = ("IAT", "SIZE", "IAT_SIZE", "STATS", "SAMP_NUM", "SAMP_SIZE")
@@ -91,7 +92,7 @@ class FeaturePlan:
         # the placeholders, flagged by self.empty_input.
         self.empty_input = False
 
-        events = drop_null_ts(events, ts_col)
+        events = drop_null_ts(events, ts_col, token_col)
 
         # stage 1: timeout sessionize (parser.py:80-206). The per-session
         # min-size filter is DEFERRED (r6): the subflow min-size filter in
@@ -164,27 +165,7 @@ class FeaturePlan:
             feats = seqs.withColumn("features", kernels.iat_size("times", "tokens"))
         elif base == "STATS":
             self.dim = 12
-            # r5 verdict item 1 (r6 fix): deriving the 12-vector from
-            # ``subs`` re-ran the whole sessionize -> subflows chain (a
-            # second full pass over events plus the Python re-split) just
-            # to re-aggregate rows the cached ``seqs`` already holds as
-            # ordered arrays. Explode the CACHED sequences back to event
-            # rows instead: same rows in the same per-partition order
-            # (array order == the subs sort order), so every stats_vector
-            # aggregate — including the order-sensitive float sums and
-            # stddev — accumulates in the identical sequence and the
-            # result is bit-equal; the chain upstream of the cache runs
-            # once (plan property ``featureplan_stats_no_recompute``).
-            ev = seqs.select(
-                *flow_keys,
-                F.explode(F.arrays_zip("times", "tokens")).alias("_z"),
-            ).select(
-                *flow_keys,
-                F.col("_z.times").alias(ts_col),
-                F.col("_z.tokens").alias(token_col),
-            )
-            sv = stats_vector(ev, flow_keys, ts_col, token_col)
-            feats = seqs.join(sv, flow_keys)
+            feats = seqs.withColumn("features", kernels.stats("times", "tokens"))
         else:  # SAMP_NUM / SAMP_SIZE (rate = duration quantile q=0.3, :801-808)
             self.dim = dim - 1
             dur = F.element_at("times", -1) - F.element_at("times", 1)
@@ -209,7 +190,7 @@ class FeaturePlan:
         if self.header:
             h_dim = 8 + self.dim
             fl, pr, tt = (f"{header_cols[0]}s", f"{header_cols[1]}s", f"{header_cols[2]}s")
-            hcol = kernels.header_features(fl, pr, tt)
+            hcol = kernels.header(fl, pr, tt)
             if self.fft:
                 feats = feats.withColumn("_h", kernels.fft_udf(h_dim)(hcol))
             else:

@@ -29,10 +29,14 @@ def ts_seconds(df: DataFrame, ts_col: str) -> Column:
     return c.cast("double")
 
 
-def drop_null_ts(df: DataFrame, ts_col: str) -> DataFrame:
+def drop_null_ts(df: DataFrame, ts_col: str, token_col: str | None = None) -> DataFrame:
     """Drop the rows without a time (null ``ts``, or NaN for double/float
-    input): they have no place in a session or on a split grid."""
-    keep = F.col(ts_col).isNotNull()
-    if dict(df.dtypes)[ts_col] in ("double", "float"):
-        keep &= ~F.isnan(ts_col)
+    input): they have no place in a session or on a split grid. Given
+    ``token_col``, drop the rows without a token in the same filter: the
+    reference has no packet without a size."""
+    keep = F.lit(True)
+    for c in (ts_col, token_col) if token_col else (ts_col,):
+        keep &= F.col(c).isNotNull()
+        if dict(df.dtypes)[c] in ("double", "float"):
+            keep &= ~F.isnan(c)
     return df.filter(keep)

@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from netml_spark.bucketing import cobucket_join, read_bucketed, write_bucketed
+from netml_spark.bucketing import write_bucketed
 
 
 def _plan(df) -> str:
@@ -46,7 +46,7 @@ def test_cobucketed_join_has_no_exchange(spark, bucketed_tables):
     # disable broadcast so the join would otherwise shuffle both sides
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        j = cobucket_join(spark, lt, rt, ("doc_id",))
+        j = spark.table(lt).join(spark.table(rt), "doc_id")
         assert _n_exchanges(j) == 0, _plan(j)
         assert j.count() == 2000
     finally:
@@ -55,7 +55,7 @@ def test_cobucketed_join_has_no_exchange(spark, bucketed_tables):
 
 def test_bucket_key_aggregation_has_no_exchange(spark, bucketed_tables):
     lt, _ = bucketed_tables
-    agg = read_bucketed(spark, lt).groupBy("doc_id").agg(
+    agg = spark.table(lt).groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("token").alias("s"),
     )

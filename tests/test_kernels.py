@@ -1,14 +1,14 @@
-"""Parity: array kernels vs numpy oracle (reference parser.py:354-652)."""
+"""Parity: array kernels vs numpy oracle (reference parser.py:300-652)."""
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pytest
-from pyspark.sql import functions as F
 from pyspark.util import PythonEvalType
 
 from netml_spark.operators import kernels
 from netml_spark.operators.sequences import events_to_sequences
+from netml_spark.operators.stats import STATS_COLS
 from netml_spark.oracle import netml_ref
 
 
@@ -139,34 +139,47 @@ def test_fft_kernel(spark, token_events_df, token_events_pdf):
 
 def test_udfs_null_row_gives_null(spark):
     """A null row in any input of a UDF gives a null output row; an empty
-    row gives an empty IAT, IAT_SIZE and SAMP and an all-zero FFT; a
-    one-value row gives [] for IAT and [size] for IAT_SIZE."""
+    row gives an empty IAT, IAT_SIZE and SAMP, an all-zero FFT, eight zero
+    flag counts for the header and a null STATS (no packet, no
+    statistics); a one-value row gives [] for IAT, [size] for IAT_SIZE
+    and the reference's STATS; a null flag string counts nothing."""
     df = spark.createDataFrame(
-        [(0, [0.0, 0.4, 2.5], [3, 4, 5]), (1, None, [1]), (2, [0.0, 1.5], None),
-         (3, [], []), (4, [2.0], [9])],
-        "i int, times array<double>, tokens array<int>",
+        [(0, [0.0, 0.4, 2.5], [3, 4, 5], ["SA", "SS", "S"], [6, 6, 17], [64, 63, 62]),
+         (1, None, [1], ["S"], [6], None), (2, [0.0, 1.5], None, None, [6], [64]),
+         (3, [], [], [], [], []), (4, [2.0], [9], [None], [6], [61])],
+        "i int, times array<double>, tokens array<int>, flags array<string>, "
+        "protos array<int>, ttls array<int>",
     )
     got = {r.i: r for r in df.select(
         "i", kernels.samp_udf("SAMP_SIZE", 1.0)("times", "tokens").alias("s"),
         kernels.fft_udf(4)("times").alias("f"),
         kernels.iat("times").alias("iat"),
         kernels.iat_size("times", "tokens").alias("iat_size"),
+        kernels.stats("times", "tokens").alias("stats"),
+        kernels.header("flags", "protos", "ttls").alias("h"),
     ).collect()}
     assert got[0].s == [7.0, 0.0, 5.0]
     assert got[0].iat == list(np.diff([0.0, 0.4, 2.5]))
     assert got[0].iat_size == list(netml_ref.get_IAT_SIZE([0.0, 0.4, 2.5], [3, 4, 5]))
+    assert got[0].stats == list(netml_ref.get_STATS([0.0, 0.4, 2.5], [3, 4, 5]))
+    assert got[0].h == list(netml_ref.get_header([6, 6, 17], [64, 63, 62],
+                                                 ["SA", "SS", "S"]))
     assert (got[1].s, got[1].f, got[1].iat, got[1].iat_size) == (None,) * 4
-    assert got[2].s is None and got[2].iat_size is None
-    assert got[2].f is not None and got[2].iat == [1.5]
+    assert (got[1].stats, got[1].h) == (None, None)
+    assert got[2].s is None and got[2].iat_size is None and got[2].stats is None
+    assert got[2].f is not None and got[2].iat == [1.5] and got[2].h is None
     assert (got[3].s, got[3].f, got[3].iat, got[3].iat_size) == ([], [0.0] * 4, [], [])
+    assert (got[3].stats, got[3].h) == (None, [0.0] * 8)
     assert (got[4].iat, got[4].iat_size) == ([], [9.0])
+    assert got[4].stats == list(netml_ref.get_STATS([2.0], [9]))
+    assert got[4].h == [0.0] * 8 + [61.0]
 
 
 def test_udfs_are_arrow_scalar_udfs():
     """Every element-walking kernel stays Arrow-native: a pandas UDF would
     bring back the per-row pandas conversion at the Python boundary."""
     for udf in (kernels.samp_udf("SAMP_NUM", 1.0), kernels.fft_udf(8),
-                kernels.iat, kernels.iat_size):
+                kernels.iat, kernels.iat_size, kernels.stats, kernels.header):
         assert udf.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
 
 
@@ -260,16 +273,19 @@ def test_fft_batch_pyarrow():
 
 
 def test_header_features(spark):
+    """The header kernel over events_to_sequences' flag/proto/TTL series
+    equals the reference: a repeated flag character counts every time
+    ("SS" adds 2 to S), and a non-TCP packet adds its TTL but no flags."""
     pdf = pd.DataFrame(
         {
-            "doc_id": ["h"] * 4,
-            "source": ["s"] * 4,
-            "ts": [0.0, 1.0, 2.0, 3.0],
-            "seq": np.arange(4, dtype=np.int32),
-            "token": np.int32([10, 20, 30, 40]),
-            "proto": np.int32([6, 6, 17, 6]),
-            "ttl": np.int32([64, 63, 62, 61]),
-            "tcp_flags": ["SA", "A", "", "FA"],
+            "doc_id": ["h"] * 5,
+            "source": ["s"] * 5,
+            "ts": [0.0, 1.0, 2.0, 3.0, 4.0],
+            "seq": np.arange(5, dtype=np.int32),
+            "token": np.int32([10, 20, 30, 40, 50]),
+            "proto": np.int32([6, 6, 17, 6, 6]),
+            "ttl": np.int32([64, 63, 62, 61, 60]),
+            "tcp_flags": ["SA", "A", "S", "FA", "SS"],
         }
     )
     df = spark.createDataFrame(pdf)
@@ -278,7 +294,48 @@ def test_header_features(spark):
         extra_series=("tcp_flags", "proto", "ttl"),
     )
     got = seqs.select(
-        kernels.header_features("tcp_flagss", "protos", "ttls").alias("h")
+        kernels.header("tcp_flagss", "protos", "ttls").alias("h")
     ).collect()[0].h
-    exp = netml_ref.get_header([6, 6, 17, 6], [64, 63, 62, 61], ["SA", "A", "", "FA"])
+    exp = netml_ref.get_header([6, 6, 17, 6, 6], [64, 63, 62, 61, 60],
+                               ["SA", "A", "S", "FA", "SS"])
+    assert exp[1] == 3.0  # S: "SA" + "SS"; the UDP "S" does not count
     np.testing.assert_array_equal(np.asarray(got), exp)
+
+
+def test_header_batch_pyarrow():
+    """The header batch kernel on sliced ListArrays equals the reference
+    on random rows: repeated and non-flag characters, null flag strings,
+    UDP packets and empty rows."""
+    rng = np.random.default_rng(13)
+    flags, protos, ttls = [], [], []
+    for _ in range(300):
+        n = int(rng.integers(0, 8))
+        flags.append([None if rng.random() < 0.1 else
+                      "".join(rng.choice(list("FSRPAUECXS"), int(rng.integers(0, 5))))
+                      for _ in range(n)])
+        protos.append(rng.choice([6, 17], n).tolist())
+        ttls.append(rng.integers(1, 255, n).tolist())
+    got = kernels._header_batch(_list_array(flags, pa.string(), pad=0),
+                                _list_array(protos, pa.int32()),
+                                _list_array(ttls, pa.int32())).to_pylist()
+    for g, f, p, t in zip(got, flags, protos, ttls):
+        np.testing.assert_array_equal(np.asarray(g), netml_ref.get_header(p, t, f))
+
+
+@pytest.mark.parametrize("token_type", [pa.int32(), pa.float64()])
+def test_stats_batch_pyarrow(token_type):
+    """The STATS batch kernel on sliced ListArrays equals the reference
+    exactly on every column but std (a sequential sum, within 1e-14
+    relative of np.std's pairwise one), across one-value rows, zero
+    durations and tied sizes."""
+    rng, times = _iat_rows()
+    times = [t for t in times if len(t)] + [np.full(4, 3.5)]
+    sizes = [rng.integers(0, 1500, len(t)) for t in times]
+    sizes[0][:] = 7
+    ta = _list_array([t.tolist() for t in times], pa.float64())
+    sa = _list_array([s.tolist() for s in sizes], token_type)
+    got = np.array(kernels._stats_batch(ta, sa).to_pylist())
+    exp = np.array([netml_ref.get_STATS(t, s) for t, s in zip(times, sizes)])
+    std = STATS_COLS.index("size_std")
+    np.testing.assert_array_equal(np.delete(got, std, 1), np.delete(exp, std, 1))
+    np.testing.assert_allclose(got[:, std], exp[:, std], rtol=1e-14, atol=0)

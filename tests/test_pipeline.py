@@ -10,20 +10,27 @@ from netml_spark.oracle import netml_ref
 from netml_spark.pipeline import FeaturePlan
 
 
-def _oracle_features(token_events_pdf, feat_type, fft=False, q_interval=0.9):
-    flows = datagen.oracle_flows(token_events_pdf)
+def _oracle_features(token_events_pdf, feat_type, fft=False, q_interval=0.9, header=False):
+    # carry each event's row number through the oracle lifecycle in place
+    # of its size, so every subflow can look up its sizes and header series
+    ev = token_events_pdf.sort_values(["ts", "seq"], kind="stable").reset_index(drop=True)
+    flows = datagen.oracle_flows(ev.assign(token=np.arange(len(ev))))
     sess = netml_ref.pcap2flows(flows, flow_pkts_thres=2, timeout=600.0)
     durations = [netml_ref.flow_duration(t) for _, t, _ in sess]
     interval = netml_ref.split_interval(durations, q_interval)
     subs = netml_ref.flows2subflows(sess, interval, flow_pkts_thres=2)
-    X = netml_ref.flow2features(subs, feat_type, q_interval, fft=fft)
+    headers = [(ev.proto.to_numpy()[i], ev.ttl.to_numpy()[i], ev.tcp_flags.to_numpy()[i])
+               for _, _, i in subs]
+    subs = [(fid, t, ev.token.to_numpy()[i]) for fid, t, i in subs]
+    X = netml_ref.flow2features(subs, feat_type, q_interval, fft=fft, header=header,
+                                headers_input=headers)
     # key rows by (doc_id, t0, n) for alignment with the Spark side
     keys = [(fid, round(float(t[0]), 9), len(t)) for fid, t, _ in subs]
     return dict(zip(keys, X)), interval
 
 
-def _spark_features(spark, token_events_df, feat_type, fft=False):
-    plan = FeaturePlan(feat_type=feat_type, fft=fft, q_interval=0.9)
+def _spark_features(spark, token_events_df, feat_type, fft=False, header=False):
+    plan = FeaturePlan(feat_type=feat_type, fft=fft, header=header, q_interval=0.9)
     out = plan.extract(token_events_df, ("doc_id",), "ts", "token", ("seq",))
     rows = out.select("doc_id", "times", "features").collect()
     got = {
@@ -54,21 +61,27 @@ def test_featureplan_on_timestamp_input(spark):
     assert 1.0 < plan.split_interval < 1e6
 
 
+PARITY_CASES = [
+    ("IAT", False, False),
+    ("SIZE", False, False),
+    ("IAT_SIZE", False, False),
+    ("STATS", False, False),
+    ("SAMP_NUM", False, False),
+    ("SAMP_SIZE", False, False),
+    ("IAT", True, False),  # FFT-IAT
+    ("STATS", False, True),  # header, padded
+    ("IAT", True, True),  # FFT-IAT with the header's FFT
+]
+
+
 @pytest.mark.parametrize(
-    "feat_type,fft",
-    [
-        ("IAT", False),
-        ("SIZE", False),
-        ("IAT_SIZE", False),
-        ("STATS", False),
-        ("SAMP_NUM", False),
-        ("SAMP_SIZE", False),
-        ("IAT", True),  # FFT-IAT
-    ],
+    "feat_type,fft,header", PARITY_CASES,
+    ids=[f"{f}-{x}" + ("-header" if h else "") for f, x, h in PARITY_CASES],
 )
-def test_featureplan_parity(spark, token_events_df, token_events_pdf, feat_type, fft):
-    ora, interval = _oracle_features(token_events_pdf, feat_type, fft=fft)
-    got, plan = _spark_features(spark, token_events_df, feat_type, fft=fft)
+def test_featureplan_parity(spark, token_events_df, token_events_pdf, feat_type, fft,
+                            header):
+    ora, interval = _oracle_features(token_events_pdf, feat_type, fft=fft, header=header)
+    got, plan = _spark_features(spark, token_events_df, feat_type, fft=fft, header=header)
     assert abs(plan.split_interval - interval) < 1e-9, "split interval mismatch"
     assert set(got.keys()) == set(ora.keys())
     dims = {len(v) for v in got.values()}
@@ -178,3 +191,38 @@ def test_featureplan_drops_null_ts_rows(spark, interval, ts_type):
     assert len(want) > (2 if interval else 0)
     assert got_interval == want_interval
     assert got == want
+
+
+@pytest.mark.parametrize("case", ["null_entity", "null_token"])
+@pytest.mark.parametrize(
+    "feat_type", ["IAT", "SIZE", "IAT_SIZE", "STATS", "SAMP_NUM", "SAMP_SIZE", "FFT-IAT"])
+def test_featureplan_null_entity_and_token(spark, feat_type, case):
+    """One contract for every feature type. A null entity key is a key
+    like any other: its flows are kept. A null token is a packet without a
+    size, which the reference cannot have, so extract drops the row with
+    the null-ts rows: the output equals that of the input without it."""
+    # four bursts 30 s apart per entity: a 10 s interval keeps three
+    # four-packet subflows each (the trailing one is discarded)
+    times = [30.0 * b + i for b in range(4) for i in range(4)]
+    entities = ("a", None, "b") if case == "null_entity" else ("a", "b")
+    clean = [(e, 1000.0 * k + t, 40 + i, i) for k, e in enumerate(entities)
+             for i, t in enumerate(times)]
+    bad = [("a", 31.5, None, 99), ("b", 1060.5, None, 99)]
+    schema = "doc_id string, ts double, token int, seq long"
+
+    def run(rows):
+        plan = FeaturePlan(feat_type=feat_type.replace("FFT-", ""),
+                           fft=feat_type.startswith("FFT-"), interval=10.0)
+        out = plan.extract(spark.createDataFrame(rows, schema), ("doc_id",), "ts",
+                           "token", ("seq",), carry_cols=())
+        return sorted((tuple(r) for r in out.select("doc_id", "times", "tokens",
+                                                    "features").collect()),
+                      key=lambda r: (r[0] or "", r[1]))
+
+    got = run(clean + bad if case == "null_token" else clean)
+    keys = [(r[0], r[1][0]) for r in got]
+    assert keys == sorted([(e, 1000.0 * k + 30.0 * b) for k, e in enumerate(entities)
+                           for b in range(3)], key=lambda r: (r[0] or "", r[1]))
+    assert all(not np.isnan(r[3]).any() for r in got)
+    if case == "null_token":
+        assert got == run(clean)
