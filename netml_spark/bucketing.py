@@ -11,7 +11,7 @@ Parquet bucketing requires the table catalog (`saveAsTable`), not plain
 the default in-memory/derby catalog rooted at ``spark.sql.warehouse.dir``;
 on a real deployment the same code lands in the shared metastore or an
 Iceberg catalog (Iceberg's `bucket(N, col)` partition transform is the
-equivalent layout; see manifest.iceberg_available).
+equivalent layout; see CheckpointManifest's ``iceberg_table``).
 
 The no-exchange property is pinned by tests/test_bucketing.py, which
 inspects the physical plan of a bucketed-bucketed join.

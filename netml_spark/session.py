@@ -45,7 +45,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Arrow batch sizing (r6, guide §4.2): the r1 value of 2048 rows
         # made every 5M-row kernel pass pay ~2600 per-batch overheads
-        # (mapInArrow slice + kernel dispatch + numpy setup). 8192 rows
+        # (Arrow batch exchange + kernel dispatch + numpy setup). 8192 rows
         # amortizes that 4x while the BYTE cap below (Spark 4) keeps
         # worst-case batches of long token arrays memory-bounded — the
         # byte cap, not the row cap, is the real safety knob. Callers that

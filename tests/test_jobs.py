@@ -172,6 +172,33 @@ def test_classify_empty_input_zero_report(spark, tmp_path, capsys, model_path):
     assert "# flows=0 anomalies=0" in capsys.readouterr().out
 
 
+def test_extract_features_checkpoint_in_iceberg_session(spark, tmp_path, capsys,
+                                                       monkeypatch):
+    """A session with an Iceberg catalog must not break the checkpoint
+    path. The job passes no ``iceberg_table``, so partitions land as
+    parquet dirs. The manifest used to detect Iceberg itself
+    (``manifest.iceberg_available``) and then raise ValueError for the
+    identifier the job never passes; the patch stands in for that
+    detection reading True."""
+    import jobs.extract_features as ef
+    from netml_spark import manifest
+
+    monkeypatch.setattr(manifest, "iceberg_available", lambda spark: True,
+                        raising=False)
+    ckpt = tmp_path / "ckpt"
+    argv = [
+        "--input", EVENTS, "--output", str(tmp_path / "features"),
+        "--feat-type", "STATS", "--entity-cols", "user_id",
+        "--token-col", "value", "--order-cols", "event_id",
+        "--checkpoint", str(ckpt), "--partition-col", "event_type",
+    ]
+    ef.main(argv)
+    assert "partitions done=5 skipped=0 errors=0" in capsys.readouterr().out
+    assert len(list((ckpt / "features_STATS").glob("event_type=*"))) == 5
+    ef.main(argv)
+    assert "partitions done=0 skipped=5 errors=0" in capsys.readouterr().out
+
+
 @pytest.mark.parametrize("extra", [[], ["--checkpoint", "ckpt",
                                         "--partition-col", "event_type"],
                                    "learn+classify"])

@@ -5,17 +5,22 @@ import os
 import pandas as pd
 from pyspark.sql import functions as F
 
+from netml_spark import manifest
 from netml_spark.manifest import CheckpointManifest, partition_metrics
+
+
+def _metrics(df):
+    return df.agg(*partition_metrics(df.columns)).collect()[0]
 
 
 def test_partition_metrics_order_insensitive(spark):
     a = spark.createDataFrame(pd.DataFrame({"x": [1, 2, 3], "y": ["a", "b", "c"]}))
     b = spark.createDataFrame(pd.DataFrame({"x": [3, 1, 2], "y": ["c", "a", "b"]}))
-    ma = partition_metrics(a).collect()[0]
-    mb = partition_metrics(b).collect()[0]
+    ma = _metrics(a)
+    mb = _metrics(b)
     assert ma.row_count == 3 and ma.checksum == mb.checksum
     c = spark.createDataFrame(pd.DataFrame({"x": [1, 2, 4], "y": ["a", "b", "c"]}))
-    assert partition_metrics(c).collect()[0].checksum != ma.checksum
+    assert _metrics(c).checksum != ma.checksum
 
 
 def test_run_stage_resume(spark, tmp_path):
@@ -42,6 +47,43 @@ def test_run_stage_resume(spark, tmp_path):
     assert os.path.exists(os.path.join(root, "stage1", "src=a"))
     man = m.read().filter(F.col("status") == "ok").toPandas()
     assert len(man) == 3 and set(man.partition) == {"a", "b", "c"}
+
+
+def test_run_stage_one_job_per_partition(spark, tmp_path, monkeypatch):
+    """A partition's row count and checksum ride its own write
+    (``DataFrame.observe``): each partition runs ONE Spark job, counted in
+    the job group ``build`` sets on the partition's thread, and run_stage
+    caches nothing. The recorded metrics equal a separate aggregation's."""
+    try:
+        from pyspark.sql.classic.dataframe import DataFrame
+    except ImportError:
+        from pyspark.sql import DataFrame
+
+    persisted = []
+    for name in ("cache", "persist"):
+        monkeypatch.setattr(DataFrame, name,
+                            lambda self, *a, **k: persisted.append(self) or self)
+    sc = spark.sparkContext
+    group = f"{tmp_path.name}_"
+
+    def frame(p):
+        return spark.createDataFrame(pd.DataFrame({"src": [p] * 3, "v": [1, 2, 3]}))
+
+    def build(p):
+        sc.setJobGroup(group + p, f"run_stage partition {p}")
+        return frame(p)
+
+    m = CheckpointManifest(spark, str(tmp_path / "ckpt_jobs"))
+    parts = ["a", "b", "c"]
+    assert m.run_stage("s", parts, build, "src") == {p: ("ok", 3) for p in parts}
+    assert persisted == []
+    for p in parts:
+        assert len(sc.statusTracker().getJobIdsForGroup(group + p)) == 1, p
+    man = m.read().toPandas().set_index("partition")
+    for p in parts:
+        want = _metrics(frame(p))
+        assert man.loc[p, "row_count"] == want.row_count == 3
+        assert man.loc[p, "checksum"] == want.checksum
 
 
 def test_run_stage_input_fingerprint_recompute(spark, tmp_path):
@@ -132,17 +174,18 @@ def test_resume_without_fingerprint_skips_fingerprinted_rows(spark, tmp_path):
     assert calls == [] and all(v[0] == "skipped" for v in r.values())
 
 
-def test_manifest_file_count_bounded(spark, tmp_path):
+def test_manifest_file_count_bounded(spark, tmp_path, monkeypatch):
     """A many-partition backfill must not leave one manifest file per
     partition: records are flushed in batches (verdict r2 #7). 24
-    partitions at flush_every=8 -> <= a handful of parquet files."""
+    partitions at 8 rows a flush -> <= a handful of parquet files."""
+    monkeypatch.setattr(manifest, "FLUSH_EVERY", 8)
     m = CheckpointManifest(spark, str(tmp_path / "ckpt_batch"))
 
     def build(p):
         return spark.createDataFrame(pd.DataFrame({"src": [p], "v": [1]}))
 
     parts = [f"p{i:02d}" for i in range(24)]
-    r = m.run_stage("s", parts, build, "src", max_parallel=4, flush_every=8)
+    r = m.run_stage("s", parts, build, "src")
     assert all(r[p] == ("ok", 1) for p in parts)
     files = [f for f in os.listdir(m.path) if f.endswith(".parquet")]
     assert len(files) <= 4, files  # ceil(24/8)=3 flushes (+ slack)
@@ -150,47 +193,37 @@ def test_manifest_file_count_bounded(spark, tmp_path):
     assert sorted(man.partition) == parts  # nothing lost in batching
 
 
-def test_iceberg_requires_explicit_table_identifier(spark, tmp_path):
-    """The Iceberg backend takes an EXPLICIT catalog identifier — round 2
-    derived one from the filesystem path, a guess no real catalog accepts.
-    iceberg=True without iceberg_table is a constructor error; the
-    parquet backend ignores the identifier both ways."""
-    import pytest
-
-    with pytest.raises(ValueError, match="iceberg_table"):
-        CheckpointManifest(spark, str(tmp_path / "ice1"), iceberg=True)
-
-    # identifier present but backend degraded to parquet -> parquet dirs
-    m = CheckpointManifest(spark, str(tmp_path / "ice2"), iceberg=False,
-                           iceberg_table="local.db.features")
-    assert m.iceberg is False and m.iceberg_table == "local.db.features"
-    m.run_stage("s", ["a"], lambda p: spark.createDataFrame(
-        pd.DataFrame({"src": [p], "v": [1]})), "src")
-    assert os.path.exists(str(tmp_path / "ice2" / "s" / "src=a"))
-
-    # iceberg=True + identifier: accepted (writeTo targets the identifier;
-    # executing it needs a runtime jar, env-blocked in this sandbox)
-    m2 = CheckpointManifest(spark, str(tmp_path / "ice3"), iceberg=True,
-                            iceberg_table="local.db.features")
-    assert m2.iceberg_table == "local.db.features"
+def _patch_write_to(monkeypatch, write_to):
+    try:
+        # Spark 4: the classic DataFrame subclass overrides writeTo, so the
+        # interception must land on the class actually dispatched
+        from pyspark.sql.classic.dataframe import DataFrame
+    except ImportError:
+        from pyspark.sql import DataFrame
+    monkeypatch.setattr(DataFrame, "writeTo", write_to)
 
 
-def test_iceberg_detection_degrades_to_parquet(spark, tmp_path):
-    """No Iceberg jar in the sandbox -> detection is False and the
-    manifest writes parquet dirs (the writeTo hook engages only when a
-    runtime jar + catalog are present)."""
-    from netml_spark.manifest import iceberg_available
+def test_iceberg_requires_explicit_table_identifier(spark, tmp_path, monkeypatch):
+    """The Iceberg backend is chosen by an EXPLICIT catalog identifier
+    alone — round 2 derived one from the filesystem path, a guess no real
+    catalog accepts, and a session that merely had an Iceberg catalog used
+    to switch the backend and then demand the identifier. Without
+    ``iceberg_table`` partitions land as parquet dirs and writeTo is never
+    called."""
+    def no_write_to(self, table):
+        raise AssertionError(f"writeTo({table!r}) without an iceberg_table")
 
-    assert iceberg_available(spark) is False
+    _patch_write_to(monkeypatch, no_write_to)
     m = CheckpointManifest(spark, str(tmp_path / "ice"))
-    assert m.iceberg is False
-    m.run_stage("s", ["a"], lambda p: spark.createDataFrame(
+    assert m.iceberg_table is None
+    r = m.run_stage("s", ["a"], lambda p: spark.createDataFrame(
         pd.DataFrame({"src": [p], "v": [1]})), "src")
+    assert r == {"a": ("ok", 1)}
     assert os.path.exists(str(tmp_path / "ice" / "s" / "src=a"))
 
 
 def test_run_stage_parallel(spark, tmp_path):
-    """max_parallel > 1 computes every partition exactly once."""
+    """Partitions running concurrently are each computed exactly once."""
     root = str(tmp_path / "ckpt_par")
     m = CheckpointManifest(spark, root)
 
@@ -198,7 +231,7 @@ def test_run_stage_parallel(spark, tmp_path):
         return spark.createDataFrame(pd.DataFrame({"src": [p] * 3, "v": [1, 2, 3]}))
 
     parts = [f"p{i}" for i in range(6)]
-    r = m.run_stage("par", parts, build, "src", max_parallel=4)
+    r = m.run_stage("par", parts, build, "src")
     assert all(r[p] == ("ok", 3) for p in parts)
     man = m.read().filter(F.col("status") == "ok").toPandas()
     assert sorted(man.partition) == sorted(parts)
@@ -207,43 +240,37 @@ def test_run_stage_parallel(spark, tmp_path):
 def test_iceberg_write_call_shape_pinned(spark, tmp_path, monkeypatch):
     """r3-verdict item 8: the env-blocked Iceberg integration's CALL SHAPE,
     pinned without the runtime jar by intercepting DataFrame.writeTo —
-    run_stage under iceberg=True must target EXACTLY the caller's
-    iceberg_table identifier via overwritePartitions, with the partition
-    column stamped on every frame, and still record 'ok' manifest rows."""
-    try:
-        # Spark 4: the classic DataFrame subclass overrides writeTo, so the
-        # interception must land on the class actually dispatched
-        from pyspark.sql.classic.dataframe import DataFrame
-    except ImportError:
-        from pyspark.sql import DataFrame
-
+    run_stage given an iceberg_table must target EXACTLY that identifier
+    via overwritePartitions, with the partition column stamped on every
+    frame, and still record 'ok' manifest rows with the observed counts.
+    Like the real writer, the fake one executes the frame it receives (a
+    noop write): the manifest reads the row count and checksum from that
+    execution, and ``Observation.get`` blocks until one has run."""
     calls = []
 
     class _FakeWriter:
-        def __init__(self, table, cols):
-            self.table, self.cols = table, cols
+        def __init__(self, df, table):
+            self.df, self.table = df, table
 
         def overwritePartitions(self):
-            calls.append(("overwritePartitions", self.table, self.cols))
+            self.df.write.format("noop").mode("overwrite").save()
+            calls.append(("overwritePartitions", self.table, list(self.df.columns)))
 
-    def fake_write_to(self, table):
-        return _FakeWriter(table, list(self.columns))
-
-    monkeypatch.setattr(DataFrame, "writeTo", fake_write_to)
+    _patch_write_to(monkeypatch, lambda self, table: _FakeWriter(self, table))
     root = str(tmp_path / "ice_shape")
-    m = CheckpointManifest(spark, root, iceberg=True,
-                           iceberg_table="cat.db.features")
+    m = CheckpointManifest(spark, root, iceberg_table="cat.db.features")
     res = m.run_stage(
         "feat", ["s1", "s2"],
         lambda p: spark.createDataFrame(pd.DataFrame({"v": [1, 2]})),
         partition_col="source",
     )
-    assert {s for s, _ in res.values()} == {"ok"}
+    assert res == {"s1": ("ok", 2), "s2": ("ok", 2)}
     assert len(calls) == 2
     for verb, table, cols in calls:
         assert verb == "overwritePartitions"
         assert table == "cat.db.features"   # the explicit identifier, never a path guess
         assert "source" in cols             # partition column stamped before writeTo
+    assert not os.path.exists(os.path.join(root, "feat"))  # no parquet dirs
     # manifest recorded both partitions ok -> a rerun skips them
     res2 = m.run_stage(
         "feat", ["s1", "s2"],

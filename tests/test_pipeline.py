@@ -193,21 +193,60 @@ def test_featureplan_drops_null_ts_rows(spark, interval, ts_type):
     assert got == want
 
 
-@pytest.mark.parametrize("case", ["null_entity", "null_token"])
+def _oracle_keyed(rows, feat_type):
+    """The reference lifecycle over (entity, ts, token, seq) rows at a 10 s
+    interval, keyed by (entity, first ts). The rows extract drops (null or
+    NaN ts, null token) never reach it; a None entity is a key like any
+    other."""
+    rows = [r for r in rows if r[1] is not None and not np.isnan(r[1]) and r[2] is not None]
+    flows = {}
+    for e, t, tok, _ in sorted(rows, key=lambda r: (r[1], r[3])):
+        flows.setdefault(e, []).append((t, tok))
+    flows = [(e, np.array([t for t, _ in v]), np.array([k for _, k in v]))
+             for e, v in flows.items()]
+    subs = netml_ref.flows2subflows(netml_ref.pcap2flows(flows, 2, 600.0), 10.0, 2)
+    if not subs:
+        return {}
+    X = netml_ref.flow2features(subs, feat_type.replace("FFT-", ""), 0.9,
+                                fft=feat_type.startswith("FFT-"))
+    return {(e, t[0]): x for (e, t, _), x in zip(subs, X)}
+
+
+EDGE_CASES = ["null_entity", "null_token", "nan_ts", "dup_ts", "single_event", "empty"]
+
+
+@pytest.mark.parametrize("case", EDGE_CASES)
 @pytest.mark.parametrize(
     "feat_type", ["IAT", "SIZE", "IAT_SIZE", "STATS", "SAMP_NUM", "SAMP_SIZE", "FFT-IAT"])
 def test_featureplan_null_entity_and_token(spark, feat_type, case):
-    """One contract for every feature type. A null entity key is a key
-    like any other: its flows are kept. A null token is a packet without a
-    size, which the reference cannot have, so extract drops the row with
-    the null-ts rows: the output equals that of the input without it."""
+    """One contract for every feature type, pinned against the reference
+    lifecycle on each edge case:
+
+    - null_entity: a null entity key is a key like any other; its flows
+      are kept;
+    - null_token: a packet without a size, which the reference cannot
+      have, is dropped with the null-ts rows;
+    - nan_ts: a null or NaN ts places a packet nowhere in time; dropped;
+    - dup_ts: packets that share a ts are all kept, in seq order;
+    - single_event: a one-packet entity, and a lone packet that forms a
+      one-packet subflow, yield no flow;
+    - empty: no rows in gives an empty frame out (``plan.empty_input``).
+
+    Where rows are dropped, the output equals that of the input without
+    them."""
     # four bursts 30 s apart per entity: a 10 s interval keeps three
     # four-packet subflows each (the trailing one is discarded)
     times = [30.0 * b + i for b in range(4) for i in range(4)]
     entities = ("a", None, "b") if case == "null_entity" else ("a", "b")
     clean = [(e, 1000.0 * k + t, 40 + i, i) for k, e in enumerate(entities)
              for i, t in enumerate(times)]
-    bad = [("a", 31.5, None, 99), ("b", 1060.5, None, 99)]
+    extra = {
+        "null_token": [("a", 31.5, None, 99), ("b", 1060.5, None, 99)],
+        "nan_ts": [("a", None, 7, 99), ("b", float("nan"), 8, 99)],
+        "dup_ts": [("a", 31.0, 77, 99), ("b", 1062.0, 78, 99)],
+        "single_event": [("a", 45.0, 7, 99), ("c", 5000.0, 8, 99)],
+    }.get(case, [])
+    rows = [] if case == "empty" else clean + extra
     schema = "doc_id string, ts double, token int, seq long"
 
     def run(rows):
@@ -215,14 +254,25 @@ def test_featureplan_null_entity_and_token(spark, feat_type, case):
                            fft=feat_type.startswith("FFT-"), interval=10.0)
         out = plan.extract(spark.createDataFrame(rows, schema), ("doc_id",), "ts",
                            "token", ("seq",), carry_cols=())
-        return sorted((tuple(r) for r in out.select("doc_id", "times", "tokens",
-                                                    "features").collect()),
-                      key=lambda r: (r[0] or "", r[1]))
+        got = sorted((tuple(r) for r in out.select("doc_id", "times", "tokens",
+                                                   "features").collect()),
+                     key=lambda r: (r[0] or "", r[1]))
+        return got, plan
 
-    got = run(clean + bad if case == "null_token" else clean)
+    got, plan = run(rows)
+    assert plan.empty_input == (case == "empty")
     keys = [(r[0], r[1][0]) for r in got]
-    assert keys == sorted([(e, 1000.0 * k + 30.0 * b) for k, e in enumerate(entities)
-                           for b in range(3)], key=lambda r: (r[0] or "", r[1]))
+    want_keys = [] if case == "empty" else [
+        (e, 1000.0 * k + 30.0 * b) for k, e in enumerate(entities) for b in range(3)]
+    assert keys == sorted(want_keys, key=lambda r: (r[0] or "", r[1]))
     assert all(not np.isnan(r[3]).any() for r in got)
-    if case == "null_token":
-        assert got == run(clean)
+    want = _oracle_keyed(rows, feat_type)
+    assert set(want) == set(keys)
+    for r in got:
+        np.testing.assert_allclose(r[3], want[(r[0], r[1][0])], rtol=1e-9, atol=1e-9)
+    if case == "dup_ts":
+        # each tie follows its twin (lower seq first)
+        assert sorted(tuple(r[2]) for r in got if len(r[1]) == 5) == [
+            (44, 45, 77, 46, 47), (48, 49, 50, 78, 51)]
+    if case in ("null_token", "nan_ts", "single_event"):
+        assert got == run(clean)[0]

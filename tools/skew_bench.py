@@ -25,7 +25,7 @@ Run: python tools/skew_bench.py   (SKEW_ROWS=4000000 SKEW_CPUS=16)
 NEVER run while any other Spark job is active (CLAUDE.md).
 
 SKEW_ISOLATE=1 runs each query in its OWN subprocess JVM (fences and
-all), like scaling.py's bench legs. Motivation (2026-08-17, four runs
+all), one application per leg. Motivation (2026-08-17, four runs
 in a row): at 16M rows the post-leg fence spiked 40-204 s immediately
 after whichever leg allocated heavily — GB-scale aggregation buffers
 balloon the shared JVM heap to ~40 g and the NEXT minutes pay full-GC
