@@ -1087,10 +1087,11 @@ def q_netml_subflows(spark, sf_dir):
         _events(spark, sf_dir), ("user_id",), "ts", 600.0, 2, ("event_id",),
         defer_seg_filter=True,
     )
-    # defer + assume_partitioned: the subflow min-size filter subsumes the
-    # deferred session-size filter (exact — the DuckDB recursive-CTE oracle
-    # pins it), and sess is already hash-partitioned by user_id, so the
-    # whole chain runs on ONE exchange.
+    # defer: the subflow min-size filter subsumes the deferred session-size
+    # filter (exact — the DuckDB recursive-CTE oracle pins it). sess is
+    # already hash-partitioned by user_id, which meets the subflows window's
+    # distribution, so the whole chain runs on ONE exchange
+    # (assume_partitioned is ignored).
     subs = subflows_interval(sess, 300.0, ("user_id", "session_id"), "ts", 2,
                              ("event_id",), assume_partitioned=True)
     return (

@@ -77,18 +77,19 @@ def main(argv=None):
     if args.checkpoint:
         from netml_spark.manifest import CheckpointManifest
 
-        parts = [
-            r[0] for r in events.select(args.partition_col).distinct().collect()
-        ]
+        parts = sorted(  # a null value sorts first
+            (r[0] for r in events.select(args.partition_col).distinct().collect()),
+            key=lambda v: (v is not None, v),
+        )
         plans = {}  # partition value -> the plan holding its sequences cache
 
         def build(p):
             plans[p] = plan = new_plan()
-            return extract(plan, events.filter(F.col(args.partition_col) == p))
+            return extract(plan, events.filter(F.col(args.partition_col).eqNullSafe(p)))
 
         man = CheckpointManifest(spark, args.checkpoint)
         results = man.run_stage(
-            f"features_{args.feat_type}", sorted(parts), build,
+            f"features_{args.feat_type}", parts, build,
             args.partition_col, release=lambda p: plans.pop(p).release(),
         )
         done = sum(1 for v in results.values() if v[0] == "ok")

@@ -11,6 +11,8 @@ Design:
   directory ``<root>/<stage>/<partition_col>=<v>/``, or, when the manifest
   is given an ``iceberg_table`` identifier, that Iceberg table through
   ``writeTo(...).overwritePartitions()`` with the partition column stamped;
+  a null value is named ``NULL_PARTITION`` in the directory and the
+  manifest, and stamped null;
 - the partition's row count and checksum ride its own write: ``run_stage``
   attaches them with ``DataFrame.observe``, so a partition runs the jobs of
   its write and nothing else (no cache, no separate aggregation). The
@@ -53,6 +55,14 @@ from pyspark.sql import functions as F
 
 FLUSH_EVERY = 32  # manifest rows per parquet file
 MAX_PARALLEL = 4  # partitions built and written concurrently
+# Spark's directory name for a null partition value: no real value takes
+# it, and partition discovery reads it back as null
+NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def partition_name(pv) -> str:
+    """The manifest and directory name of partition value ``pv``."""
+    return NULL_PARTITION if pv is None else str(pv)
 
 
 def xor_checksum(h) -> F.Column:
@@ -126,7 +136,7 @@ class CheckpointManifest:
     def _record(self, stage: str, partition: str, input_fp: str, wall_s: float,
                 row_count: int = 0, checksum: int = 0, status: str = "ok") -> None:
         row = {
-            "stage": stage, "partition": str(partition),
+            "stage": stage, "partition": partition_name(partition),
             "input_fp": input_fp,
             "row_count": int(row_count), "checksum": int(checksum),
             "wall_s": float(wall_s), "status": status,
@@ -144,14 +154,11 @@ class CheckpointManifest:
 
     def _write_partition(self, df: DataFrame, stage: str, partition_col: str, pv) -> None:
         if self.iceberg_table:
-            (
-                df.withColumn(partition_col, F.lit(str(pv)))
-                .writeTo(self.iceberg_table)
-                .overwritePartitions()
-            )
+            stamp = F.lit(None if pv is None else str(pv)).cast("string")
+            df.withColumn(partition_col, stamp).writeTo(self.iceberg_table).overwritePartitions()
         else:
             df.write.mode("overwrite").parquet(
-                os.path.join(self.root, stage, f"{partition_col}={pv}")
+                os.path.join(self.root, stage, f"{partition_col}={partition_name(pv)}")
             )
 
     def run_stage(
@@ -194,7 +201,8 @@ class CheckpointManifest:
             except Exception as e:
                 self._record(stage, pv, "", time.time() - t0, status="error")
                 return pv, ("error", str(e))
-            if str(pv) in done and (fp == "" or done[str(pv)] == fp):
+            name = partition_name(pv)
+            if name in done and (fp == "" or done[name] == fp):
                 return pv, ("skipped", None)
             try:
                 df = build(pv)

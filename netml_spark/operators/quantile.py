@@ -8,8 +8,9 @@ pass 2 (the only driver round-trip in the engine, SURVEY.md §3.1).
 ``F.percentile`` is Spark's exact percentile with linear interpolation —
 identical to ``np.quantile``'s default (parity pinned in tests). At
 10^12-row scale exact percentile of *per-flow* aggregates is itself a big
-shuffle; ``approx=True`` switches to ``percentile_approx`` with a pinned
-accuracy (documented tolerance, SURVEY.md §7.4.3). Only
+shuffle; ``approx=True`` switches to ``percentile_approx`` at
+``QUANTILE_ACCURACY`` (documented tolerance, SURVEY.md §7.4.3: the
+result's rank is off by at most n / QUANTILE_ACCURACY). Only
 ``jobs/extract_features.py --approx-quantiles`` sets it.
 """
 
@@ -17,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+QUANTILE_ACCURACY = 10000  # percentile_approx accuracy (its default)
 
 
 class EmptyInputError(ValueError):
@@ -26,11 +29,10 @@ class EmptyInputError(ValueError):
     backward compatibility with round-3 callers."""
 
 
-def exact_quantile(df: DataFrame, col: str | Column, q: float, approx: bool = False,
-                   accuracy: int = 10000) -> float:
+def exact_quantile(df: DataFrame, col: str | Column, q: float, approx: bool = False) -> float:
     c = F.col(col) if isinstance(col, str) else col
     if approx:
-        expr = F.percentile_approx(c, F.lit(float(q)), F.lit(accuracy))
+        expr = F.percentile_approx(c, F.lit(float(q)), F.lit(QUANTILE_ACCURACY))
     else:
         expr = F.percentile(c, F.lit(float(q)))
     row = df.agg(expr.alias("q")).collect()[0]

@@ -13,8 +13,9 @@ All variants are declarative passes over ``(entity, ts)``:
                             grid arithmetic over previous splits — inherently
                             sequential per entity — so a numpy kernel labels
                             each sorted row inside a narrow Arrow iterator UDF
-                            over (entity, ts) only; a native Filter drops the
-                            discarded rows.
+                            over (group-head flag, seconds) only; a native
+                            Window marks the group heads and a native Filter
+                            drops the discarded rows.
 
 Scale notes (100 TB): the only wide exchange is hash partitioning by the
 entity key; every window uses the same partitioning so Catalyst reuses the
@@ -30,7 +31,6 @@ from typing import Iterator, Sequence, Tuple
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
@@ -193,37 +193,41 @@ def subflows_interval(
     Rows whose ts is null (or NaN) are dropped first: they have no place
     on the split grid.
 
-    Execution: ``repartition(entity)`` + ``sortWithinPartitions(entity,
-    ts, order)``, then a label column from an Arrow iterator UDF over
-    (entity, ts) only, then a native Filter on ``label >= 0``: one shuffle,
-    and pass-through columns never cross the Python boundary. The kernel
-    (``_subflow_labels``) labels whole batches of groups at once and gives
-    -1 to rows the trailing-segment discard or the min-size filter drops.
-    The UDF is nondeterministic on purpose: a deterministic one is pushed
-    below the Sort, and the kernel needs sorted input.
+    Execution: one native Window over the (entity, ts, order) spec marks
+    each group's first row (``row_number() == 1``); an Arrow iterator UDF
+    over (head flag, epoch seconds) only labels the rows; a native Filter
+    keeps ``label >= 0``. Spark owns both the grouping (its window
+    partitioning groups null keys together, and NaN keys together) and
+    the partitioning: EnsureRequirements plans the entity exchange only
+    when the input is not already clustered by the entity keys, so the
+    fused ``sessionize_timeout -> subflows_interval`` chain runs on the
+    sessionize exchange alone. Entity keys and pass-through columns never
+    cross the Python boundary. The kernel (``_subflow_labels``) labels
+    whole batches of groups at once and gives -1 to rows the
+    trailing-segment discard or the min-size filter drops.
 
-    ``assume_partitioned=True`` skips the repartition: correct whenever
-    every (entity...) group already lives in ONE partition — in
-    particular for ``sessionize_timeout`` output, which is hash-partitioned
-    by a PREFIX of these entity cols (its window exchange). The within-
-    partition sort still runs (cheap, no exchange), so the whole
-    sessionize -> subflows chain needs exactly one shuffle. Composition
-    note: ``sessionize_timeout(defer_seg_filter=True)`` -> this operator
-    is EXACTLY equal to the unfused chain — every subflow of a session
-    with < thres rows has < thres rows itself, so the subflow min-size
-    filter subsumes the deferred session-size filter (both use
+    The UDF is nondeterministic on purpose: a deterministic one is free to
+    be planned twice, and the second evaluation then runs over the rows the
+    Filter has already dropped, which breaks the groups the kernel needs
+    whole and in order.
+
+    ``assume_partitioned`` is ignored (kept for callers that still pass
+    it): the window's distribution requirement decides the exchange.
+    Composition note: ``sessionize_timeout(defer_seg_filter=True)`` -> this
+    operator is EXACTLY equal to the unfused chain — every subflow of a
+    session with < thres rows has < thres rows itself, so the subflow
+    min-size filter subsumes the deferred session-size filter (both use
     flow_pkts_thres; pinned by the netml_subflows DuckDB gate)."""
     interval = float(interval)
     thres = max(2, int(flow_pkts_thres))
 
-    def label(batches: Iterator[Tuple[pa.Array, ...]]) -> Iterator[pa.Array]:
+    def label(batches: Iterator[Tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
         return _subflow_labels(batches, interval, thres)
 
     label = arrow_udf(label, "int").asNondeterministic()
     df = drop_null_ts(df, ts_col)  # a NaN grid anchor cannot split
-    base = df if assume_partitioned else df.repartition(*entity_cols)
-    ordered = base.sortWithinPartitions(*entity_cols, ts_col, *order_cols)
-    return (ordered.withColumn(subflow_col, label(*entity_cols, ts_col))
+    head = F.row_number().over(_entity_window(entity_cols, ts_col, order_cols)) == 1
+    return (df.withColumn(subflow_col, label(head, ts_seconds(df, ts_col)))
             .filter(F.col(subflow_col) >= 0))
 
 
@@ -274,63 +278,27 @@ def _subflow_assign(t: np.ndarray, starts: np.ndarray, interval: float,
     return keep, sub
 
 
-def _na_mask(col: pa.Array) -> pa.Array:
-    m = pc.is_null(col)
-    if pa.types.is_floating(col.type):
-        m = pc.or_(m, pc.fill_null(pc.is_nan(col), False))
-    return m
-
-
-def _to_seconds(col: pa.Array) -> np.ndarray:
-    if pa.types.is_timestamp(col.type):
-        scale = {"s": 1.0, "ms": 1e3, "us": 1e6, "ns": 1e9}[col.type.unit]
-        # epoch seconds (wall time as UTC — matches util.ts_seconds)
-        return col.cast(pa.int64()).to_numpy(zero_copy_only=False) / scale
-    return col.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-
-
-def _group_heads(keys: list, prev: list | None) -> np.ndarray:
-    """Indices of this batch's rows whose key differs from the row before.
-    Row 0 is tested against ``prev`` (the previous batch's last key row)
-    or is a head at the start of the stream. Null (or NaN) keys group
-    together, matching groupBy/sort semantics."""
-    n = len(keys[0])
-    head = np.zeros(n, dtype=bool)
-    head[0] = prev is None
-    for i, col in enumerate(keys):
-        if prev is not None:
-            col = pa.concat_arrays([prev[i], col])
-        a, b = col.slice(0, len(col) - 1), col.slice(1)
-        # differ iff values differ (one-sided nulls count) and NOT both-NA
-        neq = pc.fill_null(pc.not_equal(b, a), True)
-        diff = pc.and_(neq, pc.invert(pc.and_(_na_mask(a), _na_mask(b))))
-        head[n - len(diff):] |= diff.to_numpy(zero_copy_only=False)
-    return np.flatnonzero(head)
-
-
 def _subflow_labels(batches, interval: float, thres: int):
-    """The ``subflows_interval`` kernel: consumes ``(*entity, ts)`` Arrow
-    batches sorted by (entity..., ts, order...) and yields one int32 per
-    row — its subflow id, or -1 for a dropped row.
+    """The ``subflows_interval`` kernel: consumes ``(head, t)`` Arrow
+    batches — a group-head flag and epoch seconds, sorted by (entity...,
+    ts, order...) — and yields one int32 per row: its subflow id, or -1
+    for a dropped row. The stream's first row is a head.
 
     The open (possibly incomplete) last group's labels are held back until
-    the group closes; only its ts slices are kept. Output batches need not
+    the group closes; only its seconds are kept. Output batches need not
     match input batches, only the total row count."""
-    held: list = []  # ts slices of the open group
-    prev = None  # the previous batch's last key row
+    held: list = []  # seconds of the open group
     one = np.zeros(1, dtype=np.int64)
 
     def labels(t, starts):
         keep, sub = _subflow_assign(t, starts, interval, thres)
         return np.where(keep, sub, -1)
 
-    for *keys, ts in batches:
-        n = len(ts)
-        if n == 0:
+    for head, ts in batches:
+        if len(ts) == 0:
             continue
-        t = _to_seconds(ts)
-        heads = _group_heads(keys, prev)
-        prev = [k.slice(n - 1) for k in keys]
+        t = ts.to_numpy(zero_copy_only=False)
+        heads = np.flatnonzero(head.to_numpy(zero_copy_only=False))
         if len(heads) == 0:
             held.append(t)  # the open group spans the whole batch
             continue

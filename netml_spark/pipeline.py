@@ -7,7 +7,9 @@ Lifecycle (SURVEY.md §3):
   events --drop null/NaN ts and null tokens------- [one Filter]
          --sessionize_timeout--> sessions          [1 shuffle on entity]
          --(interval<=0: duration quantile)------- [pass-1 agg -> scalar]
-         --subflows_interval--> subflows           [label UDF + Filter, same keys]
+         --subflows_interval--> subflows           [head Window + label UDF
+                                                    over (head, seconds) +
+                                                    Filter; no shuffle]
          --events_to_sequences--> one row per flow [re-shuffle on flow keys]
          --(dim quantile)------------------------- [pass-2 agg -> scalar]
          --kernel dispatch + fft/pad + header----> features:array<double>
@@ -127,10 +129,11 @@ class FeaturePlan:
 
         # stage 3: grid-aligned interval re-split (parser.py:209-299).
         # sess is hash-partitioned by entity (sessionize's window exchange),
-        # so the re-split skips its repartition — one shuffle for the chain.
+        # which meets the re-split window's distribution: one shuffle for
+        # the chain.
         subs = subflows_interval(
             sess, self.split_interval, sess_keys, ts_col,
-            self.flow_pkts_thres, order_cols, assume_partitioned=True,
+            self.flow_pkts_thres, order_cols,
         )
         flow_keys = sess_keys + ["subflow_id"]
 

@@ -29,8 +29,8 @@ def get_spark(
     Parameters
     ----------
     master : e.g. ``local[8]`` / ``local[32]``. Defaults to
-        ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so the bench harness
-        can sweep parallelism for the N-vs-4N scaling-efficiency evidence.
+        ``local[$SPARK_GRAFT_CPUS]`` (env, default 32), so a run can set
+        its parallelism without code changes.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"

@@ -239,3 +239,41 @@ def test_extract_features_releases_caches(spark, tmp_path, extra):
         ])
     assert persisted() <= before
 
+
+
+def test_extract_features_checkpoint_null_partition(spark, tmp_path, capsys):
+    """--checkpoint over a partition column with nulls: the null value is
+    a partition of its own, built from its rows (``eqNullSafe``), landed
+    under Spark's ``__HIVE_DEFAULT_PARTITION__`` directory (it reads back
+    as null) and skipped on a re-run. With a timeout and an interval no
+    gap reaches, every (user, event type) group is one flow, so every
+    input row lands in its partition's output."""
+    from pyspark.sql import functions as F
+
+    import jobs.extract_features as ef
+
+    src = str(tmp_path / "events")
+    (spark.read.parquet(EVENTS)
+     .withColumn("event_type", F.when(F.col("user_id") % 5 != 0, F.col("event_type")))
+     .write.parquet(src))
+    ckpt = tmp_path / "ckpt"
+    argv = [
+        "--input", src, "--output", str(tmp_path / "features"),
+        "--feat-type", "STATS", "--entity-cols", "user_id",
+        "--token-col", "value", "--order-cols", "event_id",
+        "--timeout", "1e12", "--interval", "1e12",
+        "--checkpoint", str(ckpt), "--partition-col", "event_type",
+    ]
+    ef.main(argv)
+    assert "partitions done=6 skipped=0 errors=0" in capsys.readouterr().out
+    assert (ckpt / "features_STATS" / "event_type=__HIVE_DEFAULT_PARTITION__").is_dir()
+
+    def per_partition(df, n):
+        return {r[0]: r[1] for r in df.groupBy("event_type").agg(n).collect()}
+
+    rows_in = per_partition(spark.read.parquet(src), F.count(F.lit(1)))
+    rows_out = per_partition(spark.read.parquet(str(ckpt / "features_STATS")),
+                             F.sum("n_tok"))
+    assert None in rows_in and rows_out == rows_in
+    ef.main(argv)
+    assert "partitions done=0 skipped=6 errors=0" in capsys.readouterr().out

@@ -243,6 +243,7 @@ def test_iceberg_write_call_shape_pinned(spark, tmp_path, monkeypatch):
     run_stage given an iceberg_table must target EXACTLY that identifier
     via overwritePartitions, with the partition column stamped on every
     frame, and still record 'ok' manifest rows with the observed counts.
+    A null partition value is stamped null, not the string 'None'.
     Like the real writer, the fake one executes the frame it receives (a
     noop write): the manifest reads the row count and checksum from that
     execution, and ``Observation.get`` blocks until one has run."""
@@ -254,26 +255,29 @@ def test_iceberg_write_call_shape_pinned(spark, tmp_path, monkeypatch):
 
         def overwritePartitions(self):
             self.df.write.format("noop").mode("overwrite").save()
-            calls.append(("overwritePartitions", self.table, list(self.df.columns)))
+            stamp = self.df.select("source").distinct().collect()
+            calls.append(("overwritePartitions", self.table, [r[0] for r in stamp]))
 
     _patch_write_to(monkeypatch, lambda self, table: _FakeWriter(self, table))
     root = str(tmp_path / "ice_shape")
     m = CheckpointManifest(spark, root, iceberg_table="cat.db.features")
     res = m.run_stage(
-        "feat", ["s1", "s2"],
+        "feat", ["s1", "s2", None],
         lambda p: spark.createDataFrame(pd.DataFrame({"v": [1, 2]})),
         partition_col="source",
     )
-    assert res == {"s1": ("ok", 2), "s2": ("ok", 2)}
-    assert len(calls) == 2
-    for verb, table, cols in calls:
+    assert res == {"s1": ("ok", 2), "s2": ("ok", 2), None: ("ok", 2)}
+    assert len(calls) == 3
+    for verb, table, _ in calls:
         assert verb == "overwritePartitions"
         assert table == "cat.db.features"   # the explicit identifier, never a path guess
-        assert "source" in cols             # partition column stamped before writeTo
+    # partition column stamped before writeTo (one value a frame), a null
+    # value as null
+    assert {s for *_, (s,) in calls} == {"s1", "s2", None}
     assert not os.path.exists(os.path.join(root, "feat"))  # no parquet dirs
-    # manifest recorded both partitions ok -> a rerun skips them
+    # manifest recorded every partition ok -> a rerun skips them
     res2 = m.run_stage(
-        "feat", ["s1", "s2"],
+        "feat", ["s1", "s2", None],
         lambda p: spark.createDataFrame(pd.DataFrame({"v": [1, 2]})),
         partition_col="source",
     )

@@ -90,6 +90,44 @@ def test_featureplan_parity(spark, token_events_df, token_events_pdf, feat_type,
         np.testing.assert_allclose(got[k], ora[k], rtol=1e-9, atol=1e-9, err_msg=str(k))
 
 
+def test_featureplan_approx_quantiles(spark, token_events_df, token_events_pdf):
+    """``approx_quantiles=True`` (``jobs/extract_features.py
+    --approx-quantiles``): percentile_approx may miss the exact quantile's
+    rank by n / QUANTILE_ACCURACY, so the split interval and dim each lie
+    between the order statistics around the exact rank, widened by that
+    error, and the output schema equals the exact plan's."""
+    from netml_spark.operators.quantile import QUANTILE_ACCURACY
+
+    def assert_within_accuracy(v, vals, q):
+        vals = np.sort(np.asarray(vals, dtype=np.float64))
+        n = len(vals)
+        err = int(np.ceil(n / QUANTILE_ACCURACY))
+        r = q * (n - 1)  # the exact (interpolated) quantile's rank
+        lo = vals[max(0, int(np.floor(r)) - err)]
+        hi = vals[min(n - 1, int(np.ceil(r)) + err)]
+        assert lo <= v <= hi, (v, lo, hi)
+
+    exact = FeaturePlan(feat_type="IAT", q_interval=0.9)
+    approx = FeaturePlan(feat_type="IAT", q_interval=0.9, approx_quantiles=True)
+    args = (("doc_id",), "ts", "token", ("seq",))
+    out_exact = exact.extract(token_events_df, *args)
+    out = approx.extract(token_events_df, *args)
+    try:
+        assert out.schema == out_exact.schema
+        # split interval: over the session durations (no interval dependence)
+        ev = token_events_pdf.sort_values(["ts", "seq"], kind="stable")
+        sess = netml_ref.pcap2flows(datagen.oracle_flows(ev), flow_pkts_thres=2,
+                                    timeout=600.0)
+        durations = [netml_ref.flow_duration(t) for _, t, _ in sess]
+        assert_within_accuracy(approx.split_interval, durations, 0.9)
+        # dim: over the flow sizes the approximate interval produced
+        n_tok = [r.n_tok for r in out.select("n_tok").collect()]
+        assert_within_accuracy(approx.dim + 1, n_tok, 0.9)  # IAT: dim - 1
+    finally:
+        exact.release()
+        approx.release()
+
+
 def test_featureplan_empty_input_is_a_value(spark, token_events_df):
     """r3-verdict item 6: zero input rows (or none surviving the
     session/subflow thresholds) yield an EMPTY, correctly-schemaed frame —

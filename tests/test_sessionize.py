@@ -193,55 +193,46 @@ def test_subflows_groups_spanning_arrow_batches(spark):
 
 def test_subflow_mapper_batch_boundary_invariance():
     """Pure-pyarrow (no Spark): the subflows label kernel must give every
-    row the SAME label no matter how the sorted partition stream is
-    chopped into Arrow batches — including batch sizes of 1, a group
-    spanning hundreds of batches, float NaN entity keys AND genuine Arrow
-    nulls (null-safe grouping) — and exactly one label per input row."""
+    row the SAME label no matter how the sorted ``(head, t)`` stream is
+    chopped into Arrow batches — including batch sizes of 1 and a group
+    spanning hundreds of batches — and exactly one int32 label per input
+    row. Every group starts at the same time, so only the head flag tells
+    the groups apart."""
     import numpy as np
-    import pandas as pd
     import pyarrow as pa
 
     from netml_spark.operators.sessionize import _subflow_labels
 
     rng = np.random.default_rng(5)
-    rows = []
-    for gi, d in enumerate([float("nan")] + list(range(12))):
+    heads, times, group = [], [], []
+    for gi in range(13):
         n = int(rng.integers(1, 60)) if gi != 3 else 400  # one mega-group
-        t = 1000.0 * gi + np.cumsum(rng.uniform(0.5, 20.0, n)
-                                    + (rng.random(n) < 0.2) * 100.0)
-        for i, ts in enumerate(t):
-            rows.append((d, 0, float(ts), i))
-    pdf = (pd.DataFrame(rows, columns=["doc_id", "session_id", "ts", "seq"])
-           .sort_values(["doc_id", "session_id", "ts", "seq"], na_position="first")
-           .reset_index(drop=True))
-    # float NaN keys kept as NaN values (from_pandas=False) ...
-    nan_key = pa.array(pdf["doc_id"].to_numpy(), type=pa.float64(),
-                       from_pandas=False)
-    assert nan_key.null_count == 0 and np.isnan(nan_key.to_numpy()).any()
-    # ... and as REAL Arrow nulls (what Spark ships for SQL NULL)
-    null_key = pa.array(pdf["doc_id"], type=pa.float64(), from_pandas=True)
-    assert null_key.null_count > 0
-    session = pa.array(pdf["session_id"], type=pa.int64())
-    ts = pa.array(pdf["ts"], type=pa.float64())
+        t = 1000.0 + np.cumsum(rng.uniform(0.5, 20.0, n)
+                               + (rng.random(n) < 0.2) * 100.0)
+        h = np.zeros(n, dtype=bool)
+        h[0] = True
+        heads.append(h)
+        times.append(t)
+        group.append(np.full(n, gi))
+    head = pa.array(np.concatenate(heads))
+    ts = pa.array(np.concatenate(times))
+    group = np.concatenate(group)
 
-    def labels_of(batch_size, key):
-        batches = ((key.slice(a, batch_size), session.slice(a, batch_size),
-                    ts.slice(a, batch_size))
-                   for a in range(0, len(pdf), batch_size))
+    def labels_of(batch_size):
+        batches = ((head.slice(a, batch_size), ts.slice(a, batch_size))
+                   for a in range(0, len(ts), batch_size))
         out = list(_subflow_labels(batches, 50.0, 2))
         got = np.concatenate([o.to_numpy() for o in out])
         assert all(o.type == pa.int32() for o in out)
-        assert len(got) == len(pdf)  # exactly one label per input row
+        assert len(got) == len(ts)  # exactly one label per input row
         return got
 
-    for key in (nan_key, null_key):
-        base = labels_of(len(pdf), key)  # single batch: the DuckDB-gated path
-        assert base.max() >= 1 and (base < 0).any()  # splits and drops occur
-        assert (base[pdf["doc_id"].isna().to_numpy()] >= 0).any()  # NaN group kept
-        mega = (pdf["doc_id"] == 2).to_numpy()
-        assert mega.sum() == 400 and base[mega].max() >= 1
-        for bs in (1, 3, 7, 64):
-            np.testing.assert_array_equal(labels_of(bs, key), base)
+    base = labels_of(len(ts))  # single batch: the DuckDB-gated path
+    assert base.max() >= 1 and (base < 0).any()  # splits and drops occur
+    mega = group == 3
+    assert mega.sum() == 400 and base[mega].max() >= 1
+    for bs in (1, 3, 7, 64):
+        np.testing.assert_array_equal(labels_of(bs), base)
 
 
 def test_subflows_mega_group_spanning_many_batches(spark):
@@ -285,29 +276,34 @@ def test_subflows_mega_group_spanning_many_batches(spark):
 
 def test_subflows_null_keys_one_group(spark):
     """ADVICE r4: adjacent null entity keys must form ONE group (groupBy
-    semantics), not per-row singletons via NaN != NaN."""
-    import pandas as pd
+    semantics), not per-row singletons via NaN != NaN; so must float NaN
+    keys. The kernel never sees the keys: Spark's window partitioning
+    decides the groups."""
+    import math
+
     from pyspark.sql.types import (DoubleType, LongType, StructField,
                                    StructType)
 
     from netml_spark.operators.sessionize import subflows_interval
 
     schema = StructType([
-        StructField("doc_id", DoubleType()),   # float key -> null is NaN
+        StructField("doc_id", DoubleType()),
         StructField("session_id", LongType()),
         StructField("ts", DoubleType()),
         StructField("seq", LongType()),
     ])
-    rows = ([(None, 0, 1_700_000_000.0 + i, i) for i in range(5)]
-            + [(1.0, 0, 1_700_000_000.0 + i, i) for i in range(5)])
+    rows = [(k, 0, 1_700_000_000.0 + i, i)
+            for k in (None, float("nan"), 1.0) for i in range(5)]
     df = spark.createDataFrame(rows, schema).coalesce(1)
     out = (subflows_interval(df, 1000.0, ("doc_id", "session_id"), "ts",
                              3, ("seq",))
-           .toPandas())
-    # both 5-row groups survive the >=3 min-size filter intact; with the
-    # NaN bug the null rows would be singletons and all dropped
-    assert len(out) == 10
-    assert out["doc_id"].isna().sum() == 5
+           .collect())
+    # all three 5-row groups survive the >=3 min-size filter intact; as
+    # per-row singletons the null and NaN rows would all be dropped
+    assert len(out) == 15
+    assert sum(r.doc_id is None for r in out) == 5
+    assert sum(r.doc_id is not None and math.isnan(r.doc_id) for r in out) == 5
+    assert {r.subflow_id for r in out} == {0}
 
 
 def test_subflows_drops_null_ts_rows(spark):

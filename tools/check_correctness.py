@@ -14,7 +14,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Spark's Python workers import from the working directory the JVM starts
+# in, not from this process's sys.path: run from this checkout so both sides
+# use the same code
+os.chdir(REPO)
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402

@@ -65,32 +65,37 @@ def main():
 
     # 2b. the fused sessionize -> subflows chain runs on ONE exchange:
     # defer_seg_filter folds the session-size filter into the subflow
-    # min-size filter (exact; DuckDB-gated) and assume_partitioned reuses
-    # the window's entity hash partitioning for the re-split kernel.
+    # min-size filter (exact; DuckDB-gated) and the subflows window's
+    # (user_id, session_id) distribution is met by the sessionize exchange.
     from netml_spark.operators.sessionize import subflows_interval
 
     sess_d = sessionize_timeout(ev, ("user_id",), "ts", 600.0, 2, ("event_id",),
                                 defer_seg_filter=True)
     subs = subflows_interval(sess_d, 300.0, ("user_id", "session_id"), "ts", 2,
-                             ("event_id",), assume_partitioned=True)
+                             ("event_id",))
     p = plan_str(subs)
     results["subflows_chain_single_shuffle"] = (
         len(re.findall(r"\(\d+\) Exchange", p)) == 1
     )
     # 2c. ... and its kernel is a NARROW label UDF: one ArrowEvalPython
-    # whose arguments are only entity + ts (pass-through columns never
-    # reach Python), evaluated above the Sort (a deterministic UDF would
-    # be pushed below it and lose the order), and no MapInArrow.
-    evals = re.findall(r"\(\d+\) ArrowEvalPython\n.*\nArguments: \[\w+\(([^)]*)\)", p)
-    udf_args = [a.strip().split("#")[0] for a in evals[0].split(",")] if evals else []
+    # directly above a Window, whose arguments are only the group-head
+    # flag (that Window's row_number() == 1) and ts — no entity key or
+    # pass-through column reaches Python — and no MapInArrow.
+    calls = re.findall(r"\(\d+\) ArrowEvalPython\n.*\nArguments: \[(.*)\], \[pythonUDF", p)
+    udf_attrs = re.findall(r"\w+#\d+", calls[0]) if calls else []
+    head = re.search(r"row_number\(\) windowspecdefinition\(.*\) AS (\w+#\d+)", p)
     results["subflows_narrow_udf"] = (
-        len(evals) == 1
-        and udf_args == ["user_id", "session_id", "ts"]
-        and re.search(r"ArrowEvalPython \(\d+\)\n\s*\+- Sort", p) is not None
+        len(calls) == 1
+        and head is not None
+        and len(udf_attrs) == 2
+        and udf_attrs[0] == head.group(1)
+        and udf_attrs[1].startswith("ts#")
+        and f"({head.group(1)} = 1)" in calls[0]
+        and re.search(r"ArrowEvalPython \(\d+\)\n\s*\+- Window", p) is not None
         and "MapInArrow" not in p
     )
     if not results["subflows_narrow_udf"]:
-        print(f"  (ArrowEvalPython nodes: {len(evals)}, UDF args: {udf_args})")
+        print(f"  (ArrowEvalPython nodes: {len(calls)}, UDF attributes: {udf_attrs})")
 
     # 3. label join broadcasts
     import pandas as pd
