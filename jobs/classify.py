@@ -22,8 +22,7 @@ import datetime
 import os
 import sys
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -41,6 +40,7 @@ def main(argv=None):
     args = ap.parse_args(argv)
 
     from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegerType
 
     from netml_spark import ndm
     from netml_spark.pipeline import FeaturePlan
@@ -66,20 +66,15 @@ def main(argv=None):
 
     key_cols = [*entity_cols, "session_id", "subflow_id"]
 
-    # Distributed scoring: broadcast the pickled numpy model into a
-    # pandas_udf so predict runs per Arrow batch on the executors — the
-    # post-aggregation flow table never collects to the driver (round 2
-    # ran a full toPandas() + one driver-side numpy predict, faithful to
-    # the reference's in-memory matrix at cli.py:202 but a driver OOM on
-    # a 10^12-sequence corpus).
+    # Distributed scoring: the broadcast numpy model predicts per Arrow
+    # batch on the executors (ndm.predict_batch), so the flow table never
+    # collects to the driver (a driver-side predict, as the reference's
+    # in-memory matrix at cli.py:202, OOMs on a 10^12-sequence corpus).
     bc = spark.sparkContext.broadcast(model)
 
-    @F.pandas_udf("int")
-    def score(batch: pd.Series) -> pd.Series:
-        if len(batch) == 0:
-            return pd.Series([], dtype="int32")
-        X = np.stack(batch.map(lambda v: np.asarray(v, dtype=np.float64)))
-        return pd.Series(bc.value.predict(X).astype(np.int32))
+    @F.arrow_udf(IntegerType())
+    def score(features: pa.Array) -> pa.Array:
+        return ndm.predict_batch(bc.value, features)
 
     scored = feats.select(
         *key_cols,
@@ -89,7 +84,7 @@ def main(argv=None):
     )
     # one distributed pass regardless of --output: without the persist the
     # totals aggregation AND the report scan would each re-run the full
-    # feature-extraction + pandas_udf scoring pipeline (correct since
+    # feature-extraction + Arrow UDF scoring pipeline (correct since
     # predict is deterministic, but double the work).
     scored = scored.persist()
     try:

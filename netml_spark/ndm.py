@@ -40,13 +40,32 @@ hand-off — by this point the data is one row per flow, small by design.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+
+def feature_matrix(features) -> np.ndarray:
+    """The (rows, dim) float64 matrix of an array<double> Arrow column, read
+    as one flat buffer. A null or ragged row raises ValueError: reshaping a
+    ragged buffer whose total happens to divide would misalign the rows."""
+    lens = pc.list_value_length(features).to_numpy(zero_copy_only=False)
+    if features.null_count or len(np.unique(lens)) > 1:
+        raise ValueError("feature rows must be non-null and of one length")
+    X = pc.list_flatten(features).to_numpy(zero_copy_only=False)
+    return X.astype(np.float64, copy=False).reshape(len(lens), lens[0] if len(lens) else 0)
 
 
 def collect_matrix(df, features_col: str = "features", label_col: str | None = None):
-    pdf = df.select(features_col, *( [label_col] if label_col else [] )).toPandas()
-    X = np.stack(pdf[features_col].map(lambda v: np.asarray(v, dtype=np.float64)))
-    y = pdf[label_col].to_numpy() if label_col else None
-    return X, y
+    tbl = df.select(features_col, *([label_col] if label_col else [])).toArrow()
+    y = tbl.column(label_col).to_numpy() if label_col else None
+    return feature_matrix(tbl.column(features_col)), y
+
+
+def predict_batch(model: Model, features: pa.Array) -> pa.Array:
+    """``model.predict`` over one Arrow batch of feature rows, as int32
+    (Spark sends an Arrow UDF no empty batch, not even for an empty
+    partition)."""
+    return pa.array(model.predict(feature_matrix(features)).astype(np.int32))
 
 
 def auc_score(y_true: np.ndarray, scores: np.ndarray) -> float:
@@ -57,15 +76,11 @@ def auc_score(y_true: np.ndarray, scores: np.ndarray) -> float:
     neg = scores[y_true == 0]
     if len(pos) == 0 or len(neg) == 0:
         raise ValueError("need both classes for AUC")
-    order = np.argsort(np.concatenate([neg, pos]), kind="stable")
-    ranks = np.empty(len(order), dtype=np.float64)
-    ranks[order] = np.arange(1, len(order) + 1)
-    # mid-ranks for ties
-    allv = np.concatenate([neg, pos])
-    for v in np.unique(allv):
-        m = allv == v
-        ranks[m] = ranks[m].mean()
-    r_pos = ranks[len(neg):].sum()
+    # mid-rank of each distinct value: the ranks before it plus (count+1)/2
+    _, inv, cnt = np.unique(np.concatenate([neg, pos]), return_inverse=True,
+                            return_counts=True)
+    mid = np.cumsum(cnt) - (cnt - 1) / 2
+    r_pos = mid[inv[len(neg):]].sum()
     u = r_pos - len(pos) * (len(pos) + 1) / 2
     return float(u / (len(pos) * len(neg)))
 

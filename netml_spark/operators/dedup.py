@@ -10,8 +10,8 @@ expressed Spark-first:
                              fully native and SQL-expressible (DuckDB oracle).
 - ``minhash_signatures``/``minhash_lsh_pairs``: MinHash + banded LSH.
                              Portable polynomial shingle hashes (native) +
-                             ONE batch-vectorized affine-mod/segment-min
-                             numpy kernel per Arrow batch; banding native.
+                             ONE affine-mod/segment-min Arrow UDF kernel
+                             over each batch's flat buffer; banding native.
 - ``simhash_signatures``/``simhash_pairs``: 62-bit SimHash over portable
                              word hashes, near-dup = hamming distance <= k,
                              candidates via bit-band bucketing (4x16-bit
@@ -34,13 +34,12 @@ before the self-join — the standard guard against quadratic blowup.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
-MERSENNE_P = (1 << 61) - 1
-
+from netml_spark.operators.kernels import _flat
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -189,6 +188,20 @@ def minhash_params(n_hashes: int, seed: int = 42):
 # ---------------------------------------------------------------------------
 
 
+def _minhash_batch(hashes: pa.ListArray, a: np.ndarray, b: np.ndarray) -> pa.ListArray:
+    """MinHash signature of every row of one Arrow batch: the flat shingle
+    buffer is mixed with ONE (total_shingles x n_hashes) affine-mod
+    broadcast, exact in int64, and reduced per non-empty row with
+    np.minimum.reduceat. An empty or null row keeps [P31]*n_hashes."""
+    flat, lens = _flat(hashes, np.int64)
+    out = np.full((len(lens), len(a)), P31, dtype=np.int64)
+    nz = lens > 0
+    starts = (np.cumsum(lens) - lens)[nz]
+    out[nz] = np.minimum.reduceat((flat[:, None] * a + b) % P31, starts, axis=0)
+    offsets = np.arange(0, out.size + 1, len(a), dtype=np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(out.ravel()))
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -200,33 +213,17 @@ def minhash_signatures(
     """(id, sig:array<long>) — MinHash over portably-hashed word shingles.
 
     Shingle hashing is a native column expression (poly_hash); the minhash
-    kernel is batch-vectorized numpy: ALL rows of an Arrow batch are
-    concatenated into one flat array, mixed with ONE (total_shingles x
-    n_hashes) affine-mod broadcast, and reduced per row with
-    np.minimum.reduceat — no per-row Python loop (the round-1 kernel
-    iterated rows, which capped throughput). Empty docs get the sentinel
-    signature [P31]*n_hashes (P31 is above every attainable hash)."""
+    kernel is an Arrow scalar UDF over each batch's flat shingle buffer
+    (see _minhash_batch). Empty and null docs get the sentinel signature
+    [P31]*n_hashes (P31 is above every attainable hash)."""
     a, b = minhash_params(n_hashes, seed)
 
-    @pandas_udf("array<long>")
-    def _minhash(hashes: pd.Series) -> pd.Series:
-        lens = hashes.map(len).to_numpy(dtype=np.int64)
-        out = np.full((len(hashes), n_hashes), P31, dtype=np.int64)
-        nz = np.flatnonzero(lens)
-        if len(nz):
-            flat = np.concatenate(
-                [np.asarray(h, dtype=np.int64) for h in hashes if len(h)]
-            )
-            hx = (flat[:, None] * a[None, :] + b[None, :]) % P31
-            starts = np.concatenate(([0], np.cumsum(lens[nz])[:-1]))
-            out[nz] = np.minimum.reduceat(hx, starts, axis=0)
-        return pd.Series(list(out))
+    @arrow_udf("array<long>")
+    def _minhash(hashes: pa.Array) -> pa.Array:
+        return _minhash_batch(hashes, a, b)
 
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(word_shingles(text_col, shingle_n), lambda x: poly_hash(x)).alias("_sh"),
-    )
-    return sh.select("id", _minhash("_sh").alias("sig"))
+    sh = F.transform(word_shingles(text_col, shingle_n), lambda x: poly_hash(x))
+    return df.select(F.col(id_col).alias("id"), _minhash(sh).alias("sig"))
 
 
 def band_hash(sig_col, band: int, rows_per_band: int):
@@ -273,9 +270,7 @@ def minhash_lsh_pairs(
     Jaccard (matching signature fraction) >= threshold.
 
     ``n_hashes`` is a parameter (the caller built the signatures and knows
-    it) — round 1 inferred it with sigs.first(), a plan-time driver action
-    that recomputed a signature partition on every call and crashed on
-    empty input.
+    it), so planning runs no driver action.
 
     Shuffle shape (the round-3 fix): candidate generation shuffles ONLY
     (band, bh, id) — round 2 carried the full n_hashes-long signature
@@ -400,6 +395,20 @@ def dedup_clusters(pairs: DataFrame, id_col_a: str = "id_a", id_col_b: str = "id
 
 
 SIMHASH_BITS = 62  # 2 x 31-bit portable word hashes; bits 62-63 always 0
+_SHIFTS = np.arange(SIMHASH_BITS, dtype=np.uint64)
+
+
+def _simhash_batch(hashes: pa.Array) -> pa.Array:
+    """SimHash of every row of one Arrow batch: one flat (total_words x 62)
+    bit unpack, per-row bit counts by np.add.reduceat over the non-empty
+    rows, and bit b set on a strict majority. An empty or null row is 0."""
+    flat, lens = _flat(hashes, np.uint64)
+    bits = ((flat[:, None] >> _SHIFTS) & np.uint64(1)).astype(np.int64)
+    nz = lens > 0
+    maj = 2 * np.add.reduceat(bits, (np.cumsum(lens) - lens)[nz], axis=0) > lens[nz, None]
+    out = np.zeros(len(lens), dtype=np.int64)
+    out[nz] = (maj.astype(np.uint64) << _SHIFTS).sum(axis=1).astype(np.int64)
+    return pa.array(out)
 
 
 def simhash_signatures(
@@ -412,35 +421,12 @@ def simhash_signatures(
     exactly reproducible in the DuckDB oracle); the signature sets bit b
     when a strict majority of words have bit b set.
 
-    The kernel is batch-vectorized: one flat (total_words x 62) bit
-    unpack + np.add.reduceat per Arrow batch — no per-row Python loop."""
-    shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
-
-    @pandas_udf("long")
-    def _simhash(hashes: pd.Series) -> pd.Series:
-        lens = hashes.map(len).to_numpy(dtype=np.int64)
-        out = np.zeros(len(hashes), dtype=np.int64)
-        nz = np.flatnonzero(lens)
-        if len(nz):
-            flat = np.concatenate(
-                [np.asarray(h, dtype=np.int64) for h in hashes if len(h)]
-            ).astype(np.uint64)
-            bits = ((flat[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int64)
-            starts = np.concatenate(([0], np.cumsum(lens[nz])[:-1]))
-            cnts = np.add.reduceat(bits, starts, axis=0)
-            maj = (2 * cnts > lens[nz][:, None]).astype(np.uint64)
-            out[nz] = (maj << shifts[None, :]).sum(axis=1).astype(np.int64)
-        return pd.Series(out)
-
+    The kernel is an Arrow scalar UDF over each batch's flat word-hash
+    buffer (see _simhash_batch); an empty or null document hashes to 0."""
     words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    wh = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(
-            words,
-            lambda x: poly_hash(x, 131) + poly_hash(x, 137) * F.lit(1 << 31),
-        ).alias("_wh"),
-    )
-    return wh.select("id", _simhash("_wh").alias("simhash"))
+    wh = F.transform(words, lambda x: poly_hash(x, 131) + poly_hash(x, 137) * F.lit(1 << 31))
+    simhash = arrow_udf(_simhash_batch, "long")
+    return df.select(F.col(id_col).alias("id"), simhash(wh).alias("simhash"))
 
 
 def simhash_pairs(sigs: DataFrame, max_hamming: int = 3, n_bands: int = 4) -> DataFrame:

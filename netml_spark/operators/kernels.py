@@ -56,12 +56,12 @@ def pad_truncate(v: Column | str, dim: int) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _flat(arr: pa.ListArray):
-    """(flat float64 values, int64 row lengths) of a possibly sliced
+def _flat(arr: pa.ListArray, dtype=np.float64):
+    """(flat values as ``dtype``, int64 row lengths) of a possibly sliced
     ListArray; a null row has length 0 (``list_flatten`` skips it)."""
     vals = pc.list_flatten(arr).to_numpy(zero_copy_only=False)
     lens = pc.list_value_length(arr).fill_null(0).to_numpy(zero_copy_only=False)
-    return vals.astype(np.float64, copy=False), lens.astype(np.int64)
+    return vals.astype(dtype, copy=False), lens.astype(np.int64)
 
 
 def _valid_rows(*cols: pa.ListArray):

@@ -40,8 +40,8 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
-        # Arrow: Python-side kernels take Arrow batches (Arrow UDFs;
-        # the MinHash/SimHash pandas UDFs convert batches).
+        # Arrow for toPandas()/createDataFrame(pandas) conversions; the
+        # Python kernels are Arrow UDFs and exchange Arrow batches anyway.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Arrow batch sizing (r6, guide §4.2): the r1 value of 2048 rows
         # made every 5M-row kernel pass pay ~2600 per-batch overheads

@@ -3,6 +3,7 @@ over the driver documents/embeddings tables plus planted duplicates."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -94,6 +95,57 @@ def test_simhash_near_dups(spark, docs_with_dups):
     got = {(a, b): h for a, b, h in zip(pairs.id_a, pairs.id_b, pairs.hamming)}
     for d in range(5):
         assert got.get((d, 10_000 + d)) == 0
+
+
+def test_null_text_is_empty_document(spark):
+    """A null text is an empty document for both signature kernels: the
+    MinHash sentinel [P31]*n and SimHash 0, the same as ''."""
+    df = spark.createDataFrame([(1, "a b c d"), (2, None), (3, "")],
+                               "doc_id long, text string")
+    mh = {r.id: r.sig for r in dedup.minhash_signatures(df, n_hashes=8).collect()}
+    sh = {r.id: r.simhash for r in dedup.simhash_signatures(df).collect()}
+    assert mh[2] == mh[3] == [dedup.P31] * 8 and mh[1] != mh[2]
+    assert sh[2] == sh[3] == 0 and sh[1] != 0
+
+
+def _sliced(rows, pad=2):
+    """An int64 ListArray of ``rows`` sliced out of a longer one."""
+    junk = [[7, 7]] * pad
+    return pa.array(junk + rows + junk, pa.list_(pa.int64())).slice(pad, len(rows))
+
+
+def _hash_rows(high):
+    rng = np.random.default_rng(5)
+    rows = [rng.integers(0, high, int(rng.integers(1, 40))).tolist() for _ in range(20)]
+    rows[4:4] = [[], None, [int(high) - 1]]
+    return rows + [None, []]
+
+
+def test_minhash_batch_pyarrow():
+    """The MinHash batch kernel on a sliced ListArray with empty and null
+    rows equals the per-row affine-mod minimum exactly, in int64."""
+    rows = _hash_rows(dedup.P31)
+    a, b = dedup.minhash_params(16, seed=3)
+    arr = _sliced(rows)
+    assert arr.offset == 2
+    got = dedup._minhash_batch(arr, a, b).to_pylist()
+    for g, h in zip(got, rows):
+        exp = (np.full(16, dedup.P31, np.int64) if not h else
+               ((np.asarray(h, np.int64)[:, None] * a + b) % dedup.P31).min(axis=0))
+        np.testing.assert_array_equal(np.asarray(g, np.int64), exp)
+
+
+def test_simhash_batch_pyarrow():
+    """The SimHash batch kernel on a sliced ListArray with empty and null
+    rows equals the per-row strict-majority bit vote exactly."""
+    rows = _hash_rows(1 << dedup.SIMHASH_BITS)
+    got = dedup._simhash_batch(_sliced(rows)).to_pylist()
+    for g, h in zip(got, rows):
+        exp = 0
+        for bit in range(dedup.SIMHASH_BITS):
+            ones = sum((w >> bit) & 1 for w in h or [])
+            exp |= int(2 * ones > len(h or [])) << bit
+        assert g == exp
 
 
 def test_embedding_neardup(spark):

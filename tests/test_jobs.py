@@ -1,5 +1,5 @@
 """jobs/ lifecycle under pytest: learn -> classify with DISTRIBUTED
-scoring (broadcast-model pandas_udf) must reproduce the driver-side
+scoring (broadcast-model Arrow UDF) must reproduce the driver-side
 model.predict exactly, and the printed report must match the sink."""
 
 import re
@@ -134,7 +134,7 @@ def test_classify_distributed_scoring_parity(spark, tmp_path, capsys, model_path
     n_lines = sum(1 for ln in report.splitlines() if ln.endswith("ANOMALY"))
     assert n_lines == int(scored.prediction.sum())
 
-    # parity: executor-side pandas_udf predictions == driver-side
+    # parity: executor-side Arrow UDF predictions == driver-side
     # model.predict on the same re-extracted feature matrix
     from netml_spark import ndm
     from netml_spark.pipeline import FeaturePlan

@@ -183,6 +183,22 @@ def test_udfs_are_arrow_scalar_udfs():
         assert udf.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
 
 
+def test_signature_plans_are_arrow_scalar_udfs(spark):
+    """The MinHash and SimHash signature plans run their kernels as Arrow
+    scalar UDFs too: every ArrowEvalPython node of the executed plan ends
+    in evalType 250 (SQL_SCALAR_ARROW_UDF), not 200 (a pandas UDF)."""
+    from netml_spark.operators import dedup
+
+    df = spark.createDataFrame([(1, "a b c d e"), (2, None)], "doc_id long, text string")
+    for sigs in (dedup.minhash_signatures(df, n_hashes=8), dedup.simhash_signatures(df)):
+        sigs.collect()
+        nodes = [ln.strip() for ln in
+                 sigs._jdf.queryExecution().executedPlan().toString().splitlines()
+                 if "ArrowEvalPython" in ln]
+        assert nodes and all(
+            ln.endswith(f", {PythonEvalType.SQL_SCALAR_ARROW_UDF}") for ln in nodes), nodes
+
+
 def _list_array(rows, value_type, pad=2):
     """A ListArray of ``rows`` sliced out of a longer one (non-zero offset)."""
     junk = [[7, 7]] * pad

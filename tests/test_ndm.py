@@ -3,6 +3,8 @@ rank-correct. End-to-end: FeaturePlan STATS features -> detector -> AUC."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pytest
 
 from netml_spark import ndm
 
@@ -21,6 +23,13 @@ def test_auc_score_rank_semantics():
     assert ndm.auc_score(y, np.array([0.1, 0.2, 0.8, 0.9])) == 1.0
     assert ndm.auc_score(y, np.array([0.9, 0.8, 0.2, 0.1])) == 0.0
     assert ndm.auc_score(y, np.array([0.5, 0.5, 0.5, 0.5])) == 0.5
+    # partly tied: the pairwise Mann-Whitney count, a tie scoring 1/2
+    rng = np.random.default_rng(4)
+    y = rng.integers(0, 2, 60)
+    s = rng.integers(0, 6, 60).astype(np.float64)
+    pos, neg = s[y == 1], s[y == 0]
+    u = (pos[:, None] > neg).sum() + 0.5 * (pos[:, None] == neg).sum()
+    assert ndm.auc_score(y, s) == pytest.approx(u / (len(pos) * len(neg)), abs=1e-12)
 
 
 def test_pca_detector_separates():
@@ -131,3 +140,21 @@ def test_e2e_features_to_model(spark, token_events_df):
     det = ndm.PCADetector(n_components=3).fit(X)
     s = det.score(X)
     assert np.isfinite(s).all() and len(s) == len(X)
+
+
+def test_feature_matrix_ragged_rows_raise(spark):
+    """Feature rows are read as one flat buffer; a ragged row raises in
+    collect_matrix and in the scoring kernel even when the flat total
+    divides evenly into the row count (6 values over 3 rows here)."""
+    rows = [[1.0, 2.0, 3.0], [4.0], [5.0, 6.0]]
+    df = spark.createDataFrame([(r,) for r in rows], "features array<double>")
+    with pytest.raises(ValueError, match="one length"):
+        ndm.collect_matrix(df)
+    m = ndm.Model(ndm.PCADetector(n_components=1)).train(np.eye(3))
+    with pytest.raises(ValueError, match="one length"):
+        ndm.predict_batch(m, pa.array(rows))
+    with pytest.raises(ValueError, match="one length"):
+        ndm.predict_batch(m, pa.array([[1.0, 2.0, 3.0], None]))
+    ok = pa.array([[9.0] * 3, *rows[:1] * 2, [0.0, 1.0, 2.0]]).slice(1)
+    np.testing.assert_array_equal(ndm.feature_matrix(ok), [[1, 2, 3], [1, 2, 3], [0, 1, 2]])
+    assert ndm.predict_batch(m, ok).type == pa.int32()
