@@ -1088,12 +1088,12 @@ def q_netml_subflows(spark, sf_dir):
         defer_seg_filter=True,
     )
     # defer: the subflow min-size filter subsumes the deferred session-size
-    # filter (exact — the DuckDB recursive-CTE oracle pins it). sess is
-    # already hash-partitioned by user_id, which meets the subflows window's
-    # distribution, so the whole chain runs on ONE exchange
-    # (assume_partitioned is ignored).
+    # filter (exact — the DuckDB recursive-CTE oracle pins it). The
+    # subflows window decides the exchange: sess is already hash-partitioned
+    # by user_id, which meets its distribution, so the whole chain runs on
+    # ONE exchange.
     subs = subflows_interval(sess, 300.0, ("user_id", "session_id"), "ts", 2,
-                             ("event_id",), assume_partitioned=True)
+                             ("event_id",))
     return (
         subs.groupBy("user_id", "session_id", "subflow_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -1255,7 +1255,7 @@ ORDER BY d.doc_id
 
 def q_dedup_clusters(spark, sf_dir):
     """Connected-component cluster ids over jaccard-similar pairs
-    (min-label propagation; rows-only check — iterative algorithm)."""
+    (min-label propagation run to its fixpoint)."""
     from netml_spark.operators.dedup import dedup_clusters, ngram_jaccard_pairs
 
     pairs = ngram_jaccard_pairs(_documents(spark, sf_dir), threshold=0.2, n=3)

@@ -15,11 +15,20 @@ shares one heap across all task threads; the 1g default OOMs).
 Locally the same file runs under plain ``python`` (it builds its own
 session). With --checkpoint, extraction runs per partition value through
 the CheckpointManifest, so a killed backfill resumes idempotently.
+
+Scope of the data-dependent scalars (split interval, dim): the plain path
+treats the whole input as one capture, so they are quantiles over all of
+it. --checkpoint treats each partition value as one capture, as the
+reference extracts one pcap at a time (cli.py:72-96): each partition's
+output equals the plain path run over that value's events alone. Every
+partition is stamped with a hash of the input's file list, so a re-run
+after the input gained or lost a file recomputes every partition.
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import os
 import sys
 
@@ -87,10 +96,14 @@ def main(argv=None):
             plans[p] = plan = new_plan()
             return extract(plan, events.filter(F.col(args.partition_col).eqNullSafe(p)))
 
+        # the partition column is a plain column, so every partition reads
+        # every input file: one stamp fits all (the listing is the file
+        # index's, no Spark job runs)
+        fp = hashlib.sha256("\n".join(sorted(events.inputFiles())).encode()).hexdigest()
         man = CheckpointManifest(spark, args.checkpoint)
         results = man.run_stage(
-            f"features_{args.feat_type}", parts, build,
-            args.partition_col, release=lambda p: plans.pop(p).release(),
+            f"features_{args.feat_type}", parts, build, args.partition_col,
+            input_fp=lambda p: fp, release=lambda p: plans.pop(p).release(),
         )
         done = sum(1 for v in results.values() if v[0] == "ok")
         skipped = sum(1 for v in results.values() if v[0] == "skipped")

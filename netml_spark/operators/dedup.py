@@ -335,17 +335,21 @@ def minhash_lsh_pairs(
     )
 
 
-def dedup_clusters(pairs: DataFrame, id_col_a: str = "id_a", id_col_b: str = "id_b",
-                   max_iter: int = 10, broadcast_max: int = 1_000_000) -> DataFrame:
-    """Connected components by iterative min-label propagation (small
-    diameter clusters converge in a few rounds; duplicate clusters are
-    near-cliques so 2-3 rounds suffice). Returns (id, cluster_id).
+BROADCAST_MAX = 1_000_000  # edge rows up to which dedup rounds broadcast
 
-    When the node count is <= ``broadcast_max`` the per-round joins
-    broadcast the label frame — a typical dup-pair graph is a tiny
-    fraction of the corpus, and broadcast rounds avoid re-shuffling the
-    (checkpointed) edge list every iteration. Larger graphs fall back to
-    shuffle joins, which is the correct 100 TB plan."""
+
+def dedup_clusters(pairs: DataFrame, id_col_a: str = "id_a",
+                   id_col_b: str = "id_b") -> DataFrame:
+    """Connected components by min-label propagation, run until no label
+    changes. Returns (id, cluster_id), the minimum id of each component.
+    A label moves one hop per round, so a component takes its diameter
+    plus one rounds: duplicate near-cliques 2-3, a chain one per link.
+
+    When the edge list (both directions) holds <= ``BROADCAST_MAX`` rows,
+    the rounds run on one partition and broadcast the label frame — a
+    typical dup-pair graph is a tiny fraction of the corpus, and broadcast
+    rounds avoid re-shuffling the (checkpointed) edge list every round.
+    Larger graphs use shuffle joins, which is the correct 100 TB plan."""
     edges = pairs.select(
         F.col(id_col_a).alias("src"), F.col(id_col_b).alias("dst")
     )
@@ -358,7 +362,7 @@ def dedup_clusters(pairs: DataFrame, id_col_a: str = "id_a", id_col_b: str = "id
     edges = edges.localCheckpoint(eager=True)
     labels = edges.select("src").union(edges.select("dst")).distinct() \
         .select(F.col("src").alias("id"), F.col("src").alias("cluster_id"))
-    small = edges.count() <= broadcast_max  # 1 cheap job on materialized edges
+    small = edges.count() <= BROADCAST_MAX  # 1 cheap job on materialized edges
     if small:
         # tiny graph: single-partition rounds avoid per-task scheduling
         # overhead (the dominant cost of tiny iterative jobs)
@@ -366,7 +370,7 @@ def dedup_clusters(pairs: DataFrame, id_col_a: str = "id_a", id_col_b: str = "id
         labels = labels.coalesce(1)
     hint = F.broadcast if small else (lambda df: df)
     labels = labels.localCheckpoint(eager=True)
-    for _ in range(max_iter):
+    while True:
         nbr_min = (
             edges.join(hint(labels), edges.dst == labels.id)
             .groupBy("src")
@@ -385,8 +389,7 @@ def dedup_clusters(pairs: DataFrame, id_col_a: str = "id_a", id_col_b: str = "id
         )
         labels = upd.drop("_chg")
         if upd.filter(F.col("_chg")).limit(1).count() == 0:
-            break
-    return labels
+            return labels
 
 
 # ---------------------------------------------------------------------------

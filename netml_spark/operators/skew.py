@@ -16,18 +16,19 @@ remedy by the PASS CLASS that actually serializes:
   when the final per-key group state itself blows up AND the partials
   are mergeable.
 
-Each remedy costs one extra shuffle, so the caller picks it explicitly
-for the entity sizes it knows; the skew tables put the wall-time
-crossover for ordered collects between 0.8M and 3.2M rows on one entity.
+Both bounded remedies are the operator they bound, run over
+``(entity, floor(ts / bucket_width))``: ``sessionize`` plus a
+bucket-prefixed session id, and ``events_to_sequences`` plus one merge
+aggregate that concatenates the bucket slices in bucket order. Each
+costs one extra shuffle, so the caller picks it explicitly for the
+entity sizes it knows; the skew tables put the wall-time crossover for
+ordered collects between 0.8M and 3.2M rows on one entity.
 
-Sessionization itself cannot be salted without breaking gap semantics
-across salt boundaries (a session may span salts); the engine's stance for
-huge entities is bounded-session processing: pre-split entities on coarse
-time buckets (>> timeout) and sessionize each bucket independently, which
-``bounded_sessionize`` implements. The ONE documented approximation is
-that a session spanning a bucket boundary is split at it (see the
-function docstring); choose bucket_width >> gap so boundary splits are
-rare (~gap/width of sessions).
+Sessionization cannot be salted without breaking gap semantics across
+salt boundaries (a session may span salts). The ONE documented
+approximation of ``bounded_sessionize`` is that a session spanning a
+bucket boundary is split at it; choose bucket_width >> gap so boundary
+splits are rare (~gap/width of sessions).
 """
 
 from __future__ import annotations
@@ -36,6 +37,10 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from netml_spark.operators.sequences import events_to_sequences
+from netml_spark.operators.sessionize import sessionize
+from netml_spark.util import ts_seconds
 
 AGGS = ("count", "sum", "min", "max", "mean")
 
@@ -102,6 +107,13 @@ def salted_agg(
     return merged.select(*out_cols)
 
 
+def _with_bucket(df: DataFrame, ts_col: str, bucket_width: float) -> DataFrame:
+    """``df`` plus ``_bucket = floor(ts / bucket_width)``: equal timestamps
+    share a bucket, and bucket order is time order."""
+    bucket = F.floor(ts_seconds(df, ts_col) / F.lit(float(bucket_width)))
+    return df.withColumn("_bucket", bucket.cast("long"))
+
+
 def bounded_sequence_build(
     df: DataFrame,
     entity_cols: Sequence[str],
@@ -112,59 +124,32 @@ def bounded_sequence_build(
     carry_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Skew-aware twin of ``events_to_sequences`` for heavy-hitter
-    entities — the collect-class remedy the r4 skew measurements called
-    for (algebraic aggregates never needed salting; ORDERED COLLECTS do):
-    ``sort_array(collect_list(...))`` per entity concatenates and sorts
-    the hot entity's WHOLE history in one task's aggregation buffer.
+    entities: ``sort_array(collect_list(...))`` per entity sorts the hot
+    entity's WHOLE history in one task's aggregation buffer (ordered
+    collects need a remedy; algebraic aggregates never did).
 
-    Two stages, EXACTLY equal to the unbounded build (no approximation,
-    unlike ``bounded_sessionize``):
-
-      1. group on ``(entity, floor(ts / bucket_width))`` — the hot key
-         spreads across buckets; each task sorts one bucket's slice;
-      2. group on ``entity`` and merge with
-         ``flatten(sort_array(collect_list(struct(bucket, slice))))["_l"]``
-         — buckets are disjoint, ``floor`` is monotone in ts, and equal
-         timestamps share a bucket, so concatenating the pre-sorted
-         slices in bucket order IS the globally (ts, order...)-sorted
-         sequence; the merge task copies arrays, it never re-compares
-         elements.
-
-    Output schema matches ``events_to_sequences``:
-    ``(entity..., times:array<double>, tokens:array<int>, n_tok:int,
-    carry...)``."""
-    from netml_spark.util import ts_seconds
-
-    entity_cols = list(entity_cols)
-    ts_d = ts_seconds(df, ts_col)
-    bucket = F.floor(ts_d / F.lit(float(bucket_width))).cast("long")
-    packed = F.struct(
-        ts_d.alias("_t"),
-        *[F.col(c).alias(f"_o{i}") for i, c in enumerate(order_cols)],
-        F.col(token_col).cast("int").alias("_tok"),
-    )
-    part = (
-        df.withColumn("_bucket", bucket)
-        .groupBy(*entity_cols, "_bucket")
-        .agg(
-            F.sort_array(F.collect_list(packed)).alias("_p"),
-            *[F.first(c).alias(c) for c in carry_cols],
-        )
+    EXACTLY equal to the unbounded build: ``events_to_sequences`` over
+    ``(entity, floor(ts / bucket_width))`` sorts each bucket's slice in
+    its own task, then one merge per entity flattens the slices in bucket
+    order. Buckets are disjoint, ``floor`` is monotone in ts and equal
+    timestamps share a bucket, so the concatenation IS the
+    (ts, order...)-sorted sequence; the merge copies arrays and never
+    re-compares elements. Output columns: ``(entity..., times, tokens,
+    n_tok, carry...)``, as ``events_to_sequences``."""
+    part = events_to_sequences(
+        _with_bucket(df, ts_col, bucket_width), (*entity_cols, "_bucket"),
+        ts_col, token_col, order_cols, carry_cols,
     )
     merged = part.groupBy(*entity_cols).agg(
-        F.flatten(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("_bucket").alias("_b"),
-                                        F.col("_p").alias("_l")))
-            )["_l"]
-        ).alias("_p"),
+        F.sort_array(F.collect_list(F.struct("_bucket", "times", "tokens"))).alias("_p"),
         *[F.first(c).alias(c) for c in carry_cols],
     )
+    times = F.flatten(F.col("_p.times"))
     return merged.select(
         *entity_cols,
-        F.col("_p._t").alias("times"),
-        F.col("_p._tok").alias("tokens"),
-        F.size("_p").cast("int").alias("n_tok"),
+        times.alias("times"),
+        F.flatten(F.col("_p.tokens")).alias("tokens"),
+        F.size(times).alias("n_tok"),
         *carry_cols,
     )
 
@@ -179,27 +164,19 @@ def bounded_sessionize(
     session_col: str = "session_id",
 ) -> DataFrame:
     """Chunked sessionization for entities too large for one task's sort:
-    partition on (entity, time_bucket) and sessionize each chunk
-    independently. Rows are never duplicated or lost; the ONE documented
-    approximation is that a session spanning a bucket boundary is split at
-    it (the gap test restarts per bucket). Choose
+    ``sessionize`` over (entity, time_bucket), so each chunk sessionizes
+    independently, and the session id is ``"<bucket>_<id in bucket>"``.
+    Rows are never duplicated or lost; the ONE documented approximation
+    is that a session spanning a bucket boundary is split at it (the gap
+    test restarts per bucket). Choose
     ``bucket_width >> gap * typical sessions`` so boundary splits are rare:
     with width W and gap g, at most a fraction ~g/W of sessions split.
     Exact-equality for sessions contained in one bucket is pinned by tests
     vs the unchunked sessionizer."""
-    from pyspark.sql import Window
-
-    from netml_spark.util import ts_seconds
-
     if bucket_width <= 2 * gap:
         raise ValueError("bucket_width must exceed 2x gap")
-    ts_d = ts_seconds(df, ts_col)
-    bucket = F.floor(ts_d / F.lit(float(bucket_width))).cast("long")
-    u = df.withColumn("_bucket", bucket)
-    w = Window.partitionBy(*entity_cols, "_bucket").orderBy(ts_col, *order_cols)
-    gap_expr = ts_d - F.lag(ts_d).over(w)
-    brk = F.when(gap_expr > F.lit(float(gap)), 1).otherwise(0)
-    sess = u.withColumn("_sid", F.sum(brk).over(w))
+    sess = sessionize(_with_bucket(df, ts_col, bucket_width),
+                      (*entity_cols, "_bucket"), ts_col, gap, order_cols, "_sid")
     return sess.select(
         *df.columns,
         F.concat_ws("_", F.col("_bucket"), F.col("_sid")).alias(session_col),

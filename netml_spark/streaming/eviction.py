@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType,
 )
 
+from netml_spark.util import event_time
+
 
 def stateful_flow_eviction(
     events: DataFrame,
@@ -57,14 +59,9 @@ def stateful_flow_eviction(
     per gap/age crossing, emitting ONE ROW PER CLOSED FLOW per key per
     batch (ADVICE r2 fix)."""
     entity_cols = list(entity_cols)
-    ts = F.col(ts_col)
-    if dict(events.dtypes)[ts_col] in ("double", "bigint", "float", "int"):
-        events = events.withColumn("_event_time", F.timestamp_seconds(ts))
-    else:
-        events = events.withColumn("_event_time", ts.cast("timestamp"))
-    events = events.withColumn(
-        "_evt_sec", F.col("_event_time").cast("double")
-    ).withWatermark("_event_time", watermark)
+    events = (events.withColumn("_event_time", event_time(events, ts_col))
+              .withColumn("_evt_sec", F.col("_event_time").cast("double"))
+              .withWatermark("_event_time", watermark))
 
     ent_fields = [events.schema[c] for c in entity_cols]
     out_schema = StructType(

@@ -24,6 +24,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from netml_spark.util import event_time
+
 
 def streaming_session_stats(
     events: DataFrame,
@@ -36,11 +38,7 @@ def streaming_session_stats(
     """readStream events -> session_window groupBy -> STATS per closed
     session. Works on a streaming OR batch DataFrame (same plan; for batch
     the watermark is a no-op), which is how the parity test pins it."""
-    ts = F.col(ts_col)
-    if dict(events.dtypes)[ts_col] in ("double", "bigint", "float", "int"):
-        events = events.withColumn("_event_time", F.timestamp_seconds(ts))
-    else:
-        events = events.withColumn("_event_time", ts.cast("timestamp"))
+    events = events.withColumn("_event_time", event_time(events, ts_col))
     if events.isStreaming:
         events = events.withWatermark("_event_time", watermark)
     size_d = F.col(size_col).cast("double")

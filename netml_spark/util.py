@@ -29,6 +29,15 @@ def ts_seconds(df: DataFrame, ts_col: str) -> Column:
     return c.cast("double")
 
 
+def event_time(df: DataFrame, ts_col: str) -> Column:
+    """TIMESTAMP view of a time column for event-time windows and
+    watermarks: numeric input is epoch seconds."""
+    c = F.col(ts_col)
+    if dict(df.dtypes)[ts_col] in ("double", "bigint", "float", "int"):
+        return F.timestamp_seconds(c)
+    return c.cast("timestamp")
+
+
 def drop_null_ts(df: DataFrame, ts_col: str, token_col: str | None = None) -> DataFrame:
     """Drop the rows without a time (null ``ts``, or NaN for double/float
     input): they have no place in a session or on a split grid. Given

@@ -88,6 +88,21 @@ def test_dedup_clusters(spark):
     assert out[10] == out[11] == 10
 
 
+def test_dedup_clusters_runs_to_fixpoint(spark):
+    """Labels propagate until none changes, however long the chain: a
+    50-node path (diameter 49, minimum at one end), a 50-node cycle and a
+    star whose centre is not its minimum each end as one cluster labelled
+    with its minimum id."""
+    path = [(i, i + 1) for i in range(100, 149)]
+    cycle = [(200 + i, 200 + (i + 1) % 50) for i in range(50)]
+    star = [(399, leaf) for leaf in range(300, 350)]
+    pairs = spark.createDataFrame(path + cycle + star, "id_a long, id_b long")
+    out = dedup.dedup_clusters(pairs).toPandas().set_index("id")["cluster_id"]
+    for ids in (range(100, 150), range(200, 250), [*range(300, 350), 399]):
+        assert (out[list(ids)] == min(ids)).all(), ids
+    assert len(out) == 151
+
+
 def test_simhash_near_dups(spark, docs_with_dups):
     sigs = dedup.simhash_signatures(docs_with_dups)
     # exact dups -> identical simhash (hamming 0)

@@ -277,3 +277,77 @@ def test_extract_features_checkpoint_null_partition(spark, tmp_path, capsys):
     assert None in rows_in and rows_out == rows_in
     ef.main(argv)
     assert "partitions done=0 skipped=6 errors=0" in capsys.readouterr().out
+
+
+def test_extract_features_checkpoint_recomputes_changed_input(spark, tmp_path,
+                                                             capsys):
+    """--checkpoint stamps every partition with a hash of the input's file
+    list: after a new file lands, a re-run recomputes every partition (the
+    partition column is a plain column, so each one reads every file) and
+    records the changed partition's new row count; an unchanged re-run
+    skips them all. The new file holds the 201 ``error`` events re-keyed
+    to a new user, which with a timeout and an interval no gap reaches is
+    exactly one more ``error`` flow."""
+    from pyspark.sql import functions as F
+
+    import jobs.extract_features as ef
+    from netml_spark.manifest import CheckpointManifest
+
+    src = str(tmp_path / "events")
+    spark.read.parquet(EVENTS).write.parquet(src)
+    ckpt = str(tmp_path / "ckpt")
+    argv = [
+        "--input", src, "--output", str(tmp_path / "features"),
+        "--feat-type", "STATS", "--entity-cols", "user_id",
+        "--token-col", "value", "--order-cols", "event_id",
+        "--timeout", "1e12", "--interval", "1e12",
+        "--checkpoint", ckpt, "--partition-col", "event_type",
+    ]
+
+    def error_row_counts():
+        return [r.row_count for r in CheckpointManifest(spark, ckpt).read()
+                .filter(F.col("partition") == "error").orderBy("finished_at")
+                .collect()]
+
+    ef.main(argv)
+    assert "partitions done=5 skipped=0 errors=0" in capsys.readouterr().out
+    (spark.read.parquet(EVENTS).filter(F.col("event_type") == "error")
+     .withColumn("user_id", F.lit(1000).cast("long"))
+     .write.mode("append").parquet(src))
+    ef.main(argv)
+    assert "partitions done=5 skipped=0 errors=0" in capsys.readouterr().out
+    before, after = error_row_counts()
+    assert after == before + 1
+    assert after == spark.read.parquet(f"{ckpt}/features_STATS/event_type=error").count()
+    ef.main(argv)
+    assert "partitions done=0 skipped=5 errors=0" in capsys.readouterr().out
+
+
+def test_extract_features_checkpoint_scope_is_one_partition_value(spark, tmp_path,
+                                                                  capsys):
+    """--checkpoint treats each partition value as one capture, as the
+    reference extracts one pcap at a time: a partition's output equals the
+    plain job over that value's events alone, with its own split interval
+    and dim (IAT with the default quantile scalars)."""
+    from pyspark.sql import functions as F
+
+    import jobs.extract_features as ef
+
+    common = ["--feat-type", "IAT", "--entity-cols", "user_id",
+              "--token-col", "value", "--order-cols", "event_id",
+              "--timeout", "86400"]
+    ckpt = tmp_path / "ckpt"
+    ef.main(["--input", EVENTS, "--output", str(tmp_path / "unused"), *common,
+             "--checkpoint", str(ckpt), "--partition-col", "event_type"])
+    assert "errors=0" in capsys.readouterr().out
+    src = str(tmp_path / "purchase")
+    spark.read.parquet(EVENTS).filter(F.col("event_type") == "purchase").write.parquet(src)
+    plain = str(tmp_path / "plain")
+    ef.main(["--input", src, "--output", plain, *common])
+
+    def rows(path):
+        return sorted((r.user_id, r.session_id, r.subflow_id, r.n_tok, list(r.features))
+                      for r in spark.read.parquet(path).collect())
+
+    got = rows(str(ckpt / "features_IAT" / "event_type=purchase"))
+    assert got and got == rows(plain)

@@ -72,7 +72,8 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
-    spark = get_spark("check-correctness", master="local[8]", shuffle_partitions=16)
+    spark = get_spark("check-correctness", master="local[8]", shuffle_partitions=16,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     qs = entrymod.queries()
     sqls = entrymod.oracle_sql()
     failures = []

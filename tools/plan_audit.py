@@ -40,7 +40,8 @@ def main():
     from netml_spark.operators.stats import stats_features
     from netml_spark.session import get_spark
 
-    spark = get_spark("plan-audit", master="local[4]", shuffle_partitions=8)
+    spark = get_spark("plan-audit", master="local[4]", shuffle_partitions=8,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     sf = "/root/testdata/sf0.001"
     ev = spark.read.parquet(f"{sf}/events.parquet")
     results = {}
