@@ -28,6 +28,7 @@ from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, DoubleType
 
 from netml_spark.oracle import netml_ref
+from netml_spark.util import positive
 
 # A typed return type: a DDL string would need an active session to parse
 # when the module-level UDFs below are defined.
@@ -275,7 +276,7 @@ def samp_udf(sampling_feature: str, sampling_rate: float):
     (parser.py:472-559) as an Arrow scalar UDF over flat value buffers
     (see _samp_batch). Parity vs the loop is pinned exact (atol=0) by
     tests/test_kernels.py and the hypothesis properties."""
-    feat, rate = sampling_feature, float(sampling_rate)
+    feat, rate = sampling_feature, positive(sampling_rate, "SAMP sampling rate")
 
     @arrow_udf(_DOUBLES)
     def _samp(times: pa.Array, tokens: pa.Array) -> pa.Array:

@@ -16,6 +16,7 @@ All variants are declarative passes over ``(entity, ts)``:
                             over (group-head flag, seconds) only; a native
                             Window marks the group heads and a native Filter
                             drops the discarded rows.
+- ``subflow_spans``       : the same re-split over sessions' times arrays.
 
 Scale notes (100 TB): the only wide exchange is hash partitioning by the
 entity key; every window uses the same partitioning so Catalyst reuses the
@@ -34,8 +35,13 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
-from netml_spark.util import drop_null_ts, ts_seconds
+from netml_spark.operators.kernels import _flat
+from netml_spark.util import drop_null_ts, positive, ts_seconds
+
+# A typed return type: a DDL string would need an active session to parse.
+_SPANS = ArrayType(StructType([StructField(c, IntegerType()) for c in ("sub", "start", "len")]))
 
 
 def _entity_window(entity_cols: Sequence[str], ts_col: str, order_cols: Sequence[str]):
@@ -218,7 +224,7 @@ def subflows_interval(
     session with < thres rows has < thres rows itself, so the subflow
     min-size filter subsumes the deferred session-size filter (both use
     flow_pkts_thres; pinned by the netml_subflows DuckDB gate)."""
-    interval = float(interval)
+    interval = positive(interval, "subflows interval")
     thres = max(2, int(flow_pkts_thres))
 
     def label(batches: Iterator[Tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
@@ -313,3 +319,48 @@ def _subflow_labels(batches, interval: float, thres: int):
             yield pa.array(np.concatenate(out), type=pa.int32())
     if held:
         yield pa.array(labels(np.concatenate(held), one), type=pa.int32())
+
+
+def _subflow_spans_batch(times: pa.ListArray, interval: float, thres: int) -> pa.ListArray:
+    """The ``subflow_spans`` kernel over one Arrow batch of sorted ``times``
+    rows: ``_subflow_assign`` runs once over the flat buffer with the
+    non-empty rows as groups, and each kept run of one subflow id becomes
+    a ``(sub, start, len)`` span of its row, ``start`` 1-based for
+    ``slice``. An empty row gives []; a null row stays null."""
+    t, lens = _flat(times)
+    ends = np.cumsum(lens)
+    offs = ends - lens
+    heads = offs[lens > 0]
+    keep, sub = (_subflow_assign(t, heads, interval, thres) if len(t)
+                 else (np.zeros(0, dtype=bool), np.zeros(0, dtype=np.int32)))
+    run = np.zeros(len(t), dtype=bool)  # first row of each (group, subflow) run
+    run[heads] = True
+    run[1:] |= sub[1:] != sub[:-1]
+    first = np.flatnonzero(run)
+    size = np.diff(np.append(first, len(t)))
+    kept = keep[first]  # a run is kept or dropped whole
+    first, size = first[kept], size[kept]
+    row = np.searchsorted(ends, first, side="right")
+    spans = pa.StructArray.from_arrays(
+        [pa.array(a, pa.int32()) for a in (sub[first], first - offs[row] + 1, size)],
+        names=["sub", "start", "len"])
+    counts = np.bincount(row, minlength=len(lens))
+    offsets = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), spans, mask=times.is_null())
+
+
+def subflow_spans(interval: float, flow_pkts_thres: int = 2):
+    """The interval re-split of whole sessions (parser.py:209-299, quirks as
+    in ``subflows_interval``) as an Arrow scalar UDF over a sorted
+    ``times`` column: each row's kept subflows as
+    ``array<struct<sub, start, len>>`` (subflow id, 1-based first
+    position, packet count), for a native ``explode`` and ``slice`` of the
+    row's series (see _subflow_spans_batch)."""
+    interval = positive(interval, "subflow split interval")
+    thres = max(2, int(flow_pkts_thres))
+
+    @arrow_udf(_SPANS)
+    def subflow_spans(times: pa.Array) -> pa.Array:
+        return _subflow_spans_batch(times, interval, thres)
+
+    return subflow_spans

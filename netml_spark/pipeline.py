@@ -6,20 +6,21 @@ Lifecycle (SURVEY.md §3):
 
   events --drop null/NaN ts and null tokens------- [one Filter]
          --sessionize_timeout--> sessions          [1 shuffle on entity]
+         --events_to_sequences--> one row/session  [no shuffle; CACHED]
          --(interval<=0: duration quantile)------- [pass-1 agg -> scalar]
-         --subflows_interval--> subflows           [head Window + label UDF
-                                                    over (head, seconds) +
-                                                    Filter; no shuffle]
-         --events_to_sequences--> one row per flow [re-shuffle on flow keys]
-         --(dim quantile)------------------------- [pass-2 agg -> scalar]
+         --subflow_spans + explode + slice-------> one row per flow
+                                                   [Arrow UDF over times;
+                                                    CACHED]
+         --(dim quantile)------------------------- [pass-2 agg -> scalar;
+                                                    session cache released]
          --kernel dispatch + fft/pad + header----> features:array<double>
                                                    [Arrow UDFs over the cache]
 
-The two quantiles are the only driver round-trips. The label UDF reports
-an unknown output partitioning, so ``events_to_sequences`` shuffles the
-subflow rows again by flow key. Feature dims per type follow
-parser.py:787-812 (IAT: dim-1, SIZE: dim, IAT_SIZE: 2*dim-1, STATS: 12,
-SAMP_*: dim-1 with rate = duration-quantile at q=0.3).
+The two quantiles are the only driver round-trips; the chain plans one
+exchange, and only ``times`` crosses into Python to split, once per
+session. Carry columns are ``first()`` per session. Feature dims per type
+follow parser.py:787-812 (IAT: dim-1, SIZE: dim, IAT_SIZE: 2*dim-1,
+STATS: 12, SAMP_*: dim-1 with rate = duration-quantile at q=0.3).
 """
 
 from __future__ import annotations
@@ -35,10 +36,15 @@ from netml_spark.operators.quantile import (
     EmptyInputError, dim_from_counts, exact_quantile,
 )
 from netml_spark.operators.sequences import events_to_sequences
-from netml_spark.operators.sessionize import sessionize_timeout, subflows_interval
-from netml_spark.util import drop_null_ts, ts_seconds
+from netml_spark.operators.sessionize import sessionize_timeout, subflow_spans
+from netml_spark.util import drop_null_ts, positive
 
 FEAT_TYPES = ("IAT", "SIZE", "IAT_SIZE", "STATS", "SAMP_NUM", "SAMP_SIZE")
+
+
+def _duration():
+    """A session's or flow's duration from its sorted ``times``."""
+    return F.element_at("times", -1) - F.element_at("times", 1)
 
 
 @dataclass
@@ -58,17 +64,15 @@ class FeaturePlan:
     split_interval: float | None = field(default=None, init=False)
     sampling_rate: float | None = field(default=None, init=False)
     empty_input: bool = field(default=False, init=False)  # placeholders used
-    # the stage-4 sequences cache from the LAST extract() (r4 verdict item
-    # 5: the cache must be releasable — call release() once the features
-    # frame has been materialized; a repeated extract() on the same plan
-    # releases the previous cache automatically)
-    _cached_seqs: DataFrame | None = field(default=None, init=False, repr=False)
+    # the LAST extract()'s caches: the flows, and the sessions if a barrier
+    # raised first (r4 verdict item 5; a repeated extract() releases them)
+    _caches: list = field(default_factory=list, init=False, repr=False)
 
     def release(self) -> None:
-        """Unpersist the sequences cache held from the last extract()."""
-        if self._cached_seqs is not None:
-            self._cached_seqs.unpersist()
-            self._cached_seqs = None
+        """Unpersist every cache held from the last extract()."""
+        for df in self._caches:
+            df.unpersist()
+        self._caches = []
 
     def extract(
         self,
@@ -84,79 +88,66 @@ class FeaturePlan:
         if base not in FEAT_TYPES:
             raise ValueError(f"feat_type {self.feat_type!r} not in {FEAT_TYPES}")
         entity_cols = list(entity_cols)
-        # Empty input is a VALUE, not an exception: when zero rows survive
-        # the session/subflow thresholds the two data-dependent quantile
-        # scalars have nothing to measure; placeholder scalars flow through
-        # so the SAME declarative plan builds (it evaluates to zero rows
-        # with the correct schema) and every caller composes — round 3 made
-        # jobs/classify.py catch the ValueError instead, which no other
-        # caller did (r3 verdict item 6). self.dim/split_interval then hold
-        # the placeholders, flagged by self.empty_input.
+        # Empty input is a VALUE, not an exception (r3 verdict item 6): when
+        # no rows survive the thresholds, placeholder scalars flow through,
+        # the same plan evaluates to zero rows of the right schema, and
+        # self.empty_input flags the placeholders in dim/split_interval.
         self.empty_input = False
 
         events = drop_null_ts(events, ts_col, token_col)
 
-        # stage 1: timeout sessionize (parser.py:80-206). The per-session
-        # min-size filter is DEFERRED (r6): the subflow min-size filter in
-        # stage 3 subsumes it exactly (same flow_pkts_thres — every
-        # subflow of a < thres session is itself < thres; pinned by the
-        # netml_subflows DuckDB gate), which drops one Sort + one Window
-        # pass from every extract; the stage-2 quantile applies the same
-        # filter post-aggregation (count >= thres per session), so its
-        # input set is unchanged.
-        sess = sessionize_timeout(
-            events, entity_cols, ts_col, self.timeout, self.flow_pkts_thres,
-            order_cols, defer_seg_filter=True,
-        )
+        # stage 1: timeout sessionize (parser.py:80-206), then one row per
+        # session with its (ts, order..., token)-sorted series; the session
+        # min-size filter is deferred to those rows (one Window pass fewer),
+        # and the grouping rides sessionize's entity exchange.
+        sess = sessionize_timeout(events, entity_cols, ts_col, self.timeout,
+                                  self.flow_pkts_thres, order_cols, defer_seg_filter=True)
         sess_keys = entity_cols + ["session_id"]
+        extra = list(header_cols) if self.header else []
+        self.release()  # repeated extracts must not accumulate caches
+        sessions = events_to_sequences(sess, sess_keys, ts_col, token_col, order_cols,
+                                       carry_cols, extra_series=extra)
+        sessions = sessions.filter(F.col("n_tok") >= self.flow_pkts_thres).cache()
+        self._caches = [sessions]
 
         # stage 2: split interval (pass-1 quantile barrier, parser.py:726-729)
         if self.interval > 0:
             self.split_interval = float(self.interval)
         else:
-            ts_d = ts_seconds(sess, ts_col)
-            durations = sess.groupBy(*sess_keys).agg(
-                (F.max(ts_d) - F.min(ts_d)).alias("duration"),
-                F.count(F.lit(1)).alias("_n_seg"),
-            ).filter(F.col("_n_seg") >= self.flow_pkts_thres)
             try:
-                self.split_interval = exact_quantile(
-                    durations, "duration", self.q_interval, approx=self.approx_quantiles
-                )
+                self.split_interval = exact_quantile(sessions, _duration(), self.q_interval,
+                                                     approx=self.approx_quantiles)
             except EmptyInputError:  # placeholder, zero rows flow on
                 self.empty_input = True
                 self.split_interval = 1.0
+            positive(self.split_interval, f"the split interval (the q_interval="
+                     f"{self.q_interval} quantile of session durations)")
 
-        # stage 3: grid-aligned interval re-split (parser.py:209-299).
-        # sess is hash-partitioned by entity (sessionize's window exchange),
-        # which meets the re-split window's distribution: one shuffle for
-        # the chain.
-        subs = subflows_interval(
-            sess, self.split_interval, sess_keys, ts_col,
-            self.flow_pkts_thres, order_cols,
-        )
+        # stage 3: grid-aligned interval re-split (parser.py:209-299) of each
+        # session's times; each kept span explodes to a flow of native slices.
+        series = ["times", "tokens"] + [f"{c}s" for c in extra]
+        spans = subflow_spans(self.split_interval, self.flow_pkts_thres)("times")
+        span = F.explode(spans).alias("_s")
+        seqs = sessions.select(*sess_keys, *carry_cols, *series, span).select(
+            *sess_keys, F.col("_s.sub").alias("subflow_id"),
+            *[F.slice(c, F.col("_s.start"), F.col("_s.len")).alias(c) for c in series],
+            F.col("_s.len").alias("n_tok"), *carry_cols,
+        ).cache()
+        self._caches.append(seqs)
         flow_keys = sess_keys + ["subflow_id"]
 
-        # stage 4: one row per flow with ordered series
-        extra = [header_cols[0], header_cols[1], header_cols[2]] if self.header else []
-        self.release()  # repeated extracts must not accumulate caches
-        seqs = events_to_sequences(
-            subs, flow_keys, ts_col, token_col, order_cols, carry_cols,
-            extra_series=extra,
-        ).cache()
-        self._cached_seqs = seqs
-
-        # stage 5: dim (pass-2 quantile barrier, parser.py:783-785)
+        # stage 4: dim (pass-2 quantile barrier, parser.py:783-785)
         try:
             dim = dim_from_counts(seqs, "n_tok", self.q_interval, approx=self.approx_quantiles)
         except EmptyInputError:
-            # empty input surfaces here when interval>0 skipped stage 2;
-            # dim=2 keeps every slice/pad length positive (zero rows, so
-            # the kernels never evaluate — only the schema matters)
+            # empty input surfaces here when interval>0 skipped stage 2; dim=2
+            # keeps every slice/pad length positive (only the schema matters)
             self.empty_input = True
             dim = 2
+        sessions.unpersist()  # the barrier materialized seqs
+        self._caches = [seqs]
 
-        # stage 6: kernel dispatch (parser.py:787-812)
+        # stage 5: kernel dispatch (parser.py:787-812)
         if base == "IAT":
             self.dim = dim - 1
             feats = seqs.withColumn("features", kernels.iat("times"))
@@ -171,25 +162,23 @@ class FeaturePlan:
             feats = seqs.withColumn("features", kernels.stats("times", "tokens"))
         else:  # SAMP_NUM / SAMP_SIZE (rate = duration quantile q=0.3, :801-808)
             self.dim = dim - 1
-            dur = F.element_at("times", -1) - F.element_at("times", 1)
-            durations = seqs.select(dur.alias("duration"))
             if self.empty_input:
                 self.sampling_rate = 1.0
             else:
-                self.sampling_rate = exact_quantile(
-                    durations, "duration", 0.3, approx=self.approx_quantiles
-                )
+                self.sampling_rate = positive(
+                    exact_quantile(seqs, _duration(), 0.3, approx=self.approx_quantiles),
+                    "the SAMP sampling rate (the 0.3 quantile of flow durations)")
             feats = seqs.withColumn(
                 "features", kernels.samp_udf(base, self.sampling_rate)("times", "tokens")
             )
 
-        # stage 7: fft or pad/truncate (parser.py:814-818)
+        # stage 6: fft or pad/truncate (parser.py:814-818)
         if self.fft:
             feats = feats.withColumn("features", kernels.fft_udf(self.dim)("features"))
         else:
             feats = feats.withColumn("features", kernels.pad_truncate("features", self.dim))
 
-        # stage 8: header concat (parser.py:820-829)
+        # stage 7: header concat (parser.py:820-829)
         if self.header:
             h_dim = 8 + self.dim
             fl, pr, tt = (f"{header_cols[0]}s", f"{header_cols[1]}s", f"{header_cols[2]}s")

@@ -154,10 +154,21 @@ def test_featureplan_empty_input_is_a_value(spark, token_events_df):
     assert not plan.empty_input and out.count() > 0
 
 
+def _zero_duration_events(spark, n_zero, n_spread):
+    """Three-packet entities: ``n_zero`` whose packets share one ts (0 s
+    sessions and flows), then ``n_spread`` that last 2 s."""
+    rows = [(f"z{k}", 100.0 * k, 7, i) for k in range(n_zero) for i in range(3)]
+    rows += [(f"w{k}", 5000.0 + 100.0 * k + i, 7, i) for k in range(n_spread)
+             for i in range(3)]
+    return spark.createDataFrame(rows, "doc_id string, ts double, token int, seq long")
+
+
 def test_featureplan_release_unpersists_cache(spark, token_events_df):
-    """r4 verdict item 5: extract()'s stage-4 sequences cache is released
-    by plan.release(); a repeated extract() on the same plan releases the
-    previous cache automatically — no accumulation across extracts."""
+    """r4 verdict item 5: extract() leaves one cache, the flows, which
+    plan.release() releases; a repeated extract() on the same plan
+    releases the previous cache automatically — no accumulation across
+    extracts. An extract whose split-interval barrier raises leaves the
+    session cache behind, and release() drops it too."""
 
     def n_cached():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
@@ -175,6 +186,12 @@ def test_featureplan_release_unpersists_cache(spark, token_events_df):
     plan.release()
     assert n_cached() == base
     plan.release()  # idempotent
+    with pytest.raises(ValueError):
+        plan.extract(_zero_duration_events(spark, 19, 1), ("doc_id",), "ts", "token",
+                     ("seq",), carry_cols=())
+    assert n_cached() == base + 1
+    plan.release()
+    assert n_cached() == base
 
 
 def test_empty_input_error_is_distinct(spark):
@@ -314,3 +331,71 @@ def test_featureplan_null_entity_and_token(spark, feat_type, case):
             (44, 45, 77, 46, 47), (48, 49, 50, 78, 51)]
     if case in ("null_token", "nan_ts", "single_event"):
         assert got == run(clean)[0]
+
+
+def test_featureplan_one_long_session_splits_like_the_oracle(spark):
+    """One session of 10,000 packets, more than an Arrow batch's 8192
+    rows, that a 10 s interval splits about 200 times: every flow and its
+    features equal the reference lifecycle's."""
+    rng = np.random.default_rng(23)
+    gaps = rng.uniform(0.2, 2.0, 10_000) + (rng.random(10_000) < 0.02) * 15.0
+    rows = [("big", float(t), int(k), i) for i, (t, k) in
+            enumerate(zip(np.cumsum(gaps), rng.integers(40, 1500, 10_000)))]
+    rows += [("small", 5000.0 + i, 60, i) for i in range(5)]
+    plan = FeaturePlan(feat_type="IAT", interval=10.0)
+    out = plan.extract(spark.createDataFrame(rows, "doc_id string, ts double, token int, "
+                                                   "seq long"),
+                       ("doc_id",), "ts", "token", ("seq",), carry_cols=())
+    try:
+        got = out.select("doc_id", "session_id", "times", "features").collect()
+    finally:
+        plan.release()
+    assert {r.session_id for r in got} == {0}
+    assert sum(r.doc_id == "big" for r in got) > 100
+    want = _oracle_keyed(rows, "IAT")
+    assert set(want) == {(r.doc_id, r.times[0]) for r in got}
+    for r in got:
+        np.testing.assert_allclose(r.features, want[(r.doc_id, r.times[0])],
+                                   rtol=1e-9, atol=1e-9)
+
+
+def test_featureplan_dup_ts_across_a_split_follows_seq(spark):
+    """Packets that share a ts at the head of a split keep (ts, seq)
+    order, not token order: here seq runs opposite to the token."""
+    rows = [("a", float(t), 40 + i, i) for i, t in enumerate([0, 1, 2, 3, 31, 32, 33])]
+    rows += [("a", 30.0, 100, 11), ("a", 30.0, 200, 10)]  # the split's head
+    rows += [("a", 60.0 + i, 50, 20 + i) for i in range(3)]  # the discarded tail
+    plan = FeaturePlan(feat_type="SIZE", interval=10.0)
+    out = plan.extract(spark.createDataFrame(rows, "doc_id string, ts double, token int, "
+                                                   "seq long"),
+                       ("doc_id",), "ts", "token", ("seq",), carry_cols=())
+    try:
+        got = sorted((r.times[0], list(r.tokens), list(r.features))
+                     for r in out.select("times", "tokens", "features").collect())
+    finally:
+        plan.release()
+    assert [g[1] for g in got] == [[40, 41, 42, 43], [200, 100, 44, 45, 46]]
+    want = _oracle_keyed(rows, "SIZE")
+    assert set(want) == {("a", g[0]) for g in got}
+    for t0, _, f in got:
+        np.testing.assert_array_equal(f, want[("a", t0)])
+
+
+@pytest.mark.parametrize("feat_type", ["IAT", "SAMP_NUM"])
+def test_featureplan_zero_quantile_raises(spark, feat_type):
+    """A derived split interval or SAMP rate of 0 would divide by zero in
+    the reference (netml_ref.py:103, :205): extract raises ValueError
+    naming the quantile. IAT: 19 of 20 sessions last 0 s, so the
+    q_interval=0.9 duration quantile is 0; SAMP_NUM at a 10 s interval:
+    4 of 10 flows last 0 s, so the 0.3 flow-duration quantile is 0."""
+    if feat_type == "IAT":
+        df = _zero_duration_events(spark, 19, 1)
+        plan, match = FeaturePlan(feat_type="IAT"), "q_interval=0.9 quantile"
+    else:
+        df = _zero_duration_events(spark, 4, 6)
+        plan, match = FeaturePlan(feat_type="SAMP_NUM", interval=10.0), "SAMP sampling rate"
+    try:
+        with pytest.raises(ValueError, match=match):
+            plan.extract(df, ("doc_id",), "ts", "token", ("seq",), carry_cols=())
+    finally:
+        plan.release()

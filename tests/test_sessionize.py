@@ -328,3 +328,53 @@ def test_subflows_drops_null_ts_rows(spark):
     want = run(clean)
     assert {r[-1] for r in want if r[0] == "a"} == {0, 1, 2}  # a splits
     assert run(clean + bad) == want
+
+
+def test_subflow_spans_batch_pyarrow():
+    """Pure-pyarrow (no Spark): the span kernel over an offset-sliced
+    ListArray of sorted times gives each row the kept subflows of
+    ``netml_ref.flows2subflows`` as (sub, start, len) spans, with the sub
+    ids of the event-level label kernel; across empty, one-value, null,
+    split-heavy and near-tie rows, and a one-row batch."""
+    import pyarrow as pa
+
+    from netml_spark.operators.sessionize import _subflow_labels, _subflow_spans_batch
+
+    interval, thres = 0.3, 2
+    rng = np.random.default_rng(17)
+    rows = [np.cumsum(rng.uniform(0.01, 0.5, int(rng.integers(2, 40)))) for _ in range(8)]
+    rows += [np.cumsum(rng.uniform(0.25, 2.0, 60))]  # split-heavy
+    # near ties: gaps of 0.1/0.2/0.3 s on a 0.3 s interval, where
+    # 0.1 + 0.2 != 0.3 in floating point
+    rows += [np.cumsum(rng.choice([0.1, 0.2, 0.3, 0.7], 80)) for _ in range(3)]
+    rows[2:2] = [np.array([]), np.array([4.5]), None]
+    arr = pa.array([[7.0]] * 2 + [None if r is None else r.tolist() for r in rows]
+                   + [[7.0]], pa.list_(pa.float64())).slice(2, len(rows))
+    assert arr.offset == 2
+
+    def want(t):
+        if t is None:
+            return None
+        if len(t) == 0:
+            return []
+        subs = netml_ref.flows2subflows([(0, t, np.arange(len(t)))], interval, thres)
+        head = np.zeros(len(t), dtype=bool)
+        head[0] = True
+        labels = next(_subflow_labels(iter([(pa.array(head), pa.array(t))]),
+                                      interval, thres)).to_numpy()
+        out = []
+        for _, st, pos in subs:
+            np.testing.assert_array_equal(pos, np.arange(pos[0], pos[0] + len(pos)))
+            np.testing.assert_array_equal(st, t[pos])
+            out.append({"sub": int(labels[pos[0]]), "start": int(pos[0]) + 1,
+                        "len": len(pos)})
+        return out
+
+    got = _subflow_spans_batch(arr, interval, thres)
+    assert got.type == pa.list_(pa.struct([(c, pa.int32()) for c in ("sub", "start", "len")]))
+    assert got.to_pylist() == [want(r) for r in rows]
+    assert sum(len(s) > 3 for s in got.to_pylist() if s) >= 4  # rows split often
+    one = pa.array([rows[-1].tolist()], pa.list_(pa.float64()))
+    assert _subflow_spans_batch(one, interval, thres).to_pylist() == [want(rows[-1])]
+    no_values = pa.array([[], None], pa.list_(pa.float64()))
+    assert _subflow_spans_batch(no_values, interval, thres).to_pylist() == [[], None]
