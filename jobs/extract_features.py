@@ -23,6 +23,12 @@ reference extracts one pcap at a time (cli.py:72-96): each partition's
 output equals the plain path run over that value's events alone. Every
 partition is stamped with a hash of the input's file list, so a re-run
 after the input gained or lost a file recomputes every partition.
+
+The partition column, when the input has it, rides to the output as a
+carry column, taken once per session (FeaturePlan's ``first()``). On the
+plain path it should be constant per entity, like the capture source: a
+column that varies within a session gives all of that session's flows one
+of its values. With --checkpoint it is constant within each partition.
 """
 
 from __future__ import annotations

@@ -28,7 +28,6 @@ from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, DoubleType
 
 from netml_spark.oracle import netml_ref
-from netml_spark.util import positive
 
 # A typed return type: a DDL string would need an active session to parse
 # when the module-level UDFs below are defined.
@@ -223,7 +222,9 @@ def _samp_batch(times: pa.ListArray, tokens: pa.ListArray, feat: str, rate: floa
       - no consecutive-bucket gap > 501 (per-gap zero-fill cap never fires)
     Ineligible rows run the verbatim loop on slices of the flat buffers
     and are spliced in by offset. margin bounds ~1000 accumulated ulps,
-    far above any drift. A null row in either input gives a null row."""
+    far above any drift. A null row in either input gives a null row. At a
+    rate of 0 or inf a row is one bucket, or ValueError where the loop
+    would divide by 0 (a packet past the row's first by more than it)."""
     valid, (times, tokens) = _valid_rows(times, tokens)
     t, lens = _flat(times)
     s, _ = _flat(tokens)
@@ -231,10 +232,13 @@ def _samp_batch(times: pa.ListArray, tokens: pa.ListArray, feat: str, rate: floa
     ends = np.cumsum(lens)
     starts = ends - lens
     row_id = np.repeat(np.arange(n), lens)
-    q = (t - t[starts[row_id]]) / rate
+    dt, finite = t - t[starts[row_id]], 0 < rate < np.inf
+    if not finite and np.any(~(dt <= rate) & (np.arange(len(t)) != starts[row_id])):
+        raise ValueError(f"SAMP sampling rate {rate!r}: a row needs a division by it")
+    q = dt / rate if finite else np.zeros(len(t))
     k = np.maximum(np.floor(q).astype(np.int64), 0)  # guard q=-0.0 edge
 
-    margin = 4096.0 * np.spacing(np.abs(t).max(initial=0.0) + rate) / rate
+    margin = 4096.0 * np.spacing(np.abs(t).max(initial=0.0) + rate) / rate if finite else 0.0
     near_boundary = (q >= 0.5) & (np.abs(q - np.round(q)) <= margin)
     nz = lens > 0
     K = np.full(n, -1, dtype=np.int64)
@@ -276,7 +280,7 @@ def samp_udf(sampling_feature: str, sampling_rate: float):
     (parser.py:472-559) as an Arrow scalar UDF over flat value buffers
     (see _samp_batch). Parity vs the loop is pinned exact (atol=0) by
     tests/test_kernels.py and the hypothesis properties."""
-    feat, rate = sampling_feature, positive(sampling_rate, "SAMP sampling rate")
+    feat, rate = sampling_feature, float(sampling_rate)
 
     @arrow_udf(_DOUBLES)
     def _samp(times: pa.Array, tokens: pa.Array) -> pa.Array:

@@ -38,7 +38,7 @@ from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
 from netml_spark.operators.kernels import _flat
-from netml_spark.util import drop_null_ts, positive, ts_seconds
+from netml_spark.util import drop_null_ts, ts_seconds
 
 # A typed return type: a DDL string would need an active session to parse.
 _SPANS = ArrayType(StructType([StructField(c, IntegerType()) for c in ("sub", "start", "len")]))
@@ -224,7 +224,7 @@ def subflows_interval(
     session with < thres rows has < thres rows itself, so the subflow
     min-size filter subsumes the deferred session-size filter (both use
     flow_pkts_thres; pinned by the netml_subflows DuckDB gate)."""
-    interval = positive(interval, "subflows interval")
+    interval = float(interval)
     thres = max(2, int(flow_pkts_thres))
 
     def label(batches: Iterator[Tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
@@ -243,7 +243,9 @@ def _subflow_assign(t: np.ndarray, starts: np.ndarray, interval: float,
     epoch-seconds ``t`` of whole groups and their start indices ``starts``,
     return ``(keep, sub)`` — the surviving-row mask and each row's subflow
     id. Vectorized across every group in the batch; the only Python loop
-    is ``_split_positions`` over groups that contain a candidate gap."""
+    is ``_split_positions`` over groups that contain a candidate gap. A
+    non-positive interval raises ValueError only at such a gap, where the
+    reference divides by it (parser.py:258)."""
     n = len(t)
     ends = np.append(starts[1:], n)
     # natural candidates across the whole batch; group heads masked
@@ -252,6 +254,8 @@ def _subflow_assign(t: np.ndarray, starts: np.ndarray, interval: float,
     d[1:] = t[1:] - t[:-1]
     d[starts] = 0.0
     cand_all = np.flatnonzero(d > interval)
+    if len(cand_all) and not interval > 0:
+        raise ValueError(f"split interval {interval!r}: a gap needs a division by it")
     split_ind = np.zeros(n, dtype=np.int32)
     nsplits = np.zeros(len(starts), dtype=np.int64)
     if len(cand_all):
@@ -356,7 +360,7 @@ def subflow_spans(interval: float, flow_pkts_thres: int = 2):
     ``array<struct<sub, start, len>>`` (subflow id, 1-based first
     position, packet count), for a native ``explode`` and ``slice`` of the
     row's series (see _subflow_spans_batch)."""
-    interval = positive(interval, "subflow split interval")
+    interval = float(interval)
     thres = max(2, int(flow_pkts_thres))
 
     @arrow_udf(_SPANS)

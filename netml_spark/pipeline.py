@@ -16,11 +16,13 @@ Lifecycle (SURVEY.md §3):
          --kernel dispatch + fft/pad + header----> features:array<double>
                                                    [Arrow UDFs over the cache]
 
-The two quantiles are the only driver round-trips; the chain plans one
-exchange, and only ``times`` crosses into Python to split, once per
-session. Carry columns are ``first()`` per session. Feature dims per type
-follow parser.py:787-812 (IAT: dim-1, SIZE: dim, IAT_SIZE: 2*dim-1,
-STATS: 12, SAMP_*: dim-1 with rate = duration-quantile at q=0.3).
+The two quantiles are the only driver round-trips (a third job checks a
+0); the chain plans one exchange, and only ``times`` crosses into Python
+to split, once per session. Carry columns are ``first()`` per session:
+one not constant per session gives all its flows one of the session's
+values. Feature dims per type follow parser.py:787-812 (IAT: dim-1,
+SIZE: dim, IAT_SIZE: 2*dim-1, STATS: 12, SAMP_*: dim-1 with rate =
+duration-quantile at q=0.3).
 """
 
 from __future__ import annotations
@@ -37,7 +39,7 @@ from netml_spark.operators.quantile import (
 )
 from netml_spark.operators.sequences import events_to_sequences
 from netml_spark.operators.sessionize import sessionize_timeout, subflow_spans
-from netml_spark.util import drop_null_ts, positive
+from netml_spark.util import drop_null_ts
 
 FEAT_TYPES = ("IAT", "SIZE", "IAT_SIZE", "STATS", "SAMP_NUM", "SAMP_SIZE")
 
@@ -45,6 +47,14 @@ FEAT_TYPES = ("IAT", "SIZE", "IAT_SIZE", "STATS", "SAMP_NUM", "SAMP_SIZE")
 def _duration():
     """A session's or flow's duration from its sorted ``times``."""
     return F.element_at("times", -1) - F.element_at("times", 1)
+
+
+def _divisor(df: DataFrame, value: float, what: str) -> float:
+    """A derived split interval or SAMP rate: a 0 raises ValueError iff a
+    row of ``df`` lasts > 0 s (netml_ref.py:101-103, :200-205 divide)."""
+    if value == 0 and df.agg(F.max(_duration())).first()[0] > 0:
+        raise ValueError(f"{what} is 0, and the reference would divide by it")
+    return value
 
 
 @dataclass
@@ -120,8 +130,8 @@ class FeaturePlan:
             except EmptyInputError:  # placeholder, zero rows flow on
                 self.empty_input = True
                 self.split_interval = 1.0
-            positive(self.split_interval, f"the split interval (the q_interval="
-                     f"{self.q_interval} quantile of session durations)")
+            _divisor(sessions, self.split_interval, f"the split interval (the "
+                     f"q_interval={self.q_interval} quantile of session durations)")
 
         # stage 3: grid-aligned interval re-split (parser.py:209-299) of each
         # session's times; each kept span explodes to a flow of native slices.
@@ -165,8 +175,8 @@ class FeaturePlan:
             if self.empty_input:
                 self.sampling_rate = 1.0
             else:
-                self.sampling_rate = positive(
-                    exact_quantile(seqs, _duration(), 0.3, approx=self.approx_quantiles),
+                self.sampling_rate = _divisor(
+                    seqs, exact_quantile(seqs, _duration(), 0.3, approx=self.approx_quantiles),
                     "the SAMP sampling rate (the 0.3 quantile of flow durations)")
             feats = seqs.withColumn(
                 "features", kernels.samp_udf(base, self.sampling_rate)("times", "tokens")

@@ -49,11 +49,3 @@ def drop_null_ts(df: DataFrame, ts_col: str, token_col: str | None = None) -> Da
         if dict(df.dtypes)[c] in ("double", "float"):
             keep &= ~F.isnan(c)
     return df.filter(keep)
-
-
-def positive(value: float, what: str) -> float:
-    """``value`` as a float; ValueError unless it is positive and finite
-    (the reference divides by the split interval and the SAMP rate)."""
-    if not 0 < float(value) < float("inf"):
-        raise ValueError(f"{what} must be positive and finite, got {value!r}")
-    return float(value)

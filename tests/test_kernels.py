@@ -239,6 +239,31 @@ def test_samp_batch_all_fallback():
             np.asarray(g), netml_ref.get_SAMP(t, s, "SAMP_SIZE", 1.0), rtol=0, atol=0)
 
 
+@pytest.mark.parametrize("rate", [0.0, np.inf])
+def test_samp_batch_zero_or_inf_rate(rate):
+    """The loop divides by the rate only at a packet more than the rate
+    past its row's first. At a rate of inf, or of 0 over rows whose packets
+    share one ts, each row is one bucket, as in the loop; at a rate of 0 a
+    row with a later packet raises ValueError, where the loop would
+    divide by zero."""
+    times = [np.array([3.0, 3.0, 3.0]), np.array([5.0]), np.array([]), np.array([2.0, 2.0])]
+    if rate == np.inf:
+        times.append(np.array([0.0, 1.0, 700.0]))
+    sizes = [np.arange(1, len(t) + 1) for t in times]
+    ta = _list_array([t.tolist() for t in times], pa.float64())
+    sa = _list_array([s.tolist() for s in sizes], pa.int32())
+    for feat in ("SAMP_NUM", "SAMP_SIZE"):
+        got = kernels._samp_batch(ta, sa, feat, rate).to_pylist()
+        for g, t, s in zip(got, times, sizes):
+            exp = netml_ref.get_SAMP(t, s, feat, rate) if len(t) else np.array([])
+            np.testing.assert_array_equal(np.asarray(g, np.float64), exp)
+    if rate == 0:
+        ta = _list_array([[3.0, 3.0], [1.0, 2.0, 4.0]], pa.float64())
+        sa = _list_array([[1, 2], [1, 2, 3]], pa.int32())
+        with pytest.raises(ValueError, match="sampling rate"):
+            kernels._samp_batch(ta, sa, "SAMP_NUM", rate)
+
+
 def _iat_rows():
     """Row values for the IAT batch tests: random lengths, then the empty
     and one-value edge rows."""

@@ -154,13 +154,15 @@ def test_featureplan_empty_input_is_a_value(spark, token_events_df):
     assert not plan.empty_input and out.count() > 0
 
 
-def _zero_duration_events(spark, n_zero, n_spread):
+_EVENTS = "doc_id string, ts double, token int, seq long"
+
+
+def _zero_duration_rows(n_zero, n_spread):
     """Three-packet entities: ``n_zero`` whose packets share one ts (0 s
     sessions and flows), then ``n_spread`` that last 2 s."""
     rows = [(f"z{k}", 100.0 * k, 7, i) for k in range(n_zero) for i in range(3)]
-    rows += [(f"w{k}", 5000.0 + 100.0 * k + i, 7, i) for k in range(n_spread)
-             for i in range(3)]
-    return spark.createDataFrame(rows, "doc_id string, ts double, token int, seq long")
+    return rows + [(f"w{k}", 5000.0 + 100.0 * k + i, 7, i) for k in range(n_spread)
+                   for i in range(3)]
 
 
 def test_featureplan_release_unpersists_cache(spark, token_events_df):
@@ -187,8 +189,8 @@ def test_featureplan_release_unpersists_cache(spark, token_events_df):
     assert n_cached() == base
     plan.release()  # idempotent
     with pytest.raises(ValueError):
-        plan.extract(_zero_duration_events(spark, 19, 1), ("doc_id",), "ts", "token",
-                     ("seq",), carry_cols=())
+        plan.extract(spark.createDataFrame(_zero_duration_rows(19, 1), _EVENTS),
+                     ("doc_id",), "ts", "token", ("seq",), carry_cols=())
     assert n_cached() == base + 1
     plan.release()
     assert n_cached() == base
@@ -248,9 +250,9 @@ def test_featureplan_drops_null_ts_rows(spark, interval, ts_type):
     assert got == want
 
 
-def _oracle_keyed(rows, feat_type):
+def _oracle_keyed(rows, feat_type, interval=10.0):
     """The reference lifecycle over (entity, ts, token, seq) rows at a 10 s
-    interval, keyed by (entity, first ts). The rows extract drops (null or
+    (or the given) interval, keyed by (entity, first ts). The rows extract drops (null or
     NaN ts, null token) never reach it; a None entity is a key like any
     other."""
     rows = [r for r in rows if r[1] is not None and not np.isnan(r[1]) and r[2] is not None]
@@ -259,7 +261,7 @@ def _oracle_keyed(rows, feat_type):
         flows.setdefault(e, []).append((t, tok))
     flows = [(e, np.array([t for t, _ in v]), np.array([k for _, k in v]))
              for e, v in flows.items()]
-    subs = netml_ref.flows2subflows(netml_ref.pcap2flows(flows, 2, 600.0), 10.0, 2)
+    subs = netml_ref.flows2subflows(netml_ref.pcap2flows(flows, 2, 600.0), interval, 2)
     if not subs:
         return {}
     X = netml_ref.flow2features(subs, feat_type.replace("FFT-", ""), 0.9,
@@ -383,19 +385,67 @@ def test_featureplan_dup_ts_across_a_split_follows_seq(spark):
 
 @pytest.mark.parametrize("feat_type", ["IAT", "SAMP_NUM"])
 def test_featureplan_zero_quantile_raises(spark, feat_type):
-    """A derived split interval or SAMP rate of 0 would divide by zero in
-    the reference (netml_ref.py:103, :205): extract raises ValueError
-    naming the quantile. IAT: 19 of 20 sessions last 0 s, so the
-    q_interval=0.9 duration quantile is 0; SAMP_NUM at a 10 s interval:
-    4 of 10 flows last 0 s, so the 0.3 flow-duration quantile is 0."""
+    """A derived split interval or SAMP rate of 0, with a session or flow
+    that lasts longer than 0 s, would divide by zero in the reference
+    (netml_ref.py:103, :205): extract raises ValueError naming the
+    quantile. IAT: 19 of 20 sessions last 0 s, so the q_interval=0.9
+    duration quantile is 0; SAMP_NUM at a 10 s interval: 4 of 10 flows
+    last 0 s, so the 0.3 flow-duration quantile is 0."""
     if feat_type == "IAT":
-        df = _zero_duration_events(spark, 19, 1)
+        df = spark.createDataFrame(_zero_duration_rows(19, 1), _EVENTS)
         plan, match = FeaturePlan(feat_type="IAT"), "q_interval=0.9 quantile"
     else:
-        df = _zero_duration_events(spark, 4, 6)
+        df = spark.createDataFrame(_zero_duration_rows(4, 6), _EVENTS)
         plan, match = FeaturePlan(feat_type="SAMP_NUM", interval=10.0), "SAMP sampling rate"
     try:
         with pytest.raises(ValueError, match=match):
             plan.extract(df, ("doc_id",), "ts", "token", ("seq",), carry_cols=())
     finally:
         plan.release()
+
+
+@pytest.mark.parametrize("feat_type,interval,rows,scalars", [
+    ("IAT", 0.0, _zero_duration_rows(5, 0), (0.0, None)),
+    ("SAMP_NUM", 10.0, _zero_duration_rows(5, 0), (10.0, 0.0)),
+    ("IAT", np.inf, [("w", 20.0 * i, 7, i) for i in range(5)], (np.inf, None)),
+], ids=["derived_interval_0", "samp_rate_0", "interval_inf"])
+def test_featureplan_zero_or_inf_divisor_matches_the_oracle(spark, feat_type, interval, rows,
+                                                            scalars):
+    """The reference divides by the split interval and the SAMP rate only
+    past a gap wider than them. Where every session lasts 0 s, the derived
+    interval (or, at a 10 s interval, the SAMP rate) is 0 and splits
+    nothing; an interval of inf never splits. Each output equals the
+    reference lifecycle's."""
+    plan = FeaturePlan(feat_type=feat_type, interval=interval)
+    out = plan.extract(spark.createDataFrame(rows, _EVENTS), ("doc_id",), "ts", "token",
+                       ("seq",), carry_cols=())
+    try:
+        got = out.select("doc_id", "times", "features").collect()
+    finally:
+        plan.release()
+    assert (plan.split_interval, plan.sampling_rate) == scalars
+    want = _oracle_keyed(rows, feat_type, interval=interval)
+    assert len(got) == len(want) > 0
+    for r in got:
+        np.testing.assert_array_equal(r.features, want[(r.doc_id, r.times[0])])
+
+
+def test_featureplan_carry_is_per_session(spark):
+    """Carry columns are taken once per session (``first()`` over its
+    events), before the interval split. A column constant per session,
+    like the capture source, reaches each of its flows exactly; one that
+    varies within a session gives all of its flows one of its values."""
+    rows = [("a", float(t), 40, i, "s1", f"e{i % 3}")
+            for i, t in enumerate([0, 1, 2, 3, 31, 32, 33, 61, 62])]
+    rows += [("b", 1000.0 + i, 50, i, "s2", "x") for i in range(3)]
+    df = spark.createDataFrame(rows, f"{_EVENTS}, source string, kind string")
+    plan = FeaturePlan(feat_type="SIZE", interval=10.0)
+    out = plan.extract(df, ("doc_id",), "ts", "token", ("seq",), carry_cols=("source", "kind"))
+    try:
+        got = out.select("doc_id", "subflow_id", "source", "kind").collect()
+    finally:
+        plan.release()
+    assert sorted((r.doc_id, r.subflow_id, r.source) for r in got) == [
+        ("a", 0, "s1"), ("a", 1, "s1"), ("b", 0, "s2")]
+    kinds = {r.kind for r in got if r.doc_id == "a"}
+    assert len(kinds) == 1 and kinds <= {"e0", "e1", "e2"}

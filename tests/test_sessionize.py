@@ -6,6 +6,7 @@ discard, grid-aligned interval restart (SURVEY.md §5.2 item 3).
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from netml_spark import datagen
 from netml_spark.operators import sessionize, sessionize_timeout, subflows_interval
@@ -378,3 +379,21 @@ def test_subflow_spans_batch_pyarrow():
     assert _subflow_spans_batch(one, interval, thres).to_pylist() == [want(rows[-1])]
     no_values = pa.array([[], None], pa.list_(pa.float64()))
     assert _subflow_spans_batch(no_values, interval, thres).to_pylist() == [[], None]
+
+
+def test_subflow_spans_batch_zero_or_inf_interval():
+    """The reference divides by the split interval only at a gap wider
+    than it: at an interval of inf, or of 0 over rows whose packets share
+    one ts, nothing splits; at 0 a row with a positive gap raises
+    ValueError, where the reference would divide by zero."""
+    import pyarrow as pa
+
+    from netml_spark.operators.sessionize import _subflow_spans_batch
+
+    whole = [{"sub": 0, "start": 1, "len": 3}]
+    flat = pa.array([[4.0, 4.0, 4.0], [], [9.0]], pa.list_(pa.float64()))
+    assert _subflow_spans_batch(flat, 0.0, 2).to_pylist() == [whole, [], []]
+    spread = pa.array([[0.0, 50.0, 900.0]], pa.list_(pa.float64()))
+    assert _subflow_spans_batch(spread, np.inf, 2).to_pylist() == [whole]
+    with pytest.raises(ValueError, match="split interval"):
+        _subflow_spans_batch(spread, 0.0, 2)

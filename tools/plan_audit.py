@@ -36,6 +36,93 @@ def plan_str(df) -> str:
     )
 
 
+def featureplan_properties(ev, results) -> None:
+    """Properties 7 and 8 over the events frame ``ev``, into ``results``."""
+    # 7. FeaturePlan STATS computes the 12-vector from the CACHED flows
+    # with the kernels.stats Arrow UDF: the whole plan reads the events
+    # parquet through ONE scan node (inside the InMemoryRelation), has no
+    # Join and no Generate above the cache (exploding the cache and joining
+    # an aggregate back re-reads what the arrays hold, and an inner join
+    # drops null-key flows), and above the cache runs ONE ArrowEvalPython
+    # node holding the stats call over times/tokens. A re-derivation from
+    # the subflow rows would show a SECOND distinct scan id. Below the
+    # cache the plan holds exactly ONE Generate, the explode of the
+    # subflow_spans call that splits the sessions.
+    from netml_spark.pipeline import FeaturePlan
+
+    fp = FeaturePlan(feat_type="STATS", interval=300.0)
+    feats = fp.extract(ev, ("user_id",), "ts", "value", ("event_id",),
+                       carry_cols=())
+    p = plan_str(feats)
+    scan_ids = set(re.findall(r"Scan parquet\s+\((\d+)\)", p))
+    above_cache = p.split("InMemoryTableScan")[0]
+    eval_ids = re.findall(r"ArrowEvalPython \((\d+)\)", above_cache)
+
+    def udf_args(node_id):
+        return re.findall(rf"\({node_id}\) ArrowEvalPython\n.*\nArguments: \[(.*)\], \[", p)
+
+    stats_args = [a for i in eval_ids for a in udf_args(i)]
+    # the Generate tree lines with the node under each, and the one
+    # Generate's explode input: the result of a subflow_spans(times) call
+    gens = re.findall(r"Generate \((\d+)\)\n\s*\+- ArrowEvalPython \((\d+)\)", p)
+    n_gens = len(re.findall(r"\(\d+\) Generate", p))
+    g, e = gens[0] if gens else ("", "")
+    exploded = re.search(rf"\({g}\) Generate.*\nInput.*\nArguments: explode\((\w+#\d+)\)", p)
+    span = re.search(rf"\({e}\) ArrowEvalPython\n.*\nArguments: "
+                     r"\[subflow_spans\(times#\d+\)#\d+\], \[(\w+#\d+)\]", p)
+    results["featureplan_stats_no_recompute"] = (
+        len(scan_ids) == 1
+        and "InMemoryTableScan" in p
+        and "Join" not in above_cache
+        and "Generate" not in above_cache
+        and len(stats_args) == len(eval_ids) == 1
+        and re.fullmatch(r"stats\(times#\d+, tokens#\d+\)#\d+", stats_args[0]) is not None
+        and n_gens == len(gens) == 1
+        and exploded is not None and span is not None
+        and exploded.group(1) == span.group(1)
+    )
+    if not results["featureplan_stats_no_recompute"]:
+        print(f"  (distinct parquet scan ids: {sorted(scan_ids)}, ArrowEvalPython "
+              f"above the cache: {len(eval_ids)}, UDF calls: {stats_args}, "
+              f"Join above the cache: {'Join' in above_cache}, Generate nodes: "
+              f"{n_gens}, explode over subflow_spans: {bool(exploded and span)})")
+    fp.release()
+
+    # 8. FeaturePlan with a derived split interval: under the flows cache
+    # the chain plans ONE Exchange (sessionize's; the per-session grouping
+    # and the split ride it) and no row_number Window (the event-level
+    # subflows chain is off the product path), and the stage-2 quantile's
+    # input projects the durations straight from the session cache.
+    import netml_spark.pipeline as pipeline
+
+    quantile_inputs = []
+    exact_quantile = pipeline.exact_quantile
+
+    def spy(df, col, *args, **kwargs):
+        quantile_inputs.append(plan_str(df.select(col)))
+        return exact_quantile(df, col, *args, **kwargs)
+
+    pipeline.exact_quantile = spy
+    try:
+        fp = FeaturePlan(feat_type="IAT")
+        p = plan_str(fp.extract(ev, ("user_id",), "ts", "value", ("event_id",),
+                                carry_cols=()))
+    finally:
+        pipeline.exact_quantile = exact_quantile
+    n_exchanges = len(re.findall(r"\(\d+\) Exchange", p))
+    stage2 = quantile_inputs[0].split("\n\n")[0] if quantile_inputs else ""
+    results["featureplan_one_exchange"] = (
+        n_exchanges == 1
+        and "row_number" not in p
+        and len(quantile_inputs) == 1
+        and re.search(r"Project \(\d+\)\n\+- InMemoryTableScan", stage2) is not None
+    )
+    if not results["featureplan_one_exchange"]:
+        print(f"  (exchanges: {n_exchanges}, row_number: {'row_number' in p}, "
+              f"stage-2 input plan:\n{stage2})")
+    fp.release()
+
+
 def main():
     from netml_spark.operators import sessionize_timeout
     from netml_spark.operators.asof import asof_join
@@ -250,93 +337,15 @@ def main():
                        str(10 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS plan_audit_sigs")
 
-    # 7. FeaturePlan STATS computes the 12-vector from the CACHED flows
-    # with the kernels.stats Arrow UDF: the whole plan reads the events
-    # parquet through ONE scan node (inside the InMemoryRelation), has no
-    # Join and no Generate above the cache (exploding the cache and joining
-    # an aggregate back re-reads what the arrays hold, and an inner join
-    # drops null-key flows), and above the cache runs ONE ArrowEvalPython
-    # node holding the stats call over times/tokens. A re-derivation from
-    # the subflow rows would show a SECOND distinct scan id. Below the
-    # cache the plan holds exactly ONE Generate, the explode of the
-    # subflow_spans call that splits the sessions. AQE is off for 7 and 8:
-    # the audited shape is the static plan, and an executed adaptive plan
-    # prints its cached stages twice (final and initial plan).
-    from netml_spark.pipeline import FeaturePlan
-
+    # AQE is off for 7 and 8: the audited shape is the static plan, and an
+    # executed adaptive plan prints its cached stages twice (final and
+    # initial plan). The session's own setting comes back afterwards.
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    fp = FeaturePlan(feat_type="STATS", interval=300.0)
-    feats = fp.extract(ev, ("user_id",), "ts", "value", ("event_id",),
-                       carry_cols=())
-    p = plan_str(feats)
-    scan_ids = set(re.findall(r"Scan parquet\s+\((\d+)\)", p))
-    above_cache = p.split("InMemoryTableScan")[0]
-    eval_ids = re.findall(r"ArrowEvalPython \((\d+)\)", above_cache)
-
-    def udf_args(node_id):
-        return re.findall(rf"\({node_id}\) ArrowEvalPython\n.*\nArguments: \[(.*)\], \[", p)
-
-    stats_args = [a for i in eval_ids for a in udf_args(i)]
-    # the Generate tree lines with the node under each, and the one
-    # Generate's explode input: the result of a subflow_spans(times) call
-    gens = re.findall(r"Generate \((\d+)\)\n\s*\+- ArrowEvalPython \((\d+)\)", p)
-    n_gens = len(re.findall(r"\(\d+\) Generate", p))
-    g, e = gens[0] if gens else ("", "")
-    exploded = re.search(rf"\({g}\) Generate.*\nInput.*\nArguments: explode\((\w+#\d+)\)", p)
-    span = re.search(rf"\({e}\) ArrowEvalPython\n.*\nArguments: "
-                     r"\[subflow_spans\(times#\d+\)#\d+\], \[(\w+#\d+)\]", p)
-    results["featureplan_stats_no_recompute"] = (
-        len(scan_ids) == 1
-        and "InMemoryTableScan" in p
-        and "Join" not in above_cache
-        and "Generate" not in above_cache
-        and len(stats_args) == len(eval_ids) == 1
-        and re.fullmatch(r"stats\(times#\d+, tokens#\d+\)#\d+", stats_args[0]) is not None
-        and n_gens == len(gens) == 1
-        and exploded is not None and span is not None
-        and exploded.group(1) == span.group(1)
-    )
-    if not results["featureplan_stats_no_recompute"]:
-        print(f"  (distinct parquet scan ids: {sorted(scan_ids)}, ArrowEvalPython "
-              f"above the cache: {len(eval_ids)}, UDF calls: {stats_args}, "
-              f"Join above the cache: {'Join' in above_cache}, Generate nodes: "
-              f"{n_gens}, explode over subflow_spans: {bool(exploded and span)})")
-    fp.release()
-
-    # 8. FeaturePlan with a derived split interval: under the flows cache
-    # the chain plans ONE Exchange (sessionize's; the per-session grouping
-    # and the split ride it) and no row_number Window (the event-level
-    # subflows chain is off the product path), and the stage-2 quantile's
-    # input projects the durations straight from the session cache.
-    import netml_spark.pipeline as pipeline
-
-    quantile_inputs = []
-    exact_quantile = pipeline.exact_quantile
-
-    def spy(df, col, *args, **kwargs):
-        quantile_inputs.append(plan_str(df.select(col)))
-        return exact_quantile(df, col, *args, **kwargs)
-
-    pipeline.exact_quantile = spy
     try:
-        fp = FeaturePlan(feat_type="IAT")
-        p = plan_str(fp.extract(ev, ("user_id",), "ts", "value", ("event_id",),
-                                carry_cols=()))
+        featureplan_properties(ev, results)
     finally:
-        pipeline.exact_quantile = exact_quantile
-    n_exchanges = len(re.findall(r"\(\d+\) Exchange", p))
-    stage2 = quantile_inputs[0].split("\n\n")[0] if quantile_inputs else ""
-    results["featureplan_one_exchange"] = (
-        n_exchanges == 1
-        and "row_number" not in p
-        and len(quantile_inputs) == 1
-        and re.search(r"Project \(\d+\)\n\+- InMemoryTableScan", stage2) is not None
-    )
-    if not results["featureplan_one_exchange"]:
-        print(f"  (exchanges: {n_exchanges}, row_number: {'row_number' in p}, "
-              f"stage-2 input plan:\n{stage2})")
-    fp.release()
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
     ok = True
     for name, passed in results.items():
