@@ -7,11 +7,9 @@ hash-aggregate with ``sort_array(collect_list(struct(...)))`` — the sort key
 is (ts, seq) so duplicate timestamps keep their arrival order, matching the
 reference's stable sort (parser.py:151).
 
-Scale note: each group's collect_list is one JVM row and one Arrow row.
-FeaturePlan groups whole timeout sessions, so the bound is the longest
-session: an entity that never idles for the timeout is one row, against
-Spark's 2 GB row limit. On the 4M-row hot80 skew corpus (one 3.2M-packet
-session) an IAT extract's JVM heap peak rose from 2.0 to 3.1 GiB.
+Scale note: a group is one JVM row (Spark's 2 GB limit) and one Arrow row,
+so the longest group bounds it. FeaturePlan groups whole sessions: an entity
+that never idles for the timeout is one row (ROADMAP item 11 measures it).
 """
 
 from __future__ import annotations

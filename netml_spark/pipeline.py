@@ -50,8 +50,8 @@ def _duration():
 
 
 def _divisor(df: DataFrame, value: float, what: str) -> float:
-    """A derived split interval or SAMP rate: a 0 raises ValueError iff a
-    row of ``df`` lasts > 0 s (netml_ref.py:101-103, :200-205 divide)."""
+    """A derived split interval or SAMP rate; ValueError if it is 0 and a
+    row of ``df`` lasts > 0 s, where the reference divides by it."""
     if value == 0 and df.agg(F.max(_duration())).first()[0] > 0:
         raise ValueError(f"{what} is 0, and the reference would divide by it")
     return value
