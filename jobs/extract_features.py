@@ -5,8 +5,13 @@ Usage (cluster):
     spark-submit --driver-memory 48g \
         --py-files dist/netml_spark.zip jobs/extract_features.py \
         --input s3://bucket/token_events --output s3://bucket/features \
-        --feat-type IAT --q-interval 0.9 --entity-cols doc_id \
-        --checkpoint s3://bucket/ckpt --partition-col source
+        --feat-type IAT --q-interval 0.9 --entity-cols doc_id
+
+    # resumable backfill: features land under the checkpoint root, in
+    # s3://bucket/ckpt/features_IAT/source=<v>/ (--output is not written)
+    spark-submit ... jobs/extract_features.py \
+        --input s3://bucket/token_events --output unused \
+        --feat-type IAT --checkpoint s3://bucket/ckpt --partition-col source
 
 NOTE: under spark-submit the JVM starts before session.py's conf applies,
 so spark.driver.memory MUST be passed on the command line (local mode
@@ -14,7 +19,9 @@ shares one heap across all task threads; the 1g default OOMs).
 
 Locally the same file runs under plain ``python`` (it builds its own
 session). With --checkpoint, extraction runs per partition value through
-the CheckpointManifest, so a killed backfill resumes idempotently.
+the CheckpointManifest, so a killed backfill resumes idempotently; each
+partition lands in ``<checkpoint>/features_<TYPE>/<partition-col>=<v>/``
+and ``--output`` (still required) is never written.
 
 Scope of the data-dependent scalars (split interval, dim): the plain path
 treats the whole input as one capture, so they are quantiles over all of
@@ -44,7 +51,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main(argv=None):
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
+    ap.add_argument("--output", required=True,
+                    help="parquet output dir; not written under --checkpoint, "
+                         "whose partitions land under the checkpoint root")
     ap.add_argument("--feat-type", default="IAT",
                     choices=["IAT", "SIZE", "IAT_SIZE", "STATS", "SAMP_NUM",
                              "SAMP_SIZE"])
@@ -58,7 +67,9 @@ def main(argv=None):
     ap.add_argument("--token-col", default="token")
     ap.add_argument("--order-cols", default="seq")
     ap.add_argument("--checkpoint", default=None,
-                    help="manifest root for idempotent per-partition resume")
+                    help="manifest root for idempotent per-partition resume; "
+                         "features land in <checkpoint>/features_<TYPE>/"
+                         "<partition-col>=<v>/ instead of --output")
     ap.add_argument("--partition-col", default="source")
     ap.add_argument("--approx-quantiles", action="store_true",
                     help="percentile_approx for the two-pass scalars (pinned "

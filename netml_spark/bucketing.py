@@ -30,14 +30,14 @@ def write_bucketed(
     bucket_cols: Sequence[str],
     n_buckets: int = 64,
     sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist ``df`` as a bucketed (and optionally per-bucket sorted)
-    table. Sorting by (bucket key, ts) additionally lets window passes
-    start from sorted buckets. Bucket count should match or evenly divide
-    the shuffle parallelism of downstream consumers."""
+    table, replacing any table of that name. Sorting by (bucket key, ts)
+    additionally lets window passes start from sorted buckets. Bucket count
+    should match or evenly divide the shuffle parallelism of downstream
+    consumers."""
     bucket_cols = list(bucket_cols)
-    w = df.write.mode(mode).bucketBy(int(n_buckets), *bucket_cols)
+    w = df.write.mode("overwrite").bucketBy(int(n_buckets), *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.format("parquet").saveAsTable(table)

@@ -26,7 +26,6 @@ def gen_token_events(
     n_docs: int = 300,
     seed: int = 42,
     base_ts: float = 1_700_000_000.0,
-    with_header_cols: bool = True,
 ) -> pd.DataFrame:
     """Event-level fixture: one row per token occurrence.
 
@@ -81,26 +80,7 @@ def gen_token_events(
     df["token"] = df["token"].astype(np.int32)
     df["proto"] = df["proto"].astype(np.int32)
     df["ttl"] = df["ttl"].astype(np.int32)
-    if not with_header_cols:
-        df = df.drop(columns=["ttl", "tcp_flags"])
     return df
-
-
-def events_to_sequences(events: pd.DataFrame) -> pd.DataFrame:
-    """Collapse token_events to the input_hint shape
-    (doc_id, tokens:array<int32>, n_tok:int32, source) + ts0/times sidecars."""
-    events = events.sort_values(["doc_id", "ts", "seq"], kind="stable")
-    g = events.groupby("doc_id", sort=True)
-    out = pd.DataFrame(
-        {
-            "doc_id": [k for k, _ in g],
-            "tokens": [v["token"].to_numpy(dtype=np.int32) for _, v in g],
-            "n_tok": np.asarray([len(v) for _, v in g], dtype=np.int32),
-            "source": [v["source"].iloc[0] for _, v in g],
-            "times": [v["ts"].to_numpy(dtype=np.float64) for _, v in g],
-        }
-    )
-    return out
 
 
 def oracle_flows(events: pd.DataFrame):

@@ -32,10 +32,9 @@ Design:
   fingerprinting off must not redo a completed backfill); if the input
   for a partition changed since the checkpoint, it is recomputed, never
   silently skipped;
-- the checksum is an order-insensitive xor-fold of per-row xxhash64 over
-  the output columns, computed as 64 per-bit parity aggregates
-  (sum(bit) % 2 per bit position) — O(1) state per partition regardless
-  of row count (the naive collect_list fold would buffer every row hash);
+- the checksum is an order-insensitive ``bit_xor`` of per-row xxhash64
+  over the output columns (0 for an empty partition) — O(1) state per
+  partition regardless of row count;
 - partitions run ``MAX_PARALLEL`` at a time (Spark schedules jobs from
   concurrent driver threads fairly; each partition is an independent job,
   so a 20-source backfill overlaps scan/shuffle/write across sources).
@@ -46,7 +45,6 @@ from __future__ import annotations
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
-from functools import reduce
 from threading import Lock
 from typing import Callable, Sequence
 
@@ -65,20 +63,6 @@ def partition_name(pv) -> str:
     return NULL_PARTITION if pv is None else str(pv)
 
 
-def xor_checksum(h) -> F.Column:
-    """Order-insensitive xor aggregate of a long column, as 64 per-bit
-    parity sums: bit b of the result = sum over rows of bit b, mod 2.
-    Distributed (hash-agg partials), no per-row state on the driver."""
-    terms = [
-        F.shiftleft(
-            (F.sum(F.shiftrightunsigned(h, b).bitwiseAND(F.lit(1))) % 2).cast("long"),
-            b,
-        )
-        for b in range(64)
-    ]
-    return F.coalesce(reduce(lambda a, b: a.bitwiseOR(b), terms), F.lit(0))
-
-
 def partition_metrics(cols: Sequence[str]) -> list[F.Column]:
     """The ``row_count`` and ``checksum`` aggregates over ``cols``:
     checksum = xor-fold of xxhash64 over the (stringified) columns —
@@ -86,7 +70,8 @@ def partition_metrics(cols: Sequence[str]) -> list[F.Column]:
     resume comparisons. ``run_stage`` observes them on each partition's
     write; ``df.agg(*partition_metrics(df.columns))`` computes them alone."""
     h = F.xxhash64(*[F.col(c).cast("string") for c in cols])
-    return [F.count(F.lit(1)).alias("row_count"), xor_checksum(h).alias("checksum")]
+    return [F.count(F.lit(1)).alias("row_count"),
+            F.coalesce(F.bit_xor(h), F.lit(0)).alias("checksum")]
 
 
 class CheckpointManifest:

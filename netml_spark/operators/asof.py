@@ -5,18 +5,12 @@ temporal leakage (reference analogue: the exact-key label probe,
 parser.py:909-911, and the "state as of packet t" semantics of its
 sequential loops).
 
-Two physical strategies:
-
-- ``asof_join``  (sort-merge): union-tag both sides, ONE hash partition by
-  entity, one ordered window pass with ``last(ignorenulls)`` — no join
-  operator at all, so no skew-join risk and no N×M blowup; this is the
-  100 TB path. Right-side rows sort *before* left rows at equal timestamps,
-  so a feature stamped at exactly t is visible at t (inclusive as-of,
-  matching pandas.merge_asof allow_exact_matches=True and DuckDB ASOF).
-
-- ``asof_join_broadcast``: when the right side is small (a dimension of
-  feature snapshots), collect it per entity into a sorted array, broadcast,
-  and probe with native array expressions — zero shuffle on the left side.
+``asof_join`` (sort-merge): union-tag both sides, ONE hash partition by
+entity, one ordered window pass with ``last(ignorenulls)`` — no join
+operator at all, so no skew-join risk and no N×M blowup; this is the
+100 TB path. Right-side rows sort *before* left rows at equal timestamps,
+so a feature stamped at exactly t is visible at t (inclusive as-of,
+matching pandas.merge_asof allow_exact_matches=True and DuckDB ASOF).
 
 Leakage property (pinned by tests): output at (entity, t) never depends on
 right rows with ts > t.
@@ -40,11 +34,10 @@ def asof_join(
     right_ts: str | None = None,
     value_cols: Sequence[str] | None = None,
     tolerance: float | None = None,
-    how: str = "left",
 ) -> DataFrame:
     """For each left row, attach the most recent right-side ``value_cols``
     with right.ts <= left.ts (per entity ``on``), optionally within
-    ``tolerance`` seconds. ``how='inner'`` drops left rows with no match.
+    ``tolerance`` seconds; a left row with no match keeps null values.
     """
     on = list(on)
     right_ts = right_ts or left_ts
@@ -113,52 +106,11 @@ def asof_join(
     if tolerance is not None:
         fresh = (ts_d - m["ts"]) <= F.lit(float(tolerance))
         m = F.when(m.isNotNull() & fresh, m)
-    out = out.select(
+    return out.select(
         *[c for c in out.columns if c not in ("_m", "_side", "_ts")],
         m["ts"].alias("asof_ts"),
         *[m[o].alias(o) for o in val_out],
     )
-    if how == "inner":
-        out = out.filter(F.col("asof_ts").isNotNull())
-    return out
-
-
-def asof_join_broadcast(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    left_ts: str = "ts",
-    right_ts: str | None = None,
-    value_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """Broadcast variant: right side collected to sorted per-entity arrays,
-    probed with native array expressions (filter + element_at -1). Use when
-    the right side fits the broadcast threshold (feature-snapshot dims)."""
-    on = list(on)
-    right_ts = right_ts or left_ts
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in on and c != right_ts]
-    value_cols = list(value_cols)
-
-    packed = right.groupBy(*on).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(ts_seconds(right, right_ts).alias("ts"), *value_cols)
-            )
-        ).alias("_snaps")
-    )
-    lts = ts_seconds(left, left_ts)
-    joined = left.join(F.broadcast(packed), on=on, how="left")
-    # try_element_at: rows with no match (<= ts) get NULL, not an error
-    match = F.try_element_at(
-        F.filter(F.col("_snaps"), lambda s: s["ts"] <= lts), F.lit(-1)
-    )
-    out = joined.select(
-        *left.columns,
-        match["ts"].alias("asof_ts"),
-        *[match[c].alias(c if c not in left.columns else f"{c}_right") for c in value_cols],
-    )
-    return out
 
 
 def backfill(

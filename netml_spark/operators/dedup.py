@@ -26,9 +26,9 @@ so every signature, bucket, and pair is reproducible in ANSI SQL — the
 DuckDB gate checks these operators end-to-end, not just row counts.
 
 Scale notes: every pair-producing operator buckets FIRST (band hash / bit
-band / hyperplane bucket) so the join key is the bucket, never a cross
-join; skewed buckets (stop-shingle buckets) are pruned by frequency cap
-before the self-join — the standard guard against quadratic blowup.
+band / hyperplane bucket / shingle) so the join key is the bucket, never
+a cross join. No bucket is pruned, so the pairs stay exact: a shingle
+shared by d docs joins d^2 rows.
 """
 
 from __future__ import annotations
@@ -50,13 +50,11 @@ def exact_dedup(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    normalize: bool = True,
 ) -> DataFrame:
-    """Group rows by content digest; emit one row per distinct content with
-    the winning (minimum) id and the duplicate count."""
-    t = F.col(text_col)
-    if normalize:
-        t = F.lower(F.regexp_replace(F.trim(t), r"\s+", " "))
+    """Group rows by the digest of their whitespace- and case-normalized
+    content; emit one row per distinct content with the winning (minimum)
+    id and the duplicate count."""
+    t = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
     return (
         df.withColumn("_digest", F.md5(t))
         .groupBy("_digest")
@@ -108,19 +106,12 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """Jaccard-similar pairs via shingle-join:
     explode distinct shingles -> self-join on shingle -> per-pair
     intersection count -> jaccard = inter / (|A| + |B| - inter).
-    Returns (id_a, id_b, jaccard) with id_a < id_b.
-
-    EXACT when ``max_shingle_freq`` is None (the default — what the DuckDB
-    oracle checks). Setting it drops shingles shared by more than that many
-    docs before the self-join (stop-shingle skew guard for web-scale
-    corpora): jaccard is then UNDERestimated for pairs whose overlap
-    includes pruned shingles, because na/nb keep the full shingle counts —
-    an explicit recall/precision trade, opt in only at scale."""
+    Returns (id_a, id_b, jaccard) with id_a < id_b, exact (the DuckDB
+    oracle checks it)."""
     # materialize the shingle array ONCE per row (size + explode read the
     # same column; inlining word_shingles twice doubled the expression cost)
     sh = df.select(
@@ -130,9 +121,6 @@ def ngram_jaccard_pairs(
         F.size("_sh").alias("n_sh"),
         F.explode("_sh").alias("shingle"),
     )
-    if max_shingle_freq is not None:
-        freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("f"))
-        sh = sh.join(F.broadcast(freq.filter(F.col("f") <= max_shingle_freq)), "shingle").drop("f")
     a = sh.select("shingle", F.col("id").alias("id_a"), F.col("n_sh").alias("na"))
     b = sh.select("shingle", F.col("id").alias("id_b"), F.col("n_sh").alias("nb"))
     pairs = (

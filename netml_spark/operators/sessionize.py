@@ -54,9 +54,8 @@ def sessionize(
     ts_col: str = "ts",
     gap: float = 600.0,
     order_cols: Sequence[str] = (),
-    session_col: str = "session_id",
 ) -> DataFrame:
-    """Assign ``session_col``: cumulative count of gaps > ``gap`` seconds.
+    """Assign ``session_id``: cumulative count of gaps > ``gap`` seconds.
 
     ``ts_col`` may be double epoch-seconds or timestamp (cast internally).
     Clean semantics (no trailing discard): the streaming
@@ -66,7 +65,7 @@ def sessionize(
     w = _entity_window(entity_cols, ts_col, order_cols)
     gap_expr = ts_d - F.lag(ts_d).over(w)
     brk = F.when(gap_expr > F.lit(float(gap)), F.lit(1)).otherwise(F.lit(0))
-    return df.withColumn(session_col, F.sum(brk).over(w).cast("int"))
+    return df.withColumn("session_id", F.sum(brk).over(w).cast("int"))
 
 
 def sessionize_timeout(
@@ -76,10 +75,10 @@ def sessionize_timeout(
     timeout: float = 600.0,
     flow_pkts_thres: int = 2,
     order_cols: Sequence[str] = (),
-    session_col: str = "session_id",
     defer_seg_filter: bool = False,
 ) -> DataFrame:
-    """Reference-faithful timeout sessionization (parser.py:80-206).
+    """Reference-faithful timeout sessionization (parser.py:80-206); adds
+    ``session_id``.
 
     Semantics transcribed (see oracle netml_ref.pcap2flows):
       1. whole entities with < max(2, thres) rows dropped (parser.py:146)
@@ -123,21 +122,21 @@ def sessionize_timeout(
     if need_entity_filter:
         out = out.withColumn("_n_entity", F.count(F.lit(1)).over(w_all))
     out = (
-        out.withColumn(session_col, F.sum("_brk").over(w).cast("int"))
+        out.withColumn("session_id", F.sum("_brk").over(w).cast("int"))
         .withColumn("_max_sid", F.sum("_brk").over(w_all))
     )
     if need_entity_filter:
         out = out.filter(F.col("_n_entity") >= 2).drop("_n_entity")
     out = (
         # trailing-segment discard iff any split occurred
-        out.filter((F.col("_max_sid") == 0) | (F.col(session_col) < F.col("_max_sid")))
+        out.filter((F.col("_max_sid") == 0) | (F.col("session_id") < F.col("_max_sid")))
         .drop("_brk", "_max_sid")
     )
     if not defer_seg_filter:
         out = (
             out.withColumn(
                 "_n_seg",
-                F.count(F.lit(1)).over(Window.partitionBy(*entity_cols, session_col)),
+                F.count(F.lit(1)).over(Window.partitionBy(*entity_cols, "session_id")),
             )
             .filter(F.col("_n_seg") >= flow_pkts_thres)
             .drop("_n_seg")
@@ -181,10 +180,10 @@ def subflows_interval(
     ts_col: str = "ts",
     flow_pkts_thres: int = 2,
     order_cols: Sequence[str] = ("seq",),
-    subflow_col: str = "subflow_id",
     assume_partitioned: bool = False,
 ) -> DataFrame:
-    """Grid-aligned interval re-split (reference parser.py:209-299).
+    """Grid-aligned interval re-split (reference parser.py:209-299); adds
+    ``subflow_id``.
 
     Quirks preserved (pinned by tests vs the numpy oracle and the driver's
     recursive-CTE DuckDB gate):
@@ -233,8 +232,8 @@ def subflows_interval(
     label = arrow_udf(label, "int").asNondeterministic()
     df = drop_null_ts(df, ts_col)  # a NaN grid anchor cannot split
     head = F.row_number().over(_entity_window(entity_cols, ts_col, order_cols)) == 1
-    return (df.withColumn(subflow_col, label(head, ts_seconds(df, ts_col)))
-            .filter(F.col(subflow_col) >= 0))
+    return (df.withColumn("subflow_id", label(head, ts_seconds(df, ts_col)))
+            .filter(F.col("subflow_id") >= 0))
 
 
 def _subflow_assign(t: np.ndarray, starts: np.ndarray, interval: float,

@@ -13,8 +13,7 @@
   fully codegen, no plan-time driver action, and bit-reproducible in the
   DuckDB oracle (same left-fold order as list_reduce).
 - Centroids: ``ivf_random_centroids`` (seeded, data-independent, so the
-  DuckDB oracle embeds the same literals) by default; any caller-supplied
-  unit-centroid array works the same way.
+  DuckDB oracle embeds the same literals).
 
 Scale notes: at 10^12 rows the IVF cell id becomes the partition/cluster
 key (write the corpus bucketed by cell); probing touches only matching
@@ -82,19 +81,14 @@ def ivf_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
-    centroids: np.ndarray | None = None,
     dim: int = 64,
     seed: int = 42,
 ) -> DataFrame:
     """IVF-partitioned ANN: assign corpus to nearest centroid cell (first
     argmax wins ties), probe the n_probe nearest cells per query
     (dot-descending, cell-id tie-break), exact cosine re-rank within the
-    candidates. ``centroids`` defaults to seeded random unit centroids
-    (``ivf_random_centroids``); pass an ``(n_cells, dim)`` array to use
-    other cells."""
-    if centroids is None:
-        centroids = ivf_random_centroids(n_cells, dim, seed)
-    n_cells = len(centroids)
+    candidates. The cells are ``ivf_random_centroids(n_cells, dim, seed)``."""
+    centroids = ivf_random_centroids(n_cells, dim, seed)
     n_probe = min(n_probe, n_cells)
 
     dots = _cell_dots(vec_col, centroids)

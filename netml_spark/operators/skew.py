@@ -161,11 +161,11 @@ def bounded_sessionize(
     gap: float,
     bucket_width: float,
     order_cols: Sequence[str] = (),
-    session_col: str = "session_id",
 ) -> DataFrame:
     """Chunked sessionization for entities too large for one task's sort:
     ``sessionize`` over (entity, time_bucket), so each chunk sessionizes
-    independently, and the session id is ``"<bucket>_<id in bucket>"``.
+    independently, and the session id is ``"<bucket>_<id in bucket>"``
+    (replacing an input ``session_id``, as ``sessionize`` does).
     Rows are never duplicated or lost; the ONE documented approximation
     is that a session spanning a bucket boundary is split at it (the gap
     test restarts per bucket). Choose
@@ -176,8 +176,8 @@ def bounded_sessionize(
     if bucket_width <= 2 * gap:
         raise ValueError("bucket_width must exceed 2x gap")
     sess = sessionize(_with_bucket(df, ts_col, bucket_width),
-                      (*entity_cols, "_bucket"), ts_col, gap, order_cols, "_sid")
+                      (*entity_cols, "_bucket"), ts_col, gap, order_cols)
     return sess.select(
-        *df.columns,
-        F.concat_ws("_", F.col("_bucket"), F.col("_sid")).alias(session_col),
+        *[c for c in df.columns if c != "session_id"],
+        F.concat_ws("_", F.col("_bucket"), F.col("session_id")).alias("session_id"),
     )

@@ -1,11 +1,11 @@
-"""As-of join: parity vs pandas.merge_asof, broadcast-variant equivalence,
-and the zero-temporal-leakage property (SURVEY.md §5.2 item 5)."""
+"""As-of join: parity vs pandas.merge_asof and the zero-temporal-leakage
+property (SURVEY.md §5.2 item 5)."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
-from netml_spark.operators.asof import asof_join, asof_join_broadcast, backfill
+from netml_spark.operators.asof import asof_join, backfill
 
 
 @pytest.fixture(scope="module")
@@ -49,26 +49,6 @@ def test_asof_matches_merge_asof(spark, asof_frames, tolerance):
     exp = _pandas_asof(left, right, tolerance).sort_values("lid").reset_index(drop=True)
     pd.testing.assert_series_equal(
         got["feat"], exp["feat"], check_names=False, check_index=False
-    )
-
-
-def test_asof_broadcast_equivalent(spark, asof_frames):
-    left, right = asof_frames
-    a = asof_join(
-        spark.createDataFrame(left), spark.createDataFrame(right),
-        on=("ent",), value_cols=("feat",),
-    ).toPandas().sort_values("lid")
-    b = asof_join_broadcast(
-        spark.createDataFrame(left), spark.createDataFrame(right),
-        on=("ent",), value_cols=("feat",),
-    ).toPandas().sort_values("lid")
-    pd.testing.assert_series_equal(
-        a["feat"].reset_index(drop=True), b["feat"].reset_index(drop=True),
-        check_names=False,
-    )
-    pd.testing.assert_series_equal(
-        a["asof_ts"].reset_index(drop=True), b["asof_ts"].reset_index(drop=True),
-        check_names=False,
     )
 
 

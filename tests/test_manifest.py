@@ -2,6 +2,7 @@
 
 import os
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -21,6 +22,14 @@ def test_partition_metrics_order_insensitive(spark):
     assert ma.row_count == 3 and ma.checksum == mb.checksum
     c = spark.createDataFrame(pd.DataFrame({"x": [1, 2, 4], "y": ["a", "b", "c"]}))
     assert _metrics(c).checksum != ma.checksum
+    # the value itself: the xor of the rows' xxhash64 over the stringified
+    # columns, so manifests already on disk keep comparing equal
+    d = spark.createDataFrame(pd.DataFrame({"x": range(50), "y": [f"s{i}" for i in range(50)]}))
+    h = d.select(F.xxhash64(*[F.col(c).cast("string") for c in d.columns]).alias("h"))
+    hashes = np.array([r.h for r in h.collect()], dtype=np.int64)
+    assert _metrics(d).checksum == int(np.bitwise_xor.reduce(hashes))
+    empty = _metrics(d.limit(0))
+    assert empty.row_count == 0 and empty.checksum == 0
 
 
 def test_run_stage_resume(spark, tmp_path):

@@ -79,6 +79,13 @@ def test_bounded_sessionize_away_from_boundaries(spark):
     # sessions that straddle a 10k boundary may split; allow only those
     assert (c >= p).all()
     assert (c - p).sum() <= 3  # rare boundary splits at most
+    # an input session_id is replaced, not duplicated
+    again = bounded_sessionize(df.withColumn("session_id", F.lit(7)), ("ent",), "ts",
+                               600.0, 10_000.0).toPandas()
+    assert list(again.columns) == list(chunked.columns)
+    key = ["ent", "ts"]
+    pd.testing.assert_frame_equal(again.sort_values(key, ignore_index=True),
+                                  chunked.sort_values(key, ignore_index=True))
 
 
 def test_bounded_sequence_build_exact(spark):
